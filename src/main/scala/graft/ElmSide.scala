@@ -18,7 +18,7 @@ import org.apache.spark.sql.SparkSession
   * (the oracle SQL string embeds it, and the driver replays that SQL in
   * DuckDB after the query run that wrote the weights) — but NOT shared
   * across JVMs: a fixed machine-global path would let any other run
-  * (Verify on another sf dir, PlanAudit, Bench) clobber weights a
+  * (Verify on another sf dir, PlanAudit, the benchmark) clobber weights a
   * pending DuckDB compare still depends on. Hence one dir per process.
   */
 object ElmSide {

@@ -51,16 +51,15 @@ object Fixtures {
   }
 
   /** The pages table for one sf dir: distinct fetchable seed URLs →
-    * page rows (minus fetch misses). `rep` > 1 scales the population
-    * for benchmarks ([[Synth.seeds]]); `includeFtp` adds the `ftp:`
-    * URLs for S8 crawls (default off — Common-Crawl-style input). */
-  def pages(spark: SparkSession, sfDir: String, rep: Int = 1,
+    * page rows (minus fetch misses). `includeFtp` adds the `ftp:` URLs
+    * for S8 crawls (default off — Common-Crawl-style input). */
+  def pages(spark: SparkSession, sfDir: String,
       includeFtp: Boolean = false): Dataset[PageRow] = {
     import spark.implicits._
     val where =
       if (includeFtp) s"(${Synth.fetchableWhere}) OR ${Synth.ftpWhere}"
       else Synth.fetchableWhere
-    Synth.seeds(spark, sfDir, rep)
+    Synth.seeds(spark, sfDir)
       .where(expr(where))
       .select("url").distinct()
       .as[String]
@@ -68,6 +67,6 @@ object Fixtures {
   }
 
   /** Seeds with seq for one sf dir (engine input). */
-  def seeds(spark: SparkSession, sfDir: String, rep: Int = 1): DataFrame =
-    Synth.seeds(spark, sfDir, rep)
+  def seeds(spark: SparkSession, sfDir: String): DataFrame =
+    Synth.seeds(spark, sfDir)
 }

@@ -82,15 +82,4 @@ object Bloom {
       def bufferEncoder: Encoder[Bloom] = Encoders.javaSerialization[Bloom]
       def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
     }
-
-  /** Variant over `(part, url_hash)` tuples for `groupByKey(_._1)`. */
-  def aggTuple(numBits: Int, numHashes: Int = 5): Aggregator[(Int, Long), Bloom, Array[Byte]] =
-    new Aggregator[(Int, Long), Bloom, Array[Byte]] {
-      def zero: Bloom = Bloom(numBits, numHashes)
-      def reduce(b: Bloom, a: (Int, Long)): Bloom = { b.put(a._2); b }
-      def merge(b1: Bloom, b2: Bloom): Bloom = b1.merge(b2)
-      def finish(r: Bloom): Array[Byte] = r.serialize
-      def bufferEncoder: Encoder[Bloom] = Encoders.javaSerialization[Bloom]
-      def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-    }
 }

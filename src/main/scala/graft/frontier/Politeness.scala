@@ -141,11 +141,6 @@ object Politeness {
       .withColumn("host_rank", (col("__lr") + col("__off")).cast("int"))
       .drop("__chunk", "__lr", "__off", "__oh", "__op", "__oc")
   }
-
-  /** The rows allowed to fetch this wave (relative wave 0). */
-  def eligibleNow(scheduled: DataFrame): DataFrame =
-    scheduled.where(col("rel_wave") === 0)
-      .drop("host_rank", "tokens", "rel_wave")
 }
 
 // (A standalone host-salting utility used to live here. It was never

@@ -1,9 +1,8 @@
 package graft.frontier
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
-/** robots.txt parsing + a broadcast per-host robots cache — the
+/** robots.txt parsing + a distributed per-host rules table — the
   * "token-bucket delay + robots.txt cache broadcast" half of the
   * politeness scheduler the north rule requires.
   *
@@ -18,13 +17,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * when empty. `Crawl-delay` (a de-facto extension) feeds the token
   * bucket ([[Politeness]]).
   *
-  * Scale: the cache is keyed by host — cardinality ~10^7 at the
-  * 10^10-URL design point, i.e. a few hundred MB of compiled rules,
-  * which is broadcastable; hosts are collected once per crawl (not per
-  * wave) and the compiled map is shared by every politeness/deny check.
-  * For frontiers whose host set outgrows the broadcast budget the same
-  * rules table joins by host instead (the [[table]] shape exists for
-  * that path).
+  * Scale: the rules table ([[rulesTable]]) is keyed by host —
+  * cardinality ~10^7 at the 10^10-URL design point. It is built on
+  * executors and joined by host at plan time; AQE broadcasts its build
+  * side only while it fits the broadcast threshold, and past that the
+  * join is a plain shuffled join. No host set is collected to the
+  * driver.
   */
 object Robots {
 
@@ -78,8 +76,6 @@ object Robots {
       bestAllow
     }
   }
-
-  val allowAll: Rules = Rules(Vector.empty, None)
 
   /** Parse a robots.txt for `agent` (case-insensitive product token).
     * Group selection: the most specific matching `User-agent` group wins
@@ -192,27 +188,6 @@ object Robots {
        |User-agent: *
        |Disallow: /private/
        |""".stripMargin
-  }
-
-  /** Build the compiled robots cache for a set of hosts and broadcast
-    * it. `fetch` defaults to the fixture synthesizer; a production
-    * deployment slots an HTTP robots fetcher here. */
-  def broadcastCache(
-      spark: SparkSession,
-      hosts: Seq[String],
-      fetch: String => String = synthTxt,
-      agent: String = "graftbot"): Broadcast[Map[String, Rules]] =
-    spark.sparkContext.broadcast(
-      hosts.iterator.map(h => h -> parse(fetch(h), agent)).toMap)
-
-  /** The same cache as a joinable DataFrame `(host, crawl_delay_ms,
-    * n_rules)` — the non-broadcast path for host sets beyond broadcast
-    * budget, and the politeness-delay source. */
-  def table(spark: SparkSession, cache: Map[String, Rules]): DataFrame = {
-    import spark.implicits._
-    cache.iterator.map { case (h, r) =>
-      (h, r.crawlDelayMs.getOrElse(Politeness.delayMs(h)), r.rules.size)
-    }.toSeq.toDF("host", "crawl_delay_ms", "n_rules")
   }
 
   /** Per-host robots rules as a DISTRIBUTED joinable table

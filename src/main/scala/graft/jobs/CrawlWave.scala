@@ -76,9 +76,6 @@ object CrawlWave {
       agent: String = "graftbot",
       seenFilter: String = "bloom", // "bloom" | "cuckoo"
       cuckooCapacityPerPartition: Int = 1 << 20,
-      // false when the caller already provides pages hash-partitioned by
-      // `url` and cached (avoids a second full copy in executor memory)
-      repartitionPages: Boolean = true,
       // overlap wave k's snapshot flush with wave k+1's compute. SAFE
       // because planned waves are URL-disjoint (the seen anti-join never
       // needs the in-flight delta) and commits stay strictly ordered
@@ -389,8 +386,7 @@ final class CrawlWave(
         pages.select(col("url"), col("warc_ts"), col("html"), col("text_hash"))
       else pages.select(col("url"), col("warc_ts"), col("html"),
         textHashUdf(col("text")).as("text_hash"))
-    if (cfg.repartitionPages) projected.repartition(cfg.partitions, col("url")).cache()
-    else projected
+    projected.repartition(cfg.partitions, col("url")).cache()
   }
 
   // plan state (rebuilt deterministically on resume)

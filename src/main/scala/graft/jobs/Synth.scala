@@ -106,24 +106,8 @@ object Synth {
     }
 
   /** Seeds DataFrame for one sf dir. */
-  def seeds(spark: SparkSession, sfDir: String): DataFrame =
-    seeds(spark, sfDir, 1)
-
-  /** Seeds with deterministic replication for benchmark scale-up
-    * (rep > 1): each `orders` row spawns `rep` synthetic order keys
-    * (`o_orderkey * rep + i`), so the URL population grows `rep`× with
-    * the same distribution shape (same hot hosts, same residue
-    * classes) and zero external data. rep=1 is bit-identical to the
-    * oracle-shared seed space. */
-  def seeds(spark: SparkSession, sfDir: String, rep: Int): DataFrame = {
+  def seeds(spark: SparkSession, sfDir: String): DataFrame = {
     views(spark, sfDir, Seq("orders")) // registered pre-spread (see views)
-    if (rep <= 1) spark.sql(seedsSql)
-    else {
-      spark.sql(
-        s"""SELECT o_orderkey * $rep + r.id AS o_orderkey, o_custkey
-           |FROM orders CROSS JOIN (SELECT explode(sequence(0, ${rep - 1})) AS id) r""".stripMargin)
-        .createOrReplaceTempView("orders_rep")
-      spark.sql(seedsSql.replace("FROM orders", "FROM orders_rep"))
-    }
+    spark.sql(seedsSql)
   }
 }

@@ -106,12 +106,6 @@ object Ann {
     sig
   }
 
-  /** Shared-dialect SQL fragment for one portable plane component:
-    * ±1 from the first hex digit of md5('tag:b:d') — the exact
-    * [[rademacherPlanes]] rule. `b`/`d` are SQL expressions. */
-  def planeSql(tag: String, b: String, d: String): String =
-    s"(CASE WHEN (instr('0123456789abcdef', substr(md5('$tag:' || ($b) || ':' || ($d)), 1, 1)) - 1) % 2 = 1 THEN 1 ELSE -1 END)"
-
   /** Sign-LSH signature of a vector under the shared hyperplanes. */
   def signature(v: Array[Float], planes: Array[Array[Double]]): Int = {
     var sig = 0; var b = 0

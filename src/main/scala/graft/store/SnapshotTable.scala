@@ -352,16 +352,6 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     }.toMap
   }
 
-  /** The metadata-only view groups of `version` (empty for pre-view
-    * manifests; a single-object legacy entry reads as a 1-group list). */
-  def viewsOf(version: Int): Map[String, Seq[ViewRef]] =
-    viewsOfNode(manifestNode(version))
-
-  /** Per-table schema DDL recorded by `commit` (empty for pre-schema
-    * manifests). */
-  def schemasOf(version: Int): Map[String, String] =
-    schemasOfNode(manifestNode(version))
-
   /** The data directories composing `table` at `version`. */
   def tableDirs(version: Int): Map[String, Seq[String]] =
     tableDirsOf(manifestNode(version))

@@ -28,8 +28,4 @@ object Tokenize {
     // python split(' ') (explicit separator) then `if i` filter
     sb.result().split(" ", -1).iterator.filter(_.nonEmpty).map(Py.lowerUni).toVector
   }
-
-  /** `split_into_term` over a title list: one token list per title. */
-  def termsPerDoc(titles: Seq[String]): Vector[Vector[String]] =
-    titles.toVector.map(terms)
 }

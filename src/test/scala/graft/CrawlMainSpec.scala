@@ -1,6 +1,9 @@
 package graft
 
+import graft.SparkTestBase.withTempDir
 import graft.fixtures.Fixtures
+import graft.store.SnapshotTable
+import org.apache.spark.sql.functions.{col, max}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The spark-submit entrypoint ([[CrawlMain.run]]): fresh crawl over
@@ -12,38 +15,64 @@ class CrawlMainSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("fresh run crawls; rerun resumes from the final snapshot") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cmain-").toString
-    Fixtures.pages(spark, dir).toDF.write.parquet(s"$tmp/pages")
-    Fixtures.seeds(spark, dir).write.parquet(s"$tmp/seeds")
-    val args = Array(
-      "--pages", s"$tmp/pages", "--seeds", s"$tmp/seeds",
-      "--store", s"$tmp/store", "--partitions", "4",
-      "--wave-period-ms", "600000")
+    withTempDir("graft-cmain-") { tmp =>
+      Fixtures.pages(spark, dir).toDF.write.parquet(s"$tmp/pages")
+      Fixtures.seeds(spark, dir).write.parquet(s"$tmp/seeds")
+      val args = Array(
+        "--pages", s"$tmp/pages", "--seeds", s"$tmp/seeds",
+        "--store", s"$tmp/store", "--partitions", "4",
+        "--wave-period-ms", "600000")
 
-    val s1 = CrawlMain.run(spark, args)
-    assert(s1.resumedFrom.isEmpty)
-    assert(s1.done > 0 && s1.errors > 0)
-    // every SCHEDULED URL (fetchable, deduped, robots-allowed) ends
-    // done or error — w_crawl_order is the oracle-checked schedule
-    val expected = SparkEntry.queries("w_crawl_order")(spark, dir).count()
-    assert(s1.done + s1.errors == expected)
+      val s1 = CrawlMain.run(spark, args)
+      assert(s1.resumedFrom.isEmpty)
+      assert(s1.done > 0 && s1.errors > 0)
+      // every SCHEDULED URL (fetchable, deduped, robots-allowed) ends
+      // done or error — w_crawl_order is the oracle-checked schedule
+      val expected = SparkEntry.queries("w_crawl_order")(spark, dir).count()
+      assert(s1.done + s1.errors == expected)
 
-    val s2 = CrawlMain.run(spark, args)
-    assert(s2.resumedFrom.contains(s1.version))
-    assert(s2.version == s1.version) // nothing left to do
-    assert(s2.done == s1.done && s2.errors == s1.errors)
+      val s2 = CrawlMain.run(spark, args)
+      assert(s2.resumedFrom.contains(s1.version))
+      assert(s2.version == s1.version) // nothing left to do
+      assert(s2.done == s1.done && s2.errors == s1.errors)
 
-    // --sweep-orphans-hours at init: an aged crash-leftover dir is
-    // reclaimed, the resumed store is untouched
-    import spark.implicits._
-    val orphan = java.nio.file.Paths.get(s"$tmp/store", "data", "frontier", "v99999")
-    Seq(1).toDF("x").write.parquet(orphan.toString)
-    java.nio.file.Files.setLastModifiedTime(
-      orphan, java.nio.file.attribute.FileTime.fromMillis(1L))
-    val s3 = CrawlMain.run(spark, args ++ Array("--sweep-orphans-hours", "1"))
-    assert(!java.nio.file.Files.exists(orphan))
-    assert(s3.version == s1.version && s3.done == s1.done)
-    Bench.deleteRecursively(tmp)
+      // --sweep-orphans-hours at init: an aged crash-leftover dir is
+      // reclaimed, the resumed store is untouched
+      import spark.implicits._
+      val orphan = java.nio.file.Paths.get(s"$tmp/store", "data", "frontier", "v99999")
+      Seq(1).toDF("x").write.parquet(orphan.toString)
+      java.nio.file.Files.setLastModifiedTime(
+        orphan, java.nio.file.attribute.FileTime.fromMillis(1L))
+      val s3 = CrawlMain.run(spark, args ++ Array("--sweep-orphans-hours", "1"))
+      assert(!java.nio.file.Files.exists(orphan))
+      assert(s3.version == s1.version && s3.done == s1.done)
+
+      // the benchmark's crawl flags (a bloom discovery crawl with
+      // compaction every 2 waves), its wave period scaled from 12,000
+      // seeds to sf0.001's 1,500 so the seed plan still spans several waves
+      val disc = Array(
+        "--pages", s"$tmp/pages", "--seeds", s"$tmp/seeds",
+        "--store", s"$tmp/store-disc", "--partitions", "4",
+        "--seen-filter", "bloom", "--wave-period-ms", "12500",
+        "--compact-seen-every", "2", "--discover", "--max-generations", "1")
+      val d1 = CrawlMain.run(spark, disc)
+      assert(d1.resumedFrom.isEmpty)
+      assert(d1.generations == 2)
+      assert(d1.lastWave >= 2) // at least one compaction round (every 2 waves)
+      // every scheduled seed plus every discovered URL (seq past the
+      // largest seed seq) ends done or error
+      val maxSeed = Fixtures.seeds(spark, dir).agg(max("seq")).head.getLong(0)
+      val discovered = new SnapshotTable(spark, s"$tmp/store-disc")
+        .read("frontier", d1.version).where(col("seq") > maxSeed).count()
+      assert(discovered > 0)
+      assert(d1.done + d1.errors == expected + discovered)
+
+      val d2 = CrawlMain.run(spark, disc)
+      assert(d2.resumedFrom.contains(d1.version))
+      assert(d2.version == d1.version) // nothing left to do
+      assert(d2.generations == d1.generations)
+      assert(d2.done == d1.done && d2.errors == d1.errors)
+    }
   }
 
   test("argument errors throw (embeddable) instead of exiting the JVM") {
@@ -68,55 +97,55 @@ class CrawlMainSpec extends AnyFunSuite {
   }
 
   test("--expected-keys derives a crawlable layout; budget change refuses on resume") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cmain-keys-").toString
-    Fixtures.pages(spark, dir).toDF.write.parquet(s"$tmp/pages")
-    Fixtures.seeds(spark, dir).write.parquet(s"$tmp/seeds")
-    def args(budgetMb: String) = Array(
-      "--pages", s"$tmp/pages", "--seeds", s"$tmp/seeds",
-      "--store", s"$tmp/store", "--partitions", "4",
-      "--wave-period-ms", "600000",
-      "--expected-keys", "100000000", "--seen-budget-mb", budgetMb)
+    withTempDir("graft-cmain-keys-") { tmp =>
+      Fixtures.pages(spark, dir).toDF.write.parquet(s"$tmp/pages")
+      Fixtures.seeds(spark, dir).write.parquet(s"$tmp/seeds")
+      def args(budgetMb: String) = Array(
+        "--pages", s"$tmp/pages", "--seeds", s"$tmp/seeds",
+        "--store", s"$tmp/store", "--partitions", "4",
+        "--wave-period-ms", "600000",
+        "--expected-keys", "100000000", "--seen-budget-mb", budgetMb)
 
-    // 10^8 keys at 10 b/key = 1 Gb > 16 MB budget → capped (under-
-    // provisioned bloom), still crawls to the oracled schedule count
-    val s1 = CrawlMain.run(spark, args("16"))
-    val expected = SparkEntry.queries("w_crawl_order")(spark, dir).count()
-    assert(s1.done + s1.errors == expected)
-    // same derivation resumes; a budget change re-derives the layout
-    // and must refuse against the store's recorded one
-    assert(CrawlMain.run(spark, args("16")).resumedFrom.contains(s1.version))
-    val m = intercept[IllegalArgumentException](
-      CrawlMain.run(spark, args("64"))).getMessage
-    assert(m.contains("layout mismatch"))
-    Bench.deleteRecursively(tmp)
+      // 10^8 keys at 10 b/key = 1 Gb > 16 MB budget → capped (under-
+      // provisioned bloom), still crawls to the oracled schedule count
+      val s1 = CrawlMain.run(spark, args("16"))
+      val expected = SparkEntry.queries("w_crawl_order")(spark, dir).count()
+      assert(s1.done + s1.errors == expected)
+      // same derivation resumes; a budget change re-derives the layout
+      // and must refuse against the store's recorded one
+      assert(CrawlMain.run(spark, args("16")).resumedFrom.contains(s1.version))
+      val m = intercept[IllegalArgumentException](
+        CrawlMain.run(spark, args("64"))).getMessage
+      assert(m.contains("layout mismatch"))
+    }
   }
 
   test("seen-set sizing flags reach the engine; layout mismatch on resume fails fast") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cmain-seen-").toString
-    Fixtures.pages(spark, dir).toDF.write.parquet(s"$tmp/pages")
-    Fixtures.seeds(spark, dir).write.parquet(s"$tmp/seeds")
-    val base = Array(
-      "--pages", s"$tmp/pages", "--seeds", s"$tmp/seeds",
-      "--store", s"$tmp/store", "--partitions", "4",
-      "--wave-period-ms", "600000")
-    val sized = base ++ Array(
-      "--seen-filter", "cuckoo", "--seen-partitions", "8",
-      "--cuckoo-capacity-per-partition", "1024")
+    withTempDir("graft-cmain-seen-") { tmp =>
+      Fixtures.pages(spark, dir).toDF.write.parquet(s"$tmp/pages")
+      Fixtures.seeds(spark, dir).write.parquet(s"$tmp/seeds")
+      val base = Array(
+        "--pages", s"$tmp/pages", "--seeds", s"$tmp/seeds",
+        "--store", s"$tmp/store", "--partitions", "4",
+        "--wave-period-ms", "600000")
+      val sized = base ++ Array(
+        "--seen-filter", "cuckoo", "--seen-partitions", "8",
+        "--cuckoo-capacity-per-partition", "1024")
 
-    // a custom layout crawls to the same outcome as the default one
-    val s1 = CrawlMain.run(spark, sized)
-    val expected = SparkEntry.queries("w_crawl_order")(spark, dir).count()
-    assert(s1.done + s1.errors == expected)
+      // a custom layout crawls to the same outcome as the default one
+      val s1 = CrawlMain.run(spark, sized)
+      val expected = SparkEntry.queries("w_crawl_order")(spark, dir).count()
+      assert(s1.done + s1.errors == expected)
 
-    // same layout resumes; a DIFFERENT layout must refuse (blobs are
-    // keyed by url_hash mod seen_parts — a silent false-negative hazard)
-    assert(CrawlMain.run(spark, sized).resumedFrom.contains(s1.version))
-    val m1 = intercept[IllegalArgumentException](
-      CrawlMain.run(spark, sized ++ Array("--seen-partitions", "16"))).getMessage
-    assert(m1.contains("layout mismatch") && m1.contains("seen_parts"))
-    val m2 = intercept[IllegalArgumentException](
-      CrawlMain.run(spark, base)).getMessage // bloom vs the store's cuckoo
-    assert(m2.contains("layout mismatch") && m2.contains("seen_kind"))
-    Bench.deleteRecursively(tmp)
+      // same layout resumes; a DIFFERENT layout must refuse (blobs are
+      // keyed by url_hash mod seen_parts — a silent false-negative hazard)
+      assert(CrawlMain.run(spark, sized).resumedFrom.contains(s1.version))
+      val m1 = intercept[IllegalArgumentException](
+        CrawlMain.run(spark, sized ++ Array("--seen-partitions", "16"))).getMessage
+      assert(m1.contains("layout mismatch") && m1.contains("seen_parts"))
+      val m2 = intercept[IllegalArgumentException](
+        CrawlMain.run(spark, base)).getMessage // bloom vs the store's cuckoo
+      assert(m2.contains("layout mismatch") && m2.contains("seen_kind"))
+    }
   }
 }

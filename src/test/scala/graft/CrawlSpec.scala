@@ -190,7 +190,7 @@ class CrawlSpec extends AnyFunSuite {
     import spark.implicits._
     val root = Files.createTempDirectory("crawl-prehash-").toString
     val st = new SnapshotTable(spark, root)
-    // the fingerprint-at-ingest shape (Bench fixture dir / a deployment
+    // the fingerprint-at-ingest shape (the benchmark's inputs / a deployment
     // storing golden fingerprints, not golden text): same crawl, same
     // render_match verdicts, byte-identical samples
     val pages = Fixtures.pages(spark, dir).toDF

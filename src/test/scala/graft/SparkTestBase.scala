@@ -15,4 +15,18 @@ object SparkTestBase {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** Runs `body` on a fresh temp directory and deletes the directory
+    * afterwards, also when `body` throws. */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir.toString)
+    finally {
+      val paths = Files.walk(dir)
+      try paths.iterator().asScala.toSeq.reverseIterator.foreach(Files.deleteIfExists)
+      finally paths.close()
+    }
+  }
 }

@@ -7,7 +7,9 @@ Reads <verify_out_dir>/<query>.parquet (the Spark result written by
 graft.Verify) and oracle_sql.json, runs the oracle SQL in DuckDB with
 the sf dir's parquet tables registered as views, and diffs the two
 result sets the way the driver does: columns sorted by name, rows
-sorted, exact value equality.
+sorted, exact value equality. A cell where both sides are NaN/null
+counts as equal; how many such cells each column holds is printed before
+the verdict, so agreement that rests on NaN stays visible.
 """
 import json
 import sys
@@ -43,13 +45,15 @@ def main() -> int:
         return 1
     # exact compare after normalizing integer dtypes, NaN-aware
     # (NaN == NaN must read equal, like the old astype(str) compare did)
+    both_nan = {}
     for c in s.columns:
         sv, ov = s[c], o[c]
+        nan = sv.isna() & ov.isna()
+        both_nan[c] = int(nan.sum())
         try:
-            eq = (sv.astype("object") == ov.astype("object")) | (
-                sv.isna() & ov.isna())
+            eq = (sv.astype("object") == ov.astype("object")) | nan
         except Exception:
-            eq = (sv == ov) | (sv.isna() & ov.isna())
+            eq = (sv == ov) | nan
         bad = (~eq).to_numpy().nonzero()[0]
         if len(bad):
             print(f"MISMATCH in column {c}: {len(bad)} rows, first 5:")
@@ -57,6 +61,7 @@ def main() -> int:
                 print(f"  row {i}: spark={sv.iloc[i]!r} oracle={ov.iloc[i]!r} "
                       f"key={s.iloc[i].to_dict()}")
             return 1
+    print("both-NaN cells: " + " ".join(f"{c}={n}" for c, n in both_nan.items()))
     print("MATCH")
     return 0
 
