@@ -3,7 +3,7 @@ package graft
 import graft.jobs.CrawlWave
 import graft.store.SnapshotTable
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, count, when}
 
 /** Production entrypoint: the crawl engine as a spark-submit job
   * (north rule: "runs via spark-submit on a multi-executor cluster").
@@ -255,11 +255,12 @@ object CrawlMain {
     val sec = (System.nanoTime() - t0) / 1e9
 
     val m = snap.metricsOf(v)
-    val frontier = snap.read("frontier", v)
-    val done = frontier.where(col("state") === "done").count()
-    val errs = frontier.where(col("state") === "error").count()
+    // done + errors in one pass over the final frontier
+    val counts = snap.read("frontier", v).agg(
+      count(when(col("state") === "done", true)),
+      count(when(col("state") === "error", true))).head
     Summary(v, resumedFrom, m.getOrElse("gen", 0L) + 1,
-      m.getOrElse("wave", -1L), done, errs, sec)
+      m.getOrElse("wave", -1L), counts.getLong(0), counts.getLong(1), sec)
   }
 
   def main(args: Array[String]): Unit = {

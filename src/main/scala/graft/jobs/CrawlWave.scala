@@ -109,12 +109,14 @@ object CrawlWave {
       // back to the shuffled semi-join. 4M hashes ≈ 32 MB broadcast.
       maxBroadcastSuspects: Long = 4L << 20,
       // per-wave-append-table compaction cadence: each wave appends one
-      // delta dir to `seen` (part-clustered), `frontier_delta` and
+      // delta dir to `seen` (rebalanced by part and sorted by it, so the
+      // exact confirm prunes row groups), `frontier_delta` and
       // `metrics`, so their read-side file listing/footer cost grows
       // O(waves). When the un-squashed tail reaches this many dirs, the
       // commit folds each table's tail + current delta into ONE dir
       // (SnapshotTable.squash — the Iceberg rewrite-data-files action;
-      // seen stays re-clustered by part): O(tail) rewrite every K waves
+      // seen is rebalanced and sorted by part again, in one shuffle):
+      // O(tail) rewrite every K waves
       // amortizes to one extra delta per wave and bounds the dir lists
       // at O(waves / K + K). Rides the async commit. 0 = off.
       compactSeenEvery: Int = 64,
@@ -746,7 +748,10 @@ final class CrawlWave(
     * co-located join), and a range-partitioned sort + zipWithIndex for
     * the deterministic seq assignment — no driver-side URL sets and no
     * partition-less windows at any frontier size. */
-  private def planNextGeneration(v: Int): Boolean = {
+  private def planNextGeneration(): Boolean = {
+    // everything up to the commit overlaps the generation's last wave
+    // commit, which may still be flushing (it wrote only deltas: the
+    // plan's url set, which the anti-join reads, is unchanged by it)
     val discovered = prefetchAll()
       .select(explode(col("links")).as("url"))
       .distinct()
@@ -763,16 +768,20 @@ final class CrawlWave(
         .zipWithIndex()
         .map { case (u, i) => (baseSeq + 1 + i, u) })
       .toDF("seq", "url")
+    // the new generation's last wave is observed on the commit's own
+    // frontier write (as in init), so the plan is materialized once
+    val obs = org.apache.spark.sql.Observation("gen_stats")
     val planned = schedulePlan(initFrontier(newSeeds, cfg.fetchFtp), planMaxWave + 1,
-      readyHosts(newSeeds, cfg.fetchFtp)).cache()
-    val st = planned.agg(max("wave")).head
-    val newMax = if (st.isNullAt(0)) planMaxWave
-      else math.max(planMaxWave, st.getInt(0))
+      readyHosts(newSeeds, cfg.fetchFtp)).observe(obs, max(col("wave")).as("mw"))
+    def newMax: Int = Option(obs.get("mw"))
+      .fold(planMaxWave)(w => math.max(planMaxWave, w.asInstanceOf[Int]))
+    val v = awaitPending().getOrElse(store.latestVersion.get)
     // the new generation is APPENDED as a frontier delta dir — the
     // commit costs O(discovered), not O(frontier) (a replace would
     // rewrite the whole 10^10-row table once per generation); readers
     // see the identical union through the manifest's dir list. The
-    // final-wave reconcile stays the single O(frontier) replace.
+    // frontier is reconciled once per crawl (the final generation's
+    // last wave, or reconcileFrontier).
     val c = store.commit(
       append = Map("frontier" -> planned),
       // plan-time error rows: metadata-only view over the SAME frontier
@@ -781,9 +790,9 @@ final class CrawlWave(
       metrics = Map("wave" -> planMaxWave.toLong, "max_wave" -> newMax.toLong,
         "gen" -> (generation + 1).toLong, "discovered" -> nDiscovered,
         "gen_wave0" -> (planMaxWave + 1).toLong,
-        "seen_keep_dirs" -> seenKeepDirs.toLong),
+        "seen_keep_dirs" -> seenKeepDirs.toLong, "reconciled" -> 0L),
       expectedParent = Some(v))
-    discovered.unpersist(); planned.unpersist(); releasePlanScratch()
+    discovered.unpersist(); releasePlanScratch()
     // swap the plan state to the new generation (its scratch dataset is
     // written lazily by the first new wave's prefetchAll)
     cleanup()
@@ -795,18 +804,51 @@ final class CrawlWave(
     newMax >= nextWave
   }
 
+  /** Whether discovery may plan another generation after the current
+    * one: then the generation's last wave commits like any other wave
+    * (pipelined, no frontier rewrite) and the re-plan overlaps its
+    * flush. */
+  private def mayGrow: Boolean = cfg.discover && generation < cfg.maxGenerations
+
+  /** The plan with every wave's state change applied: the full
+    * `frontier` table as the crawl leaves it. */
+  private def reconciled(deltas: DataFrame): DataFrame =
+    plan.join(deltas.select(col("seq"), col("state").as("d_state")), Seq("seq"), "left")
+      .withColumn("state", coalesce(col("d_state"), col("state")))
+      .drop("d_state")
+
+  /** The drained crawl's frontier reconcile when no wave did it: a
+    * discovery crawl whose last generation found nothing (or planned no
+    * schedulable wave) ends here. One commit carrying only the cursor
+    * metrics; a latest version already marked reconciled (a rerun over
+    * a finished store, or a crawl whose final wave reconciled) adds
+    * none. Stores written before the mark existed always ended
+    * reconciled, hence the default. */
+  private def reconcileFrontier(): Unit = {
+    val v = awaitPending().getOrElse(store.latestVersion.get)
+    val m = store.metricsOf(v)
+    if (m.getOrElse("reconciled", 1L) == 0L) {
+      val cursor = Set("wave", "max_wave", "gen", "gen_wave0", "seen_keep_dirs")
+      store.commit(
+        replace = Map("frontier" -> reconciled(store.read("frontier_delta", v))),
+        metrics = m.filter { case (k, _) => cursor(k) } + ("reconciled" -> 1L),
+        expectedParent = Some(v))
+      if (cfg.expireKeep > 0) store.expire(cfg.expireKeep, alwaysKeep = Set(1))
+    }
+  }
+
   /** Run one planned wave; returns the committed version, or None when
-    * the plan is exhausted (the final call also reconciles and rewrites
-    * the full `frontier` table — the only O(frontier) write after v1). */
+    * the plan is exhausted. The crawl's final wave (or, after a
+    * discovery generation that found nothing, one reconcile-only
+    * commit) rewrites the full `frontier` table — the only O(frontier)
+    * write after v1, once per crawl. */
   def step(): Option[Int] = {
     val v = store.latestVersion.getOrElse(
       throw new IllegalStateException("call init() first"))
     ensurePlan(v)
     if (nextWave > planMaxWave) {
-      awaitPending()
-      if (cfg.discover && generation < cfg.maxGenerations &&
-          planNextGeneration(store.latestVersion.getOrElse(v)))
-        return step()
+      if (mayGrow && planNextGeneration()) return step()
+      reconcileFrontier()
       cleanup(); return None
     }
     val wave = nextWave
@@ -861,8 +903,9 @@ final class CrawlWave(
     // At the 10^10 design point suspects occur EVERY wave (slice ×
     // FP rate), so the confirm must not cost O(seen): the seen scan is
     // pruned to the suspects' filter partitions (deltas are written
-    // part-clustered in doCommit — ≈ one part per file, so the isin
-    // prunes at file/row-group level across every wave's delta), and
+    // rebalanced by part and sorted by it in doCommit, so every file's
+    // row groups hold part ranges and the isin prunes at row-group
+    // level across every wave's delta), and
     // the tiny suspect side is broadcast so the seen table is only
     // SCANNED, never shuffled. A degraded filter (suspects beyond
     // cfg.maxBroadcastSuspects) falls back to the shuffled semi-join.
@@ -935,14 +978,15 @@ final class CrawlWave(
     // untouched partitions keep their blob verbatim.
     val seenDelta = kept(narrow.select("url_hash"))
       .select(pmod(col("url_hash"), lit(P.toLong)).cast("int").as("part"), col("url_hash"))
-    // the appended delta FILES are clustered by part (≈ one filter
-    // partition per file, sorted row groups for the hash-collision
-    // leftovers): the suspect-confirm above prunes its seen scan to the
-    // touched parts across every wave's delta. The (int, long) shuffle
-    // is O(slice) and rides the async commit.
-    val seenDeltaClustered = seenDelta
-      .repartition(P, col("part"))
-      .sortWithinPartitions("part")
+    // the appended delta FILES are clustered by part and sorted by it:
+    // the suspect-confirm above prunes its seen scan to the touched
+    // parts' row groups across every wave's delta. A rebalance (not a
+    // fixed P-way repartition) lets AQE size the file count to the
+    // data — a few files for a small wave instead of P tiny ones, each
+    // paying the per-file write cost. The (int, long) shuffle is
+    // O(slice) and rides the async commit.
+    def partClustered(df: DataFrame): DataFrame =
+      df.hint("rebalance", col("part")).sortWithinPartitions("part")
     val bloomBits = cfg.bloomBitsPerPartition; val bloomHashes = cfg.bloomHashes
     val cuckooCap = cfg.cuckooCapacityPerPartition
 
@@ -968,7 +1012,10 @@ final class CrawlWave(
     // predecessor). The next wave reading a not-yet-updated `blobState`
     // is sound: planned waves are URL-disjoint (see the guard comment).
     val parent = awaitPending().getOrElse(v)
-    val isLast = wave == planMaxWave
+    // the crawl's final wave reconciles the frontier in its commit; the
+    // last wave of a generation discovery may extend does not (see
+    // mayGrow) — the crawl then reconciles once, at its end
+    val isLast = wave == planMaxWave && !mayGrow
 
     def doCommit(): Int = {
       // The REBUILD base must be the PREDECESSOR COMMIT's blobs, not the
@@ -1002,22 +1049,14 @@ final class CrawlWave(
       val blobsDf = spark.createDataset(mergedBlobs.toSeq).toDF("part", "blob")
       val replaceTables =
         if (!isLast) Map("seen_bloom" -> blobsDf)
-        else {
-          // final wave → reconcile the full frontier once (plan + deltas)
-          val allDeltas = store.read("frontier_delta", parent)
-            .unionByName(frontierDelta)
-            .select(col("seq"), col("state").as("d_state"))
-          val finalFrontier = plan
-            .join(allDeltas, Seq("seq"), "left")
-            .withColumn("state", coalesce(col("d_state"), col("state")))
-            .drop("d_state")
-          Map("seen_bloom" -> blobsDf, "frontier" -> finalFrontier)
-        }
+        // final wave → reconcile the full frontier once (plan + deltas)
+        else Map("seen_bloom" -> blobsDf, "frontier" -> reconciled(
+          store.read("frontier_delta", parent).unionByName(frontierDelta)))
       // per-wave-append-table compaction: once the un-squashed tail
       // (incl. this wave's delta) reaches the cadence, fold each
       // table's tail + current delta into ONE dir instead of appending
       // dir #tail+1. `seen` (re-clustered — the hot confirm path),
-      // `frontier_delta` (read whole at every generation reconcile)
+      // `frontier_delta` (read whole at the crawl's reconcile)
       // and `metrics` squash together on one shared round counter:
       // after M squashes each table's dir list is exactly its M squash
       // outputs plus the raw tail, so keep=M holds for all three even
@@ -1033,17 +1072,14 @@ final class CrawlWave(
       val squashMap: Map[String, (Int, org.apache.spark.sql.DataFrame)] =
         if (!doSquash) Map.empty
         else Map(
-          "seen" -> (seenKeepDirs ->
-            store.readTail("seen", parent, seenKeepDirs)
-              .unionByName(seenDeltaClustered)
-              .repartition(P, col("part"))
-              .sortWithinPartitions("part")),
+          "seen" -> (seenKeepDirs -> partClustered(
+            store.readTail("seen", parent, seenKeepDirs).unionByName(seenDelta))),
           "frontier_delta" -> tailPlus("frontier_delta", frontierDelta),
           "metrics" -> tailPlus("metrics", metricsNew))
       val appendDf: Map[String, org.apache.spark.sql.DataFrame] = {
         val waveAppends: Map[String, org.apache.spark.sql.DataFrame] =
           if (doSquash) Map.empty
-          else Map("seen" -> seenDeltaClustered, "metrics" -> metricsNew,
+          else Map("seen" -> partClustered(seenDelta), "metrics" -> metricsNew,
             "frontier_delta" -> frontierDelta)
         if (refCommit) waveAppends
         else waveAppends ++ Map("samples" -> samplesNew, "errors" -> errorsNew)
@@ -1065,7 +1101,8 @@ final class CrawlWave(
           "gen_wave0" -> genWave0.toLong,
           "seen_keep_dirs" -> newKeepDirs.toLong,
           "errors" -> nErr, "render_mismatches" -> nMismatch,
-          "max_wave" -> planMaxWave.toLong, "gen" -> generation.toLong),
+          "max_wave" -> planMaxWave.toLong, "gen" -> generation.toLong,
+          "reconciled" -> (if (isLast) 1L else 0L)),
         rowCounts = Map("samples" -> (nSel - nErr), "errors" -> nErr),
         expectedParent = Some(parent))
       // retention rides the same amortized cadence as compaction (plus
@@ -1094,21 +1131,15 @@ final class CrawlWave(
     Some(committed)
   }
 
-  /** Drive waves to drain (or maxWaves); returns the final version.
-    * The returned version is always PUBLISHED: the drain path awaits
-    * the pipelined commit inside step(), and the maxWaves-cap exit
-    * awaits it here before returning. */
+  /** Drive waves to drain (or maxWaves); returns the final version —
+    * the latest, since the drain may end in a reconcile-only commit.
+    * It is always PUBLISHED: the drain path awaits the pipelined commit
+    * inside step(), and the maxWaves-cap exit awaits it here. */
   def runAll(seeds: DataFrame): Int = {
-    var v = init(seeds)
+    init(seeds)
     var k = 0
-    var continue = true
-    while (continue && k < cfg.maxWaves) {
-      step() match {
-        case Some(nv) => v = nv; k += 1
-        case None => continue = false
-      }
-    }
+    while (k < cfg.maxWaves && step().isDefined) k += 1
     awaitPending() // cap exit: the last wave's commit may be in flight
-    v
+    store.latestVersion.get
   }
 }

@@ -562,6 +562,58 @@ class CrawlSpec extends AnyFunSuite {
       .getOrElse("gen", -1L) == 1L)
   }
 
+  /** Versions after v1 whose commit REPLACED the frontier (its dir list
+    * is exactly the dir the commit wrote) — the full O(frontier) writes. */
+  private def frontierRewrites(s: SnapshotTable): Seq[Int] =
+    (2 to s.latestVersion.get).filter(v =>
+      s.tableDirs(v)("frontier") == Seq(f"data/frontier/v$v%05d"))
+
+  test("discovery: the full frontier is rewritten exactly once per crawl") {
+    // two generations, but generation 0's last wave commits only deltas:
+    // the single rewrite is the crawl's final reconcile
+    assert(frontierRewrites(discStore) == Seq(discStore.latestVersion.get))
+  }
+
+  test("discovery: an empty next generation ends in one reconcile-only commit; rerun adds none") {
+    val latest = discStore.latestVersion.get
+    val cursor = Set("wave", "max_wave", "gen", "gen_wave0", "seen_keep_dirs", "reconciled")
+    val reconcileOnly = (1 to latest).filter(v => discStore.metricsOf(v).keySet == cursor)
+    assert(reconcileOnly == Seq(latest))
+    val m = discStore.metricsOf(latest)
+    assert(m("reconciled") == 1L && m("gen") == 1L)
+    // the commit before it is generation 1's last wave, unreconciled
+    assert(discStore.metricsOf(latest - 1).get("reconciled").contains(0L))
+    assert(discStore.metricsOf(latest - 1)("wave") == m("wave"))
+    // rerun over the finished store: drained, reconciled — no new version
+    val pages = Fixtures.pages(spark, dir).toDF.cache()
+    assert(new CrawlWave(spark, pages, discStore,
+      cfg(4).copy(discover = true, maxGenerations = 3))
+      .runAll(Fixtures.seeds(spark, dir)) == latest)
+    assert(discStore.latestVersion.contains(latest))
+    pages.unpersist()
+  }
+
+  test("seen deltas: fewer files than seen partitions, each sorted by part") {
+    import spark.implicits._
+    val v = store.latestVersion.get
+    val seenDirs = store.tableDirs(v)("seen")
+    assert(seenDirs.length >= 2) // one delta per wave, no squash
+    for (d <- seenDirs) {
+      val files = {
+        val ls = Files.list(java.nio.file.Paths.get(store.rootPath, d))
+        try { import scala.jdk.CollectionConverters._
+          ls.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toVector }
+        finally ls.close()
+      }
+      assert(files.nonEmpty && files.length < CrawlWave.Config().seenPartitions,
+        s"$d holds ${files.length} files")
+      for (f <- files) {
+        val parts = spark.read.parquet(f).select("part").as[Int].collect().toSeq
+        assert(parts == parts.sorted, s"$f not sorted by part")
+      }
+    }
+  }
+
   test("discovery over an all-dropped seed set drains cleanly (empty prefetch read-back)") {
     import spark.implicits._
     val root = Files.createTempDirectory("crawl-empty-").toString
