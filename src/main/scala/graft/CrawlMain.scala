@@ -20,8 +20,8 @@ import org.apache.spark.sql.functions.{col, count, when}
   *     [--bloom-bits-per-partition N] [--bloom-hashes K] \
   *     [--cuckoo-capacity-per-partition N] \
   *     [--expected-keys N [--seen-budget-mb MB]] \
-  *     [--compact-seen-every K] [--scalable-rank] \
-  *     [--fetch-ftp] [--sync-commits]
+  *     [--compact-seen-every K] [--expire-keep N] \
+  *     [--sweep-orphans-hours H] [--scalable-rank] [--fetch-ftp]
   *
   * The session's master/executors come from spark-submit (no
   * `.master()` here; local runs pass `-Dspark.master=local[N]`).
@@ -61,7 +61,7 @@ object CrawlMain {
       "[--cuckoo-capacity-per-partition N] " +
       "[--expected-keys N [--seen-budget-mb MB]] [--compact-seen-every K] " +
       "[--expire-keep N] [--sweep-orphans-hours H] " +
-      "[--scalable-rank] [--fetch-ftp] [--sync-commits]"
+      "[--scalable-rank] [--fetch-ftp]"
 
   /** Argument errors THROW (so [[run]] stays embeddable in tests and
     * other drivers); only [[main]] turns them into usage + exit 2. */
@@ -80,7 +80,6 @@ object CrawlMain {
     var wavePeriodMs = 1000L
     var discover, scalableRank, fetchFtp = false
     var robots = true
-    var pipeline = true
     var agent = "graftbot"
     var seenFilter = "bloom"
     var seenPartitionsOpt, bloomBitsOpt, bloomHashesOpt, cuckooCapacityOpt: Option[Int] = None
@@ -150,7 +149,6 @@ object CrawlMain {
         case "--no-robots" => robots = false; i += 1
         case "--scalable-rank" => scalableRank = true; i += 1
         case "--fetch-ftp" => fetchFtp = true; i += 1
-        case "--sync-commits" => pipeline = false; i += 1
         case other => bad(s"unknown argument: $other")
       }
     }
@@ -246,8 +244,7 @@ object CrawlMain {
       expireKeep = expireKeep,
       discover = discover,
       scalableRank = scalableRank,
-      fetchFtp = fetchFtp,
-      pipelineCommits = pipeline))
+      fetchFtp = fetchFtp))
 
     val resumedFrom = snap.latestVersion
     val t0 = System.nanoTime()

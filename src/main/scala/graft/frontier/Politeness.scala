@@ -42,24 +42,16 @@ object Politeness {
   /** Annotate a frontier slice with per-host rank and the relative wave
     * each row may run in. Requires columns: host, priority, seq.
     *
-    * Delay source, in priority order: a `crawl_delay_ms` column already
-    * present on `ready` (the robots rules-table join, [[Robots.rulesTable]]
-    * — null falls back to the formula), else an optional small
-    * `(host, crawl_delay_ms)` table broadcast-joined here, else the
-    * deterministic formula. */
+    * Delay source: a `crawl_delay_ms` column already present on `ready`
+    * (the robots rules-table join, [[Robots.rulesTable]] — null falls
+    * back to the formula), else the deterministic formula. */
   def schedule(ready: DataFrame, wavePeriodMs: Long,
-      delays: Option[DataFrame] = None, twoPhaseRank: Boolean = false): DataFrame = {
+      twoPhaseRank: Boolean = false): DataFrame = {
     val w = Window.partitionBy("host").orderBy(col("priority").asc, col("seq").asc)
     val withDelay =
       if (ready.columns.contains("crawl_delay_ms"))
         ready.withColumn("delay_ms", coalesce(col("crawl_delay_ms"), delayMsCol))
-      else delays match {
-        case Some(d) =>
-          ready.join(broadcast(d.select(col("host"), col("crawl_delay_ms"))), Seq("host"), "left")
-            .withColumn("delay_ms", coalesce(col("crawl_delay_ms"), delayMsCol))
-            .drop("crawl_delay_ms")
-        case None => ready.withColumn("delay_ms", delayMsCol)
-      }
+      else ready.withColumn("delay_ms", delayMsCol)
     val ranked =
       if (twoPhaseRank) withTwoPhaseHostRank(withDelay)
       else withDelay.withColumn("host_rank", row_number().over(w))

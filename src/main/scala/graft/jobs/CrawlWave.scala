@@ -34,8 +34,11 @@ import org.apache.spark.sql.functions._
   *     anti-join for the Bloom's false positives (shuffle by url_hash
   *     only for suspects) — planned waves are URL-disjoint, so the
   *     guard commutes with the batched fetch;
-  *  6. update frontier states + seen set + Bloom blobs, append samples/
+  *  4. update frontier states + seen set + Bloom blobs, append samples/
   *     errors, commit an atomic snapshot with per-wave lineage metrics.
+  *     Every wave's commit but the crawl's final one flushes in the
+  *     background while the next wave computes; [[CrawlWave.flush]]
+  *     awaits it.
   *
   * Crash/resume: every wave is one snapshot commit; a new `CrawlWave`
   * over the same store resumes from the latest published version and
@@ -71,19 +74,10 @@ object CrawlWave {
       bloomBitsPerPartition: Int = 1 << 22,
       bloomHashes: Int = 5,
       partitions: Int = 32,
-      maxWaves: Int = 10000,
       robots: Boolean = true,
       agent: String = "graftbot",
       seenFilter: String = "bloom", // "bloom" | "cuckoo"
       cuckooCapacityPerPartition: Int = 1 << 20,
-      // overlap wave k's snapshot flush with wave k+1's compute. SAFE
-      // because planned waves are URL-disjoint (the seen anti-join never
-      // needs the in-flight delta) and commits stay strictly ordered
-      // (each awaits its predecessor before publishing). Off by default:
-      // step() then returns a PREDICTED version before the flush lands,
-      // so callers that read the store right after a step must await
-      // (runAll does; direct step() drivers in tests want sync mode).
-      pipelineCommits: Boolean = false,
       // frontier GROWTH: when a generation's plan drains, extract
       // outlinks from its fetched bodies ([[graft.html.LinkExtract]]),
       // drop URLs already in the frontier, and re-plan the remainder as
@@ -427,37 +421,29 @@ final class CrawlWave(
     * resume. */
   @volatile private var seenKeepDirs: Int = 0
   @volatile private var seenTailDirs: Int = 0
-  // in-flight async commit (pipelineCommits mode)
+  // the in-flight commit of the last non-final wave: wave k's snapshot
+  // flush overlaps wave k+1's compute. Safe because planned waves are
+  // URL-disjoint (the next wave's seen guard never needs the in-flight
+  // delta) and commits stay strictly ordered (each awaits its
+  // predecessor before publishing).
   private var pending: Option[scala.concurrent.Future[Int]] = None
 
-  /** Await and clear the in-flight commit, returning its version. */
-  private def awaitPending(): Option[Int] = {
+  /** Await the in-flight commit, if any, and return the latest
+    * published version. Call it before reading the store or opening
+    * another engine over it after [[step]]; [[runAll]] ends with it. */
+  def flush(): Int = {
     import scala.concurrent.{Await, duration}
-    val r = pending.map(f => Await.result(f, duration.Duration.Inf))
+    val awaited = pending.map(f => Await.result(f, duration.Duration.Inf))
     pending = None
-    r
+    awaited.orElse(store.latestVersion).getOrElse(
+      throw new IllegalStateException("call init() first"))
   }
 
-  /** Commit snapshot v1 — the CRAWL PLAN — unless the store already has
-    * a snapshot to resume from. Returns the start version.
-    *
-    * Planning happens once, not per wave:
-    *  - robots deny: a DISTRIBUTED per-host rules table
-    *    ([[Robots.rulesTable]]) left-joined by host (AQE broadcasts it
-    *    while small — no driver collect of hosts at any cardinality);
-    *    denied rows → `denied_robots` + error rows; the same join
-    *    carries each host's `Crawl-delay` into the schedule;
-    *  - the politeness token-bucket schedule assigns every allowed ready
-    *    row its wave number (ONE window shuffle by host for the whole
-    *    crawl — the greedy per-wave re-rank provably selects the same
-    *    rows, see CrawlSpec "static politeness window schedule").
-    * New URLs discovered mid-crawl would re-enter through a re-plan of
-    * the not-yet-scheduled remainder (same code path, next generation).
-    */
   /** Robots deny + politeness schedule over an [[initFrontier]]-shaped
     * frame; scheduled rows get wave numbers starting at `waveOffset`
-    * (0 for the seed plan, lastWave+1 for discovery generations). */
-  /** @param hosts the ready rows' distinct hosts
+    * (0 for the seed plan, lastWave+1 for discovery generations).
+    *
+    * @param hosts the ready rows' distinct hosts
     *        ([[CrawlWave.readyHosts]] over the same seeds) — computed
     *        WITHOUT the dup window so the robots rules-table subtree
     *        neither re-evaluates nor forces persisting the windowed
@@ -545,6 +531,22 @@ final class CrawlWave(
     graft.store.SnapshotTable.ViewRef("data/frontier", Seq(frontierDir),
       planErrorsWhere, planErrorsSelect)
 
+  /** Commit snapshot v1 — the CRAWL PLAN — unless the store already has
+    * a snapshot to resume from. Returns the start version.
+    *
+    * Planning happens once, not per wave:
+    *  - robots deny: a DISTRIBUTED per-host rules table
+    *    ([[Robots.rulesTable]]) left-joined by host (AQE broadcasts it
+    *    while small — no driver collect of hosts at any cardinality);
+    *    denied rows → `denied_robots` + error rows; the same join
+    *    carries each host's `Crawl-delay` into the schedule;
+    *  - the politeness token-bucket schedule assigns every allowed ready
+    *    row its wave number (ONE window shuffle by host for the whole
+    *    crawl — the greedy per-wave re-rank provably selects the same
+    *    rows, see CrawlSpec "static politeness window schedule").
+    * URLs discovered mid-crawl enter through a re-plan of the same path
+    * as the next generation ([[planNextGeneration]]).
+    */
   def init(seeds: DataFrame): Int = store.latestVersion.getOrElse {
     // seq integrity FIRST, on the narrow seeds projection: `seq` is the
     // engine's row identity — the final-wave reconcile joins
@@ -645,14 +647,19 @@ final class CrawlWave(
   }
 
   /** Load (or reload after resume) the plan + wave cursor — fully from
-    * MANIFEST METADATA (zero Spark jobs; the plan DataFrame itself is
-    * lazy and materializes with the first wave's work). Deterministic,
-    * so a crashed run's successor continues identically. */
-  private def ensurePlan(v: Int): Unit = {
-    if (plan != null) return
+    * MANIFEST METADATA (the plan DataFrame itself is lazy and
+    * materializes with the first wave's work). Deterministic, so a
+    * crashed run's successor continues identically. Returns false,
+    * without reading the plan, when `v` is a reconcile-only commit
+    * ([[reconcileFrontier]]): discovery already came up empty after the
+    * crawl's last wave, so the crawl is over — decided with zero Spark
+    * jobs. */
+  private def ensurePlan(v: Int): Boolean = {
+    if (plan != null) return true
     checkLayout(store.metricsOf(1))
-    plan = store.read("frontier", v).cache()
     val m = store.metricsOf(v)
+    if (m.get("reconciled").contains(1L) && !m.contains("selected")) return false
+    plan = store.read("frontier", v).cache()
     // every commit carries max_wave + gen forward, so the LATEST
     // manifest fully locates the cursor (v1 fallback covers stores
     // written before discovery existed)
@@ -669,6 +676,7 @@ final class CrawlWave(
     seenKeepDirs = m.getOrElse("seen_keep_dirs", 0L).toInt
     seenTailDirs = math.max(0,
       store.tableDirs(v).getOrElse("seen", Nil).length - seenKeepDirs)
+    true
   }
 
   private def cleanup(): Unit = {
@@ -775,7 +783,7 @@ final class CrawlWave(
       readyHosts(newSeeds, cfg.fetchFtp)).observe(obs, max(col("wave")).as("mw"))
     def newMax: Int = Option(obs.get("mw"))
       .fold(planMaxWave)(w => math.max(planMaxWave, w.asInstanceOf[Int]))
-    val v = awaitPending().getOrElse(store.latestVersion.get)
+    val v = flush()
     // the new generation is APPENDED as a frontier delta dir — the
     // commit costs O(discovered), not O(frontier) (a replace would
     // rewrite the whole 10^10-row table once per generation); readers
@@ -825,7 +833,7 @@ final class CrawlWave(
     * none. Stores written before the mark existed always ended
     * reconciled, hence the default. */
   private def reconcileFrontier(): Unit = {
-    val v = awaitPending().getOrElse(store.latestVersion.get)
+    val v = flush()
     val m = store.metricsOf(v)
     if (m.getOrElse("reconciled", 1L) == 0L) {
       val cursor = Set("wave", "max_wave", "gen", "gen_wave0", "seen_keep_dirs")
@@ -837,26 +845,28 @@ final class CrawlWave(
     }
   }
 
-  /** Run one planned wave; returns the committed version, or None when
-    * the plan is exhausted. The crawl's final wave (or, after a
-    * discovery generation that found nothing, one reconcile-only
-    * commit) rewrites the full `frontier` table — the only O(frontier)
-    * write after v1, once per crawl. */
-  def step(): Option[Int] = {
+  /** Run one planned wave; returns false, with every commit published,
+    * when the crawl has drained. A non-final wave's commit is still
+    * flushing when this returns ([[flush]] awaits it). The crawl's final
+    * wave (or, after a discovery generation that found nothing, one
+    * reconcile-only commit) commits inline and rewrites the full
+    * `frontier` table — the only O(frontier) write after v1, once per
+    * crawl. */
+  def step(): Boolean = {
     val v = store.latestVersion.getOrElse(
       throw new IllegalStateException("call init() first"))
-    ensurePlan(v)
+    if (!ensurePlan(v)) return false
     if (nextWave > planMaxWave) {
       if (mayGrow && planNextGeneration()) return step()
       reconcileFrontier()
-      cleanup(); return None
+      cleanup(); return false
     }
     val wave = nextWave
     // the wave's prefetched fetch+extract results (columnar cache slice
     // — batch stats prune other waves' batches; no pages scan here)
     val slice = prefetchAll().where(col("wave") === wave)
 
-    // 1. seen-set guard: Bloom/cuckoo pre-filter (broadcast blobs
+    // seen-set guard: Bloom/cuckoo pre-filter (broadcast blobs
     // maintained INCREMENTALLY in the snapshot — read is O(blobs), not
     // O(seen)); exact anti-join only for the filter's false positives.
     // Blobs are carried in memory between waves (store read only on the
@@ -948,7 +958,7 @@ final class CrawlWave(
     val samplesNew = kept(slice).drop("url_hash", "links", "text_len").where(col("ok"))
     val errorsNew = kept(slice).drop("url_hash", "links", "text_len").where(!col("ok"))
 
-    // 5. frontier DELTA: wave slice × excluded only — the full frontier
+    // frontier DELTA: wave slice × excluded only — the full frontier
     // is never rescanned or rewritten per wave
     val frontierDelta = {
       val base =
@@ -1006,12 +1016,12 @@ final class CrawlWave(
     import scala.concurrent.Future
     import scala.concurrent.ExecutionContext.Implicits.global
 
-    // 6. commit — EVERYTHING below (blob rebuild, table writes, manifest
+    // commit — EVERYTHING below (blob rebuild, table writes, manifest
     // publish) rides the pipelined commit and overlaps the next wave's
     // compute; the publishes stay strictly ordered (each awaits its
     // predecessor). The next wave reading a not-yet-updated `blobState`
     // is sound: planned waves are URL-disjoint (see the guard comment).
-    val parent = awaitPending().getOrElse(v)
+    val parent = flush()
     // the crawl's final wave reconciles the frontier in its commit; the
     // last wave of a generation discovery may extend does not (see
     // mayGrow) — the crawl then reconciles once, at its end
@@ -1024,8 +1034,8 @@ final class CrawlWave(
       // from a pre-predecessor base would permanently drop the previous
       // wave's keys from every partition of the REPLACED seen_bloom
       // table — a future false NEGATIVE, the one unacceptable seen-set
-      // error. doCommit always runs after awaitPending() (both paths),
-      // so blobState here is exactly the predecessor's merge result.
+      // error. doCommit always runs after flush(), so blobState here is
+      // exactly the predecessor's merge result.
       val baseBlobs: Array[(Int, Array[Byte])] =
         if (blobState != null) blobState else blobs
       val rebuildBc =
@@ -1063,7 +1073,7 @@ final class CrawlWave(
       // when a wave skipped a table's write. samples/errors stay out —
       // their volume lives in scratch ViewRefs by design (squash
       // refuses view-bearing tables). Reading the tails of `parent` is
-      // safe here: doCommit runs after awaitPending(), so the parent
+      // safe here: doCommit runs after flush(), so the parent
       // manifest is published and its data dirs are immutable.
       val doSquash = cfg.compactSeenEvery > 0 &&
         seenTailDirs + 1 >= cfg.compactSeenEvery
@@ -1122,24 +1132,17 @@ final class CrawlWave(
     }
 
     nextWave += 1
-    val committed =
-      if (cfg.pipelineCommits && !isLast) {
-        pending = Some(Future(doCommit()))
-        parent + 1 // deterministic: commit publishes exactly this version
-      } else doCommit()
-    if (isLast) cleanup()
-    Some(committed)
+    if (isLast) { doCommit(); cleanup() }
+    else pending = Some(Future(doCommit()))
+    true
   }
 
-  /** Drive waves to drain (or maxWaves); returns the final version —
-    * the latest, since the drain may end in a reconcile-only commit.
-    * It is always PUBLISHED: the drain path awaits the pipelined commit
-    * inside step(), and the maxWaves-cap exit awaits it here. */
+  /** Drive waves to drain; returns the final published version — the
+    * latest, since the drain may end in a reconcile-only commit. A
+    * driver that wants N waves calls [[step]] N times, then [[flush]]. */
   def runAll(seeds: DataFrame): Int = {
     init(seeds)
-    var k = 0
-    while (k < cfg.maxWaves && step().isDefined) k += 1
-    awaitPending() // cap exit: the last wave's commit may be in flight
-    store.latestVersion.get
+    while (step()) {}
+    flush()
   }
 }

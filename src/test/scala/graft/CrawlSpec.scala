@@ -104,7 +104,7 @@ class CrawlSpec extends AnyFunSuite {
     // re-offering the whole seed list schedules nothing new
     val pages = Fixtures.pages(spark, dir).toDF
     val cw = new CrawlWave(spark, pages, store, cfg(4))
-    assert(cw.step().isEmpty)
+    assert(!cw.step())
   }
 
   test("all alive samples are byte-identical to the golden text column") {
@@ -136,6 +136,10 @@ class CrawlSpec extends AnyFunSuite {
     val cw1 = new CrawlWave(spark, pages, st, cfg(4))
     cw1.init(Fixtures.seeds(spark, dir))
     cw1.step(); cw1.step()
+    // the second wave's commit is in flight until flush() publishes it
+    val published = cw1.flush()
+    assert(st.latestVersion.contains(published))
+    assert(st.manifest(published).nonEmpty)
     // phase 2: a brand-new engine over the same store resumes
     val cw2 = new CrawlWave(spark, pages, st, cfg(4))
     cw2.runAll(Fixtures.seeds(spark, dir))
@@ -156,29 +160,18 @@ class CrawlSpec extends AnyFunSuite {
     assert(waves(st2) == waves(store))
   }
 
-  test("pipelined commits produce the identical crawl (async flush, ordered publishes)") {
+  test("pipelined commits: final bloom blobs answer every seen key") {
     import spark.implicits._
-    val root = Files.createTempDirectory("crawl-pipe-").toString
-    val st = new SnapshotTable(spark, root)
-    val pages = Fixtures.pages(spark, dir).toDF.cache()
-    new CrawlWave(spark, pages, st, cfg(4).copy(pipelineCommits = true))
-      .runAll(Fixtures.seeds(spark, dir))
-    pages.unpersist()
-    def key(s: SnapshotTable) = s.readLatest("frontier").get
-      .select("seq", "state", "wave").as[(Long, String, Int)].collect().toSet
-    assert(key(st) == key(store))
-    assert(st.readLatest("samples").get.count() ==
-      store.readLatest("samples").get.count())
     // no-false-negative invariant over the PIPELINED blob chain: every
     // exactly-seen key must be answered by the final REPLACED seen_bloom
     // — a rebuild from a stale (pre-predecessor) base silently drops the
     // previous wave's keys from every partition
     val c = cfg(4)
-    val blobMap = st.readLatest("seen_bloom").get
+    val blobMap = store.readLatest("seen_bloom").get
       .as[(Int, Array[Byte])].collect()
       .map { case (p, b) => p -> graft.frontier.SeenFilter.deserialize(c.seenFilter, b) }
       .toMap
-    val missing = st.readLatest("seen").get.select("url_hash").as[Long].collect()
+    val missing = store.readLatest("seen").get.select("url_hash").as[Long].collect()
       .count { h =>
         val p = java.lang.Math.floorMod(h, c.seenPartitions.toLong).toInt
         !blobMap.get(p).exists(_.mightContain(h))
@@ -584,13 +577,31 @@ class CrawlSpec extends AnyFunSuite {
     // the commit before it is generation 1's last wave, unreconciled
     assert(discStore.metricsOf(latest - 1).get("reconciled").contains(0L))
     assert(discStore.metricsOf(latest - 1)("wave") == m("wave"))
-    // rerun over the finished store: drained, reconciled — no new version
-    val pages = Fixtures.pages(spark, dir).toDF.cache()
-    assert(new CrawlWave(spark, pages, discStore,
-      cfg(4).copy(discover = true, maxGenerations = 3))
-      .runAll(Fixtures.seeds(spark, dir)) == latest)
+    // rerun over the finished store: drained, reconciled — no new
+    // version, and decided from the manifest alone: discovery does not
+    // run again, so the rerun starts no Spark job
+    val pages = Fixtures.pages(spark, dir).toDF
+    val seeds = Fixtures.seeds(spark, dir)
+    val sc = spark.sparkContext
+    def inGroup[T](group: String)(body: => T): T = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+    val rerun = inGroup("reconcile-only-rerun") {
+      new CrawlWave(spark, pages, discStore,
+        cfg(4).copy(discover = true, maxGenerations = 3)).runAll(seeds)
+    }
+    // a one-job sentinel after it: the status listener sees jobs in start
+    // order, so once the sentinel is listed every rerun job is too
+    inGroup("reconcile-only-sentinel")(sc.parallelize(Seq(0), 1).count())
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (sc.statusTracker.getJobIdsForGroup("reconcile-only-sentinel").isEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(50)
+    assert(sc.statusTracker.getJobIdsForGroup("reconcile-only-sentinel").nonEmpty)
+    val jobs = sc.statusTracker.getJobIdsForGroup("reconcile-only-rerun")
+    assert(rerun == latest)
     assert(discStore.latestVersion.contains(latest))
-    pages.unpersist()
+    assert(jobs.isEmpty, s"the rerun started ${jobs.length} Spark jobs")
   }
 
   test("seen deltas: fewer files than seen partitions, each sorted by part") {
@@ -630,33 +641,18 @@ class CrawlSpec extends AnyFunSuite {
     assert(f.where(col("state").startsWith("dropped")).count() == 2)
   }
 
-  test("pipelined commit is published when runAll exits on the maxWaves cap") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("crawl-cap-").toString
-    val st = new SnapshotTable(spark, root)
-    val pages = Fixtures.pages(spark, dir).toDF.cache()
-    val v = new CrawlWave(spark, pages, st,
-      cfg(4).copy(pipelineCommits = true, maxWaves = 2))
-      .runAll(Fixtures.seeds(spark, dir))
-    pages.unpersist()
-    // the cap exit awaits the in-flight commit: the returned version
-    // must already be PUBLISHED (manifest on disk, latest tracks it)
-    assert(st.latestVersion.contains(v))
-    assert(st.manifest(v).nonEmpty)
-  }
-
   test("kitchen sink: every scale feature at once equals the plain discovery run") {
     import spark.implicits._
-    // discovery + pipelined commits + compaction + expiration + cuckoo
-    // seen-filter + two-phase rank TOGETHER: the interactions (expire
-    // at each generation's reconcile, squash under pipelining, cuckoo
-    // blob rebuilds across async commits) are where independent
-    // features would break each other
+    // discovery + compaction + expiration + cuckoo seen-filter +
+    // two-phase rank TOGETHER: the interactions (expire at each
+    // generation's reconcile, squash under pipelining, cuckoo blob
+    // rebuilds across async commits) are where independent features
+    // would break each other
     val root = Files.createTempDirectory("crawl-sink-").toString
     val st = new SnapshotTable(spark, root)
     val pages = Fixtures.pages(spark, dir).toDF.cache()
     val c = cfg(4).copy(discover = true, maxGenerations = 3,
-      pipelineCommits = true, compactSeenEvery = 2, expireKeep = 2,
+      compactSeenEvery = 2, expireKeep = 2,
       seenFilter = "cuckoo", scalableRank = true)
     val v = new CrawlWave(spark, pages, st, c).runAll(Fixtures.seeds(spark, dir))
     def key(s: SnapshotTable) = s.readLatest("frontier").get
@@ -690,7 +686,8 @@ class CrawlSpec extends AnyFunSuite {
     cw1.init(Fixtures.seeds(spark, dir))
     var steps = 0
     val seedMaxWave = st.metricsOf(1).getOrElse("max_wave", -1L).toInt
-    while (steps < seedMaxWave + 1 + 2 && cw1.step().isDefined) steps += 1
+    while (steps < seedMaxWave + 1 + 2 && cw1.step()) steps += 1
+    cw1.flush()
     // a FRESH engine over the same store finishes the crawl
     new CrawlWave(spark, pages, st, c).runAll(Fixtures.seeds(spark, dir))
     pages.unpersist()
@@ -898,7 +895,7 @@ class CrawlSpec extends AnyFunSuite {
     }
 
     // trial 3 runs the scale-feature config (cuckoo seen-filter,
-    // two-phase host rank, pipelined commits, compaction) — none of
+    // two-phase host rank, compaction) — none of
     // which may change semantics, so the same model must still agree;
     // trial 4 turns the S8 FTP branch on (ftp rows schedule and fetch,
     // the image-ext skip stays http-only)
@@ -928,7 +925,7 @@ class CrawlSpec extends AnyFunSuite {
 
     val configs = Seq(cfg(4), cfg(4),
       cfg(4).copy(seenFilter = "cuckoo", scalableRank = true,
-        pipelineCommits = true, compactSeenEvery = 2),
+        compactSeenEvery = 2),
       cfg(4).copy(fetchFtp = true))
     for ((trialCfg, trial0) <- configs.zipWithIndex) {
       val trial = trial0 + 1
@@ -960,8 +957,8 @@ class CrawlSpec extends AnyFunSuite {
       cw.init(seeds)
       var crashed = false
       var prevKeep = 0L
-      while (!crashed && cw.step().isDefined) {
-        val v = st.latestVersion.get
+      while (!crashed && cw.step()) {
+        val v = cw.flush()
         val keep = st.metricsOf(v).getOrElse("seen_keep_dirs", 0L)
         if (keep > prevKeep) { // this commit squashed: lose its publish
           Files.delete(java.nio.file.Paths.get(root, "manifests", f"v$v%05d.json"))
@@ -988,8 +985,9 @@ class CrawlSpec extends AnyFunSuite {
   // of SnapshotSpec's store-op interleaving fuzz: the north-rule resume
   // contract says a crash at ANY point loses nothing.
 
-  /** Config for the sweep: sync commits (deterministic crash boundaries)
-    * with discovery + compaction + expiration active. The wave period is
+  /** Config for the sweep: discovery + compaction + expiration active
+    * (the sweep flushes after every step, so each crash boundary is a
+    * published commit). The wave period is
     * doubled vs `cfg` — the sweep's cost is quadratic in the step count
     * (k steps to reach crash point k, then the resume run finishes the
     * remaining K-k), and multi-wave + multi-generation coverage survives
@@ -1025,7 +1023,7 @@ class CrawlSpec extends AnyFunSuite {
     val probe = new CrawlWave(spark, pages, new SnapshotTable(spark, probeRoot), sweepCfg)
     probe.init(seeds)
     var totalSteps = 0
-    while (probe.step().isDefined) totalSteps += 1
+    while (probe.step()) totalSteps += 1
     assert(totalSteps >= 4, s"sweep needs a multi-wave crawl, got $totalSteps steps")
 
     for (k <- 1 until totalSteps) {
@@ -1034,7 +1032,7 @@ class CrawlSpec extends AnyFunSuite {
       val cw = new CrawlWave(spark, pages, st, sweepCfg)
       cw.init(seeds)
       var i = 0
-      while (i < k && cw.step().isDefined) i += 1
+      while (i < k && cw.step()) { cw.flush(); i += 1 }
       // crash shape alternates: even k crashes AT the boundary (latest
       // commit published); odd k crashes INSIDE the next commit — the
       // newest manifest is unpublished (deleted), its data dirs remain
