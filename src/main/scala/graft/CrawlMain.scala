@@ -113,7 +113,12 @@ object CrawlMain {
         case "--partitions" => partitions = Some(posIntValue("--partitions")); i += 2
         case "--wave-period-ms" => wavePeriodMs = numValue("--wave-period-ms"); i += 2
         case "--agent" => agent = value("--agent"); i += 2
-        case "--seen-filter" => seenFilter = value("--seen-filter"); i += 2
+        case "--seen-filter" =>
+          seenFilter = value("--seen-filter")
+          // here, not at the first commit: that runs after init's writes
+          if (seenFilter != "bloom" && seenFilter != "cuckoo")
+            bad(s"--seen-filter must be bloom or cuckoo, got '$seenFilter'")
+          i += 2
         case "--seen-partitions" =>
           seenPartitionsOpt = Some(posIntValue("--seen-partitions")); i += 2
         case "--bloom-bits-per-partition" =>
@@ -207,7 +212,6 @@ object CrawlMain {
               s"$seenBudgetMb MB and cannot run under-provisioned (an over-full " +
               "table degrades to an unbounded stash) — raise --seen-budget-mb " +
               "or use --seen-filter bloom, which degrades gracefully under a cap")
-        case other => bad(s"unknown seen filter: $other")
       }
       println(s"GRAFT_SEEN_LAYOUT kind=$seenFilter parts=$seenPartitions " +
         (if (seenFilter == "bloom") s"bloom_bits_per_partition=$bloomBits hashes=$bloomHashes"

@@ -27,9 +27,11 @@ import org.apache.spark.sql.functions._
   *    politeness windows via the live engine) are cross-checked against
   *    INDEPENDENT SQL re-implementations in the oracle — not the same
   *    code path;
-  *  - non-SQL-expressible ops (MinHash/SimHash/LSH, rendering,
-  *    feature extraction, winnowing, ELM) are rows-only entries, each
-  *    property-tested in ScalaTest instead.
+  *  - the sketch ops (MinHash/SimHash/LSH/winnowing) hash with md5
+  *    ([[graft.ops.PortableHash]]), so their oracles recompute every
+  *    signature in SQL;
+  *  - the one rows-only entry, `extract_features_full` (the whole
+  *    feature vector), is property-tested in ScalaTest instead.
   */
 object SparkEntry {
 
@@ -1032,14 +1034,14 @@ object SparkEntry {
           |  SELECT r.id, e2.nb FROM reach r JOIN e e2 ON r.nb = e2.id)
           |SELECT id AS doc_id, min(nb) AS cluster_id FROM reach GROUP BY id""".stripMargin)),
 
-    // MinHash+LSH with the PORTABLE md5 signature (16 hashes = 4×4
-    // bands): the oracle recomputes the same signatures, the same
+    // MinHash+LSH with the md5 signature (16 hashes = 4×4 bands): the
+    // oracle recomputes the same signatures, the same
     // shared-full-band candidate rule and the same slot-agreement
     // estimate in DuckDB — deterministic equality, not a recall bound.
     "dedup_minhash_lsh" -> Q(
       (s, dir) => {
         reg(s, dir)
-        Dedup.minhashLshPairsPortable(s.table("documents"), threshold = 0.3)
+        Dedup.minhashLshPairs(s.table("documents"), threshold = 0.3)
       },
       Some {
         val sigCols = (0 until 16).map(j =>
@@ -1065,7 +1067,7 @@ object SparkEntry {
       }),
 
     // SimHash at maxHamming=3, where the 4×16-bit banding is provably
-    // exact (pigeonhole) — and with the PORTABLE md5 per-token hash, so
+    // exact (pigeonhole) — and with the md5 per-token hash, so
     // DuckDB recomputes the very fingerprints and the oracle is the
     // plain all-pairs Hamming filter (sound AND complete).
     "dedup_simhash" -> Q(
@@ -1078,7 +1080,7 @@ object SparkEntry {
         Dedup.simhashPairs(
           s.table("documents")
             .where(expr("size(filter(split(text, ' '), w -> w <> '')) > 0")),
-          maxHamming = 3, portable = true)
+          maxHamming = 3)
           .select(col("a_id"), col("b_id"), col("hamming").cast("long").as("hamming"))
       },
       Some(
@@ -1122,16 +1124,16 @@ object SparkEntry {
           |FROM e a JOIN e b ON a.vec_id < b.vec_id
           |WHERE list_cosine_similarity(a.v, b.v) >= 0.4""".stripMargin)),
 
-    // sign-LSH near-dup with PORTABLE Rademacher planes (md5-derived ±1
+    // sign-LSH near-dup with Rademacher planes (md5-derived ±1
     // components, integer-micro dot products — Ann.rademacherPlanes /
-    // signaturePortable): DuckDB recomputes the very signatures, so the
+    // Ann.signature): DuckDB recomputes the very signatures, so the
     // oracle is the exact bucketed-candidate + cosine-threshold rule,
     // not a recall bound.
     "dedup_embedding_lsh" -> Q(
       (s, dir) => {
         reg(s, dir)
         Dedup.embeddingNearDupLsh(s.table("embeddings"), threshold = 0.3,
-          nBits = 4, tables = 8, portable = true)
+          nBits = 4, tables = 8)
       },
       Some(
         s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> cast(x as double)) AS v FROM embeddings),
@@ -1173,15 +1175,14 @@ object SparkEntry {
           |SELECT query_id, cand_id, rank, cast(round(cosine * 1000000, 0) as bigint) AS cosine_micro
           |FROM r WHERE rank <= 10""".stripMargin)),
 
-    // ANN LSH with the same portable planes (tag "ann"), multi-probe at
+    // ANN LSH with the same md5 planes (tag "ann"), multi-probe at
     // Hamming ≤ 1 — oracle recomputes signatures, probing, candidate
     // set and the exact per-query top-k over candidates.
     "ann_lsh_topk" -> Q(
       (s, dir) => {
         reg(s, dir)
         val e = s.table("embeddings")
-        Ann.lshTopK(e, e.where(col("vec_id") % 100 === 0), k = 10, probes = 2,
-          portable = true)
+        Ann.lshTopK(e, e.where(col("vec_id") % 100 === 0), k = 10, probes = 2)
       },
       Some(
         s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> cast(x as double)) AS v FROM embeddings),
@@ -1299,14 +1300,14 @@ object SparkEntry {
           |  cast(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]', 0)) as bigint) AS bpe_tokens
           |FROM documents""".stripMargin)),
 
-    // winnowing with the portable md5 gram hash: the oracle re-runs the
+    // winnowing with the md5 gram hash: the oracle re-runs the
     // window-min selection in SQL (min OVER a w-row frame; rn<=ng-w+1
     // restricts to fully-inside windows, with the whole-text fallback
     // for short gram sequences) and md5s the sorted selection.
     "fingerprints" -> Q(
       (s, dir) => {
         reg(s, dir)
-        TextAnalysis.fingerprintsPortable(s.table("documents"))
+        TextAnalysis.fingerprints(s.table("documents"))
       },
       Some(
         """WITH x AS (SELECT doc_id, text, unnest(generate_series(1, greatest(length(text) - 7, 1))) AS i FROM documents),

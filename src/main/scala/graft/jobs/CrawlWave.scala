@@ -358,6 +358,11 @@ final class CrawlWave(
   import CrawlWave._
   import spark.implicits._
 
+  // checked before init writes anything: the kind is first read by the
+  // init commit's metrics, which are evaluated after its table writes
+  require(cfg.seenFilter == "bloom" || cfg.seenFilter == "cuckoo",
+    s"unknown seen filter: ${cfg.seenFilter}")
+
   /** The fetch seam ([[Fetcher]]): default = the bucketed page-store
     * join; pass a [[TransportFetcher]] to crawl live instead (the pages
     * table is then only the golden-fixture source and may be empty). */
@@ -617,11 +622,7 @@ final class CrawlWave(
     * (recrawl of done URLs), the one error the seen-set contract rules
     * out. [[ensurePlan]] fails fast on any mismatch instead. */
   private def layoutMetrics: Map[String, Long] = {
-    val kindCode = cfg.seenFilter match {
-      case "bloom"  => 0L
-      case "cuckoo" => 1L
-      case other    => throw new IllegalArgumentException(s"unknown seen filter: $other")
-    }
+    val kindCode = if (cfg.seenFilter == "bloom") 0L else 1L
     Map("seen_parts" -> cfg.seenPartitions.toLong, "seen_kind" -> kindCode) ++
       (if (cfg.seenFilter == "bloom")
         Map("bloom_bits" -> cfg.bloomBitsPerPartition.toLong,

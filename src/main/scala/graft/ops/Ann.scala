@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   *    filter plan performs with AQE).
   *  - [[lshTopK]]: random-hyperplane (sign) LSH — corpus and queries are
   *    bucketed by an `nBits`-bit signature; only same-bucket candidates
-  *    are scored. Hyperplanes are derived deterministically from
-  *    splitmix64, so results are reproducible with no stored model.
+  *    are scored. Hyperplanes are ±1 (Rademacher) components derived
+  *    from md5 ([[PortableHash]]), so results are reproducible with no
+  *    stored model and DuckDB recomputes every signature.
   *    Multi-probe: queries are also matched at Hamming distance ≤ 1 to
   *    recover near-boundary neighbours (`probes` > 1).
   *
@@ -64,18 +65,7 @@ object Ann {
         (round(col("cosine") * 1e6, 0)).cast("long").as("cosine_micro"))
   }
 
-  private def mix64(z0: Long): Long = PortableHash.mix64(z0)
-
-  /** Deterministic pseudo-gaussian hyperplanes: `nBits` planes of
-    * dimension `dim`, components in [-1, 1) from splitmix64. */
-  def hyperplanes(nBits: Int, dim: Int, seed: Long = 42L): Array[Array[Double]] =
-    Array.tabulate(nBits) { b =>
-      Array.tabulate(dim) { d =>
-        (mix64(seed ^ mix64(b.toLong << 32 | d.toLong)).toDouble / Long.MaxValue)
-      }
-    }
-
-  /** PORTABLE Rademacher hyperplanes ([[PortableHash]], md5): component
+  /** Rademacher sign-LSH planes ([[PortableHash]], md5): component
     * (b, d) is +1 when the first hex digit of md5("tag:b:d") is odd,
     * else -1 — reproducible in DuckDB as `strpos`/`substr` arithmetic.
     * ±1 planes are the standard derandomized sign-LSH family (random
@@ -88,30 +78,18 @@ object Ann {
       }
     }
 
-  /** Portable sign-LSH signature: bit b set when
-    * Σ_d plane(b,d) · floor(v_d · 1e6) ≥ 0. The dot product runs over
-    * EXACT int64 micro components (floor of the exact float→double
-    * product), so it is order-independent and bit-identical to a SQL
+  /** Sign-LSH signature of a vector under [[rademacherPlanes]]: bit b
+    * set when Σ_d plane(b,d) · floor(v_d · 1e6) ≥ 0, over EXACT int64
+    * micro components (floor of the exact float→double product), so the
+    * dot product is order-independent and bit-identical to a SQL
     * replica — no cross-engine float-summation knife edges at the sign
     * threshold. */
-  def signaturePortable(v: Array[Float], planes: Array[Array[Int]]): Int = {
+  def signature(v: Array[Float], planes: Array[Array[Int]]): Int = {
     var sig = 0; var b = 0
     while (b < planes.length) {
       val p = planes(b); var dot = 0L; var i = 0
       val n = math.min(v.length, p.length)
       while (i < n) { dot += p(i) * math.floor(v(i).toDouble * 1e6).toLong; i += 1 }
-      if (dot >= 0) sig |= (1 << b)
-      b += 1
-    }
-    sig
-  }
-
-  /** Sign-LSH signature of a vector under the shared hyperplanes. */
-  def signature(v: Array[Float], planes: Array[Array[Double]]): Int = {
-    var sig = 0; var b = 0
-    while (b < planes.length) {
-      val p = planes(b); var dot = 0.0; var i = 0
-      while (i < v.length && i < p.length) { dot += v(i) * p(i); i += 1 }
       if (dot >= 0) sig |= (1 << b)
       b += 1
     }
@@ -142,25 +120,16 @@ object Ann {
       probes: Int = 1,
       tables: Int = 4,
       idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      portable: Boolean = false): DataFrame = {
+      vecCol: String = "embedding"): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val planes = spark.sparkContext.broadcast(
-      if (portable) null
-      else Array.tabulate(tables)(t => hyperplanes(nBits, dim, seed = 42L + 1000L * t)))
-    val pPlanes = spark.sparkContext.broadcast(
-      if (portable) Array.tabulate(tables)(t => rademacherPlanes(nBits, dim, s"ann:$t"))
-      else null)
+      Array.tabulate(tables)(t => rademacherPlanes(nBits, dim, s"ann:$t")))
 
     def sigOf(df: DataFrame, id: String, vec: String, outId: String, outVec: String): DataFrame =
       df.select(col(id).cast("long"), col(vec)).as[(Long, Array[Float])]
         .flatMap { case (i, v) =>
-          (0 until tables).map { t =>
-            val s = if (portable) signaturePortable(v, pPlanes.value(t))
-                    else signature(v, planes.value(t))
-            (i, v, t, s)
-          }
+          (0 until tables).map(t => (i, v, t, signature(v, planes.value(t))))
         }
         .toDF(outId, outVec, "tbl", "sig")
 

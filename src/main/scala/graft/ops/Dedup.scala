@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for large-scale text corpora.
@@ -21,13 +21,16 @@ import org.apache.spark.sql.functions._
   *  - n-gram Jaccard: exact pairwise Jaccard restricted to LSH/band
   *    candidates (never the full cross product).
   *
+  * The sketch operators hash with md5 ([[PortableHash]]), so DuckDB
+  * recomputes their signatures and each has an exact SQL oracle.
+  *
   * At 100 TB the band-bucket `collect_list` is bounded by
   * `maxBucket`: oversized buckets are dropped SILENTLY BY POLICY — they
   * are degenerate near-identical clusters a production run routes to a
   * cluster-representative pass instead of pairwise expansion. The
   * consequence is a recall contract: the sketch operators' exactness
-  * claims (simhash Hamming ≤ 3 pigeonhole; the portable minhash/SQL
-  * equality) hold only while no band bucket exceeds `maxBucket` —
+  * claims (simhash Hamming ≤ 3 pigeonhole; the minhash/SQL equality)
+  * hold only while no band bucket exceeds `maxBucket` —
   * raise it (or pre-collapse exact duplicates) when a corpus can put
   * more than `maxBucket` near-identical documents in one bucket.
   *
@@ -44,22 +47,18 @@ object Dedup {
 
   // ---------------------------------------------------------------- MinHash
 
-  /** splitmix64 finalizer — deterministic per-index hash constants
-    * (shared single copy: [[PortableHash.mix64]]). */
-  private def mix64(z0: Long): Long = PortableHash.mix64(z0)
-
   /** Within-bucket ordered pair expansion over a `members` array of
     * `struct(id, …)`: members[i] × members[j > i] → one `p` =
     * struct(a_id, b_id, <payload>) row per pair, with least/greatest
     * ids and `payload` fields projected from the `x`/`y` sides. ONE
     * copy of the slice arithmetic every bucketed operator shares
-    * (minhash ×2, simhash, embedding LSH).
+    * (minhash, simhash, embedding LSH).
     *
     * TWO chained generators, not one flattened array: a single
     * flatten(transform(...)) materializes all C(n,2) pair structs —
     * each carrying both payloads — inside ONE row value before the
     * explode can stream them (~4 GB at the documented maxBucket=2000
-    * with 128-slot signatures). posexplode-then-slice keeps per-row
+    * with 1 KB payloads). posexplode-then-slice keeps per-row
     * memory at O(n·payload). */
   private def pairExpand(buckets: DataFrame, payload: String): DataFrame =
     buckets
@@ -69,101 +68,10 @@ object Dedup {
            |  struct(least(x.id, y.id) as a_id, greatest(x.id, y.id) as b_id,
            |         $payload))""".stripMargin)).as("p"))
 
-  /** Distinct char k-shingles of a text, each hashed to a Long. */
-  def shingleHashes(text: String, k: Int): Array[Long] = {
-    if (text.length < k) return Array(mix64(text.hashCode.toLong))
-    val seen = new java.util.HashSet[Long]()
-    var i = 0
-    while (i <= text.length - k) {
-      // polynomial rolling-style hash of the k chars, finalized
-      var h = 1125899906842597L
-      var j = i
-      while (j < i + k) { h = 31 * h + text.charAt(j); j += 1 }
-      seen.add(mix64(h))
-      i += 1
-    }
-    val out = new Array[Long](seen.size)
-    val it = seen.iterator(); var n = 0
-    while (it.hasNext) { out(n) = it.next(); n += 1 }
-    out
-  }
-
-  /** MinHash signature of a shingle-hash set: sig(i) = min over shingles
-    * of mix64(shingle ^ seed_i). Row-local, no shuffle. */
-  def minhashSignature(shingles: Array[Long], numHashes: Int): Array[Long] = {
-    val sig = Array.fill(numHashes)(Long.MaxValue)
-    var s = 0
-    while (s < shingles.length) {
-      val h = shingles(s)
-      var i = 0
-      while (i < numHashes) {
-        val v = mix64(h ^ mix64(i.toLong))
-        if (v < sig(i)) sig(i) = v
-        i += 1
-      }
-      s += 1
-    }
-    sig
-  }
-
-  /** Estimated Jaccard from two signatures = fraction of agreeing slots. */
-  def sigJaccard(a: Array[Long], b: Array[Long]): Double = {
-    var eq = 0; var i = 0
-    while (i < a.length) { if (a(i) == b(i)) eq += 1; i += 1 }
-    eq.toDouble / a.length
-  }
-
-  /** MinHash+LSH near-dup candidate pairs with signature-estimated
-    * Jaccard ≥ `threshold`.
-    *
-    * Pipeline: shingle→minhash (narrow map) → explode `bands` band keys
-    * → groupBy band bucket (shuffle 1, near-uniform keys) → pairwise
-    * within bucket (bounded by `maxBucket`) → distinct pairs (shuffle 2)
-    * → estimate Jaccard from the signatures carried with the pair.
-    * Output: (a_id, b_id, est_jaccard) with a_id < b_id.
-    */
-  def minhashLshPairs(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      shingleK: Int = 5,
-      numHashes: Int = 128,
-      bands: Int = 16,
-      threshold: Double = 0.5,
-      maxBucket: Int = 2000): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rowsPerBand = numHashes / bands
-
-    val sigs = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
-      .as[(Long, String)]
-      .map { case (id, t) => (id, minhashSignature(shingleHashes(t, shingleK), numHashes)) }
-      .toDF("id", "sig")
-
-    val banded = sigs.select(col("id"), col("sig"),
-      explode(sequence(lit(0), lit(bands - 1))).as("band"))
-      .select(col("id"), col("sig"), col("band"),
-        xxhash64(col("band"), slice(col("sig"), col("band") * rowsPerBand + 1, lit(rowsPerBand))).as("bucket"))
-
-    val buckets = banded.groupBy("band", "bucket")
-      .agg(collect_list(struct(col("id"), col("sig"))).as("members"))
-      .where(size(col("members")).between(2, maxBucket))
-
-    val pairs = pairExpand(buckets, "x.sig as sa, y.sig as sb")
-      .select(col("p.a_id"), col("p.b_id"), col("p.sa"), col("p.sb"))
-      .dropDuplicates("a_id", "b_id")
-
-    pairs.as[(Long, Long, Array[Long], Array[Long])]
-      .map { case (a, b, sa, sb) => (a, b, sigJaccard(sa, sb)) }
-      .toDF("a_id", "b_id", "est_jaccard")
-      .where(col("est_jaccard") >= threshold)
-  }
-
   /** Distinct char k-shingles as STRINGS, mirroring the SQL replica
     * exactly: `substr(text, i, k)` for i in 1..max(len-k+1, 1) — a
     * text shorter than k yields its whole self (one short gram). */
-  def portableShingles(text: String, k: Int): Array[String] = {
+  def shingles(text: String, k: Int): Array[String] = {
     val n = math.max(text.length - k + 1, 1)
     val seen = new java.util.LinkedHashSet[String]()
     var i = 0
@@ -174,11 +82,12 @@ object Dedup {
     seen.toArray(new Array[String](seen.size))
   }
 
-  /** PORTABLE MinHash signature: slot j = lexicographic min over grams
-    * of md5Hex(s"$j:$gram") ([[PortableHash]]). Hex-string order equals
-    * DuckDB varchar order (ASCII), so `min(md5(j || ':' || gram))` in
-    * SQL reproduces every slot byte-for-byte. */
-  def minhashSignatureMd5(grams: Array[String], numHashes: Int): Array[String] = {
+  /** MinHash signature: slot j = lexicographic min over grams of
+    * md5Hex(s"$j:$gram") ([[PortableHash]]). Row-local, no shuffle.
+    * Hex-string order equals DuckDB varchar order (ASCII), so
+    * `min(md5(j || ':' || gram))` in SQL reproduces every slot
+    * byte-for-byte. */
+  def minhashSignature(grams: Array[String], numHashes: Int): Array[String] = {
     val sig = new Array[String](numHashes)
     var g = 0
     while (g < grams.length) {
@@ -193,14 +102,22 @@ object Dedup {
     sig
   }
 
-  /** [[minhashLshPairs]] with the portable md5 signature — DETERMINISTIC
-    * equality with its SQL replica, not just probabilistic recall: both
-    * engines compute the same signatures, the same candidate rule (a
-    * fully-equal band), and the same slot-agreement estimate, so the
-    * driver oracle is an exact all-pairs formulation of this exact
-    * operator. Fewer hashes (16 = 4 bands × 4 rows) keep the SQL side
-    * tractable; the scale shape is identical to [[minhashLshPairs]]. */
-  def minhashLshPairsPortable(
+  /** MinHash+LSH near-dup candidate pairs whose signatures agree on at
+    * least `threshold` of their slots.
+    *
+    * Pipeline: shingle→minhash (narrow map) → explode `bands` band keys
+    * → groupBy band bucket (shuffle 1, near-uniform keys) → pairwise
+    * within bucket (bounded by `maxBucket`) → distinct pairs (shuffle 2)
+    * → slot agreement of the signatures carried with the pair.
+    * Output: (a_id, b_id, est_jaccard_micro) with a_id < b_id.
+    *
+    * DETERMINISTIC equality with its SQL replica, not just probabilistic
+    * recall: both engines compute the same md5 signatures, the same
+    * candidate rule (a fully-equal band), and the same slot-agreement
+    * estimate, so the driver oracle is an exact all-pairs formulation
+    * of this operator. Few hashes (16 = 4 bands × 4 rows) keep the SQL
+    * side tractable. */
+  def minhashLshPairs(
       docs: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
@@ -217,7 +134,7 @@ object Dedup {
     val sigs = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
       .as[(Long, String)]
       .map { case (id, t) =>
-        (id, minhashSignatureMd5(portableShingles(t, shingleK), numHashes))
+        (id, minhashSignature(shingles(t, shingleK), numHashes))
       }
       .toDF("id", "sig")
 
@@ -245,40 +162,14 @@ object Dedup {
 
   // ---------------------------------------------------------------- SimHash
 
-  /** 64-bit SimHash over whitespace tokens (unit weights). Row-local. */
+  /** 64-bit SimHash over whitespace tokens (unit weights; split on ' ',
+    * empties skipped; majority bit, ties → 0). Row-local. The per-token
+    * hash is md5 ([[PortableHash]]): bit i (0..63) of a token's
+    * contribution is bit (i mod 4) of hex digit (i div 4) of
+    * md5(token) — exactly replicable in DuckDB SQL (`strpos`/`substr`
+    * digit arithmetic + `>>`), which is what lets the driver oracle the
+    * simhash operator end-to-end. */
   def simhash64(text: String): Long = {
-    val counts = new Array[Int](64)
-    var start = 0; val n = text.length
-    while (start < n) {
-      while (start < n && text.charAt(start) == ' ') start += 1
-      var end = start
-      while (end < n && text.charAt(end) != ' ') end += 1
-      if (end > start) {
-        var h = 1125899906842597L
-        var j = start
-        while (j < end) { h = 31 * h + text.charAt(j); j += 1 }
-        h = mix64(h)
-        var bit = 0
-        while (bit < 64) {
-          if (((h >>> bit) & 1L) == 1L) counts(bit) += 1 else counts(bit) -= 1
-          bit += 1
-        }
-      }
-      start = end + 1
-    }
-    var sig = 0L; var bit = 0
-    while (bit < 64) { if (counts(bit) > 0) sig |= (1L << bit); bit += 1 }
-    sig
-  }
-
-  /** [[simhash64]] with the PORTABLE per-token hash ([[PortableHash]],
-    * md5): bit i (0..63) of a token's contribution is bit (i mod 4) of
-    * hex digit (i div 4) of md5(token) — exactly replicable in DuckDB
-    * SQL (`strpos`/`substr` digit arithmetic + `>>`), which is what lets
-    * the driver oracle the simhash operator end-to-end. ~5-10× slower
-    * than [[simhash64]]; same tokenization (split on ' ', empties
-    * skipped), same majority-bit rule (ties → 0). */
-  def simhash64Md5(text: String): Long = {
     val counts = new Array[Int](64)
     var start = 0; val n = text.length
     while (start < n) {
@@ -308,20 +199,18 @@ object Dedup {
     * contract; a corpus with more than `maxBucket` near-identical
     * documents needs a larger cap or an exact-dedup pre-pass). Beyond
     * Hamming 3 recall is partial (candidates must still collide on a
-    * band). `portable = true` switches the fingerprint to
-    * [[simhash64Md5]] so a SQL oracle can recompute it. */
+    * band). */
   def simhashPairs(
       docs: DataFrame,
       idCol: String = "doc_id",
       textCol: String = "text",
       maxHamming: Int = 3,
-      maxBucket: Int = 2000,
-      portable: Boolean = false): DataFrame = {
+      maxBucket: Int = 2000): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val sigs = docs.select(col(idCol).cast("long").as("id"), col(textCol).as("t"))
       .as[(Long, String)]
-      .map { case (id, t) => (id, if (portable) simhash64Md5(t) else simhash64(t)) }
+      .map { case (id, t) => (id, simhash64(t)) }
       .toDF("id", "sig")
 
     val banded = sigs.select(col("id"), col("sig"),
@@ -386,7 +275,8 @@ object Dedup {
   }
 
   /** Embedding-cosine near-dup at scale: sign-LSH bucketing (L tables ×
-    * nBits hyperplane signs, [[Ann.hyperplanes]]) proposes candidate
+    * nBits hyperplane signs, [[Ann.rademacherPlanes]] tagged `emb:t`,
+    * [[Ann.signature]]) proposes candidate
     * pairs — only same-bucket vectors ever meet — then the EXACT cosine
     * filters at `threshold`, so precision is 1.0 and only recall depends
     * on the sketch (property-tested vs [[embeddingNearDupExact]] in
@@ -400,23 +290,14 @@ object Dedup {
       dim: Int = 64,
       maxBucket: Int = 2000,
       idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      portable: Boolean = false): DataFrame = {
+      vecCol: String = "embedding"): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     val planes = spark.sparkContext.broadcast(
-      if (portable) null
-      else Array.tabulate(tables)(t => Ann.hyperplanes(nBits, dim, seed = 77L + 1000L * t)))
-    val pPlanes = spark.sparkContext.broadcast(
-      if (portable) Array.tabulate(tables)(t => Ann.rademacherPlanes(nBits, dim, s"emb:$t"))
-      else null)
+      Array.tabulate(tables)(t => Ann.rademacherPlanes(nBits, dim, s"emb:$t")))
     val sigs = emb.select(col(idCol).cast("long"), col(vecCol)).as[(Long, Array[Float])]
       .flatMap { case (i, v) =>
-        (0 until tables).map { t =>
-          val s = if (portable) Ann.signaturePortable(v, pPlanes.value(t))
-                  else Ann.signature(v, planes.value(t))
-          (i, v, t, s)
-        }
+        (0 until tables).map(t => (i, v, t, Ann.signature(v, planes.value(t))))
       }.toDF("id", "v", "tbl", "sig")
     val buckets = sigs.groupBy("tbl", "sig")
       .agg(collect_list(struct(col("id"), col("v"))).as("members"))

@@ -3,27 +3,27 @@ package graft.ops
 /** Hashing whose results are reproducible in PLAIN SQL in both Spark
   * and DuckDB (`md5` hex + per-hex-digit arithmetic) — the foundation
   * that lets the sketch-family operators (MinHash/SimHash/LSH/winnowing)
-  * and fixture rules be verified by the driver's DuckDB oracle instead
-  * of staying rows-only.
+  * and fixture rules be verified by the driver's DuckDB oracle.
   *
   * DuckDB raises on BIGINT overflow, so splitmix-style wrapping
-  * multiplies cannot be replicated there; md5 is the one 64-bit-quality
+  * multiplies cannot be replicated there without HUGEINT arithmetic;
+  * md5 is the one 64-bit-quality
   * hash both engines share. Values are consumed either as the full hex
   * string (lexicographic min — a valid uniform order for MinHash) or as
   * small integers assembled from a few hex digits (bit/bucket
   * derivations), both expressible as `substr`/`strpos` arithmetic.
   *
-  * Throughput note: md5 is ~5-10× slower than splitmix64; the engine
-  * operators keep their fast mix64 defaults and take these portable
-  * variants behind a parameter used by the oracle-checked queries
-  * (same operator pipeline, pluggable hash).
+  * md5 is the sketch operators' only hash: ~5-10× slower than
+  * splitmix64, but cheap to replicate in SQL, so every sketch query
+  * has a DuckDB oracle. [[mix64]] serves the Bloom and Cuckoo seen-set
+  * filters and NetSynth fixture synthesis (whose one SQL replica,
+  * `NetSynth.urlSeedCtesSql`, needs HUGEINT mod-2^64 arithmetic).
   */
 object PortableHash {
 
-  /** splitmix64 finalizer — THE fast 64-bit mix every non-portable
-    * operator default derives its constants from (MinHash perms,
-    * SimHash token hashes, LSH planes, fixture synthesis). One copy:
-    * these constants define cross-run signature compatibility. */
+  /** splitmix64 finalizer — THE fast 64-bit mix behind the Bloom and
+    * Cuckoo seen-set filters and NetSynth fixture synthesis. One copy:
+    * these constants define cross-run blob compatibility. */
   def mix64(z0: Long): Long = {
     var z = z0 + 0x9e3779b97f4a7c15L
     z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L

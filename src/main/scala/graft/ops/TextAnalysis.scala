@@ -81,53 +81,23 @@ object TextAnalysis {
       expr(s"size(regexp_extract_all($textCol, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 ]', 0))")
         .cast("long").as("bpe_tokens"))
 
-  private def mix64(z0: Long): Long = PortableHash.mix64(z0)
-
-  /** Winnowing fingerprint (Schleimer et al., SIGMOD'03): rolling
-    * polynomial hash over char k-grams, minimum per sliding window of
-    * `w` — the distinct selected hashes identify the document robustly
-    * under local edits. Row-local. */
-  def winnow(text: String, k: Int = 8, w: Int = 16): Array[Long] = {
-    val n = text.length
-    if (n < k) return Array(mix64(text.hashCode.toLong))
-    val grams = new Array[Long](n - k + 1)
-    var i = 0
-    while (i <= n - k) {
-      var h = 1125899906842597L
-      var j = i
-      while (j < i + k) { h = 31 * h + text.charAt(j); j += 1 }
-      grams(i) = mix64(h)
-      i += 1
-    }
-    val sel = new java.util.TreeSet[java.lang.Long]()
-    var start = 0
-    while (start <= grams.length - math.min(w, grams.length)) {
-      var mn = Long.MaxValue; var j = start
-      val end = math.min(start + w, grams.length)
-      while (j < end) { if (grams(j) < mn) mn = grams(j); j += 1 }
-      sel.add(mn)
-      start += 1
-    }
-    val out = new Array[Long](sel.size)
-    val it = sel.iterator(); var m = 0
-    while (it.hasNext) { out(m) = it.next(); m += 1 }
-    out
-  }
-
-  /** PORTABLE winnowing ([[graft.ops.PortableHash]]): gram hash =
-    * md5Hex(substr(text, i, k)) with the shingle-style short-text rule
+  /** Winnowing fingerprint (Schleimer et al., SIGMOD'03): the minimum
+    * gram hash per sliding window of `w` grams — the distinct selected
+    * hashes identify the document robustly under local edits.
+    * Row-local. Gram hash = md5Hex(substr(text, i, k))
+    * ([[PortableHash]]) with the shingle-style short-text rule
     * (`substr(text, i, k)` for i in 1..max(len-k+1, 1)); window minima
     * are lexicographic on the hex strings (= DuckDB varchar order).
     * Returns the DISTINCT selected gram hashes, sorted — the exact set
     * a SQL `min() OVER (ROWS BETWEEN CURRENT ROW AND w-1 FOLLOWING)`
     * replica selects. */
-  def winnowMd5(text: String, k: Int = 8, w: Int = 16): Array[String] = {
-    // (unlike portableShingles, winnowing needs the positional sequence)
+  def winnow(text: String, k: Int = 8, w: Int = 16): Array[String] = {
+    // (unlike Dedup.shingles, winnowing needs the positional sequence)
     val n = math.max(text.length - k + 1, 1)
     val seq = new Array[String](n)
     var i = 0
     while (i < n) {
-      seq(i) = graft.ops.PortableHash.md5Hex(
+      seq(i) = PortableHash.md5Hex(
         text.substring(i, math.min(i + k, text.length)))
       i += 1
     }
@@ -144,37 +114,19 @@ object TextAnalysis {
     sel.toArray(new Array[String](sel.size))
   }
 
-  /** Portable fingerprints: distinct winnowed-gram count and one md5
-    * over the sorted selection (comma-joined) — both replicable in
+  /** Fingerprint each document: distinct winnowed-gram count and one
+    * md5 over the sorted selection (comma-joined) — both replicable in
     * DuckDB, which is what lets the driver oracle this operator. */
-  def fingerprintsPortable(docs: DataFrame, idCol: String = "doc_id",
+  def fingerprints(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", k: Int = 8, w: Int = 16): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select(col(idCol).cast("long"), col(textCol))
       .as[(Long, String)]
       .map { case (id, t) =>
-        val hs = winnowMd5(t, k, w)
-        (id, hs.length.toLong, graft.ops.PortableHash.md5Hex(hs.mkString(",")))
+        val hs = winnow(t, k, w)
+        (id, hs.length.toLong, PortableHash.md5Hex(hs.mkString(",")))
       }
       .toDF("doc_id", "n_fingerprints", "fingerprint_hex")
-  }
-
-  /** Fingerprint each document: doc_id, sorted winnowing hash set and a
-    * single 64-bit combined fingerprint. */
-  def fingerprints(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-      k: Int = 8, w: Int = 16): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(textCol))
-      .as[(Long, String)]
-      .map { case (id, t) =>
-        val hs = winnow(t, k, w)
-        var combined = 0L
-        var i = 0
-        while (i < hs.length) { combined ^= mix64(hs(i) ^ i.toLong); i += 1 }
-        (id, hs.length.toLong, combined)
-      }
-      .toDF("doc_id", "n_fingerprints", "fingerprint64")
   }
 }

@@ -94,6 +94,17 @@ class CrawlMainSpec extends AnyFunSuite {
     assert(msg("--pages", "/p", "--seeds", "/s", "--store", "/t",
       "--seen-filter", "cuckoo", "--expected-keys", "10000000000",
       "--seen-budget-mb", "64").contains("cannot run under-provisioned"))
+    // an unknown seen-filter kind fails before anything touches the
+    // store, in CrawlMain's argument loop and in the engine constructor
+    assert(msg("--pages", "/p", "--seeds", "/s", "--store", "/t",
+      "--seen-filter", "bogus").contains("--seen-filter must be bloom or cuckoo"))
+    withTempDir("graft-cmain-kind-") { tmp =>
+      val e = intercept[IllegalArgumentException](new graft.jobs.CrawlWave(spark,
+        spark.emptyDataFrame, new SnapshotTable(spark, s"$tmp/store"),
+        graft.jobs.CrawlWave.Config(seenFilter = "Bloom")))
+      assert(e.getMessage.contains("unknown seen filter: Bloom"))
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$tmp/store")))
+    }
   }
 
   test("--expected-keys derives a crawlable layout; budget change refuses on resume") {

@@ -432,6 +432,49 @@ class CrawlSpec extends AnyFunSuite {
       assert(rs.sorted == (1 to rs.length).toList, s"host=$h ranks=$rs")
   }
 
+  test("politeness schedule on a host-skewed frontier: token, rank and wave invariants") {
+    import spark.implicits._
+    // one hot host (70% of rows) + a 97-host tail, shuffled priority;
+    // no crawl_delay_ms column, so each host's delay is the formula
+    // (hot: 400 ms → 7 tokens per 3000 ms wave; tail: 10 or 15 tokens)
+    val hot = "hot.example.com"
+    val rows = (1L to 4000L).map { seq =>
+      val host =
+        if (seq % 10 < 7) hot
+        else s"tail${(seq * 2654435761L) % 97}.example.com"
+      (seq, host, (seq * 48271 % 5).toInt)
+    }
+    val hotN = rows.count(_._2 == hot).toLong
+    val ready = rows.toDF("seq", "host", "priority")
+    for (twoPhase <- Seq(false, true)) {
+      val sched = Politeness.schedule(ready, 3000L, twoPhaseRank = twoPhase).cache()
+      assert(sched.count() == rows.size)
+      // rel_wave is the token-bucket fill, so no (host, rel_wave) group
+      // exceeds the host's token budget
+      val overfull = sched.groupBy("host", "tokens", "rel_wave").count()
+        .where(col("count") > col("tokens")).count()
+      assert(overfull == 0L, s"twoPhase=$twoPhase")
+      // per host, host_rank is a permutation of 1..k
+      val badRank = sched.groupBy("host")
+        .agg(count("*").as("k"), max("host_rank").as("mx"),
+          min("host_rank").as("mn"), countDistinct("host_rank").as("d"))
+        .where(col("mx") =!= col("k") || col("mn") =!= 1 || col("d") =!= col("k"))
+        .count()
+      assert(badRank == 0L, s"twoPhase=$twoPhase")
+      // the hot host spans exactly ceil(n / tokens) waves: throttled,
+      // not emitted in one wave, and with no empty wave in between
+      val h = sched.where(col("host") === hot)
+        .agg(countDistinct("rel_wave"), max("rel_wave").cast("long"), max("tokens"))
+        .head()
+      val tokens = h.getLong(2)
+      assert(tokens == 7L)
+      val waves = (hotN + tokens - 1) / tokens
+      assert(h.getLong(0) == waves && h.getLong(1) == waves - 1,
+        s"twoPhase=$twoPhase hot waves=${h.getLong(0)} max=${h.getLong(1)} want $waves")
+      sched.unpersist()
+    }
+  }
+
   test("politeness: crawl-delay 0 grants the full wave of tokens, no div-by-zero") {
     import spark.implicits._
     val ready = Seq((1L, "z.example", 0), (2L, "z.example", 0), (3L, "z.example", 0))

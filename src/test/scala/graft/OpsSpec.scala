@@ -1,11 +1,13 @@
 package graft
 
-import graft.ops.{Ann, Dedup, Multimodal, TextAnalysis}
+import graft.ops.{Ann, Dedup, Multimodal, PortableHash, TextAnalysis}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Property tests for the training-data pipeline operators (the
-  * rows-only entries of SparkEntry: MinHash/SimHash/LSH/winnowing). */
+/** Property tests for the training-data pipeline operators. The sketch
+  * operators (MinHash/SimHash/LSH/winnowing) also have DuckDB oracles in
+  * SparkEntry; the golden test below pins their hash rules to those
+  * oracles' SQL on fixed inputs, so drift shows up in tier-1. */
 class OpsSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
@@ -17,11 +19,11 @@ class OpsSpec extends AnyFunSuite {
   private val base = "the quick brown fox jumps over the lazy dog and runs far away into the woods tonight"
 
   test("minhash signature estimates Jaccard within tolerance") {
-    val a = Dedup.shingleHashes(base * 5, 5)
-    val b = Dedup.shingleHashes((base * 5) + " extra tail", 5)
+    val a = Dedup.shingles(base * 5, 5)
+    val b = Dedup.shingles((base * 5) + " extra tail", 5)
     val sa = Dedup.minhashSignature(a, 256)
     val sb = Dedup.minhashSignature(b, 256)
-    val est = Dedup.sigJaccard(sa, sb)
+    val est = sa.indices.count(i => sa(i) == sb(i)).toDouble / sa.length
     val inter = a.toSet.intersect(b.toSet).size.toDouble
     val union = a.toSet.union(b.toSet).size.toDouble
     val truth = inter / union
@@ -55,6 +57,34 @@ class OpsSpec extends AnyFunSuite {
     val pairs = Dedup.simhashPairs(d, maxHamming = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 2L)))
+  }
+
+  test("sketch hash rules equal their DuckDB oracles' SQL on fixed inputs") {
+    // Each literal is the output of DuckDB 1.0.0 running the SQL of the
+    // named SparkEntry oracle over a one-row table (doc_id 1, `base`;
+    // vec_id 1, `vec` as FLOAT[]): not computed by this code.
+    // dedup_simhash: the four 16-bit band keys k0..k3 (`bands` CTE)
+    val sim = Dedup.simhash64(base)
+    assert((0 until 4).map(b => (sim >>> (16 * b)) & 0xffff) ==
+      Seq(24048L, 54211L, 39165L, 65382L))
+    // dedup_minhash_lsh: md5(string_agg(sig, ',' ORDER BY j)) over the
+    // 16 slots of its `m` CTE
+    assert(PortableHash.md5Hex(Dedup.minhashSignature(Dedup.shingles(base, 5), 16)
+      .mkString(",")) == "6bdcdbca2055b3558fb13308d5c387ee")
+    // fingerprints: the whole oracle
+    val fp = TextAnalysis.fingerprints(docs(1L -> base)).head()
+    assert(fp.getLong(1) == 10L && fp.getString(2) == "f8e5f586c33924eaeca530cf35711683")
+    // ann_lsh_topk: `sigs` for table t = 0 (6 bits, planes tagged "ann:0")
+    val vec = Array(
+      -0.352f, -0.698f, 0.302f, -0.855f, 0.072f, -0.269f, -0.884f, 0.015f,
+      -0.925f, -0.133f, -0.86f, -0.819f, -0.151f, 0.654f, -0.752f, -0.554f,
+      0.255f, 0.895f, 0.154f, -0.207f, 0.953f, -0.907f, 0.717f, -0.421f,
+      -0.711f, -0.764f, -0.383f, 0.632f, -0.639f, 0.163f, 0.278f, -0.255f,
+      0.095f, -0.874f, -0.881f, -0.588f, 0.361f, -0.145f, -0.372f, 0.171f,
+      -0.094f, -0.4f, 0.589f, 0.398f, -0.512f, 0.149f, 0.05f, 0.75f,
+      0.459f, -0.424f, 0.96f, -0.764f, -0.164f, 0.514f, -0.696f, -0.022f,
+      -0.922f, 0.336f, 0.529f, 0.146f, 0.751f, -0.373f, 0.391f, 0.189f)
+    assert(Ann.signature(vec, Ann.rademacherPlanes(6, 64, "ann:0")) == 26)
   }
 
   test("ngram jaccard exact verifier: identity=1, disjoint=0") {
