@@ -6,7 +6,7 @@ import graft.jobs.{CrawlWave, Synth}
 import graft.ops.{Ann, Dedup, Multimodal, TextAnalysis}
 import graft.parse.{CharsetDecode, SampleRender}
 import graft.store.SnapshotTable
-import graft.tfidf.{Elm, TfIdf, Tokenize}
+import graft.tfidf.{Elm, Tokenize}
 import graft.urls.Canonicalize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -971,6 +971,10 @@ object SparkEntry {
       """SELECT md5(text) AS content_hash, min(doc_id) AS keep_id, count(*) AS dup_cnt
         |FROM documents GROUP BY 1""".stripMargin),
 
+    // Exact pairwise 5-gram Jaccard, the verifier behind the sketch
+    // candidates. Callers bound the input (here the doc_id % 50 slice):
+    // the gram self-join is quadratic in per-gram frequency, so a full
+    // corpus would blow up on common grams.
     "dedup_ngram_jaccard" -> split2(
       """WITH sub AS (SELECT doc_id, text FROM documents WHERE doc_id % 50 = 0),
         |g AS (SELECT DISTINCT doc_id, substr(text, i, 5) AS gram

@@ -47,7 +47,6 @@ object HttpFeatures {
       aTags: Vector[Tag],
       linkTags: Vector[Tag],
       imgTags: Vector[Tag],
-      submitTags: Vector[Tag],
       frameTags: Vector[Tag],
       redirectTags: Vector[Tag],
       scriptTags: Vector[Tag],
@@ -63,7 +62,6 @@ object HttpFeatures {
       aTags = aTags ++ prev.aTags,
       linkTags = linkTags ++ prev.linkTags,
       imgTags = imgTags ++ prev.imgTags,
-      submitTags = submitTags ++ prev.submitTags,
       frameTags = frameTags ++ prev.frameTags,
       redirectTags = redirectTags ++ prev.redirectTags,
       scriptTags = scriptTags ++ prev.scriptTags,
@@ -184,10 +182,10 @@ object HttpFeatures {
     var si = 0
     while (si < stripedRows.length) { stripedBytes += Py.byteLen(stripedRows(si)); si += 1 }
     val tags = TagScanner.scan(htmlStr)
-    // one pass over the tag list instead of nine findAll filters; each
+    // one pass over the tag list instead of eight findAll filters; each
     // bucket keeps document order (iframe/frame stay segregated to
     // mirror `find_all('iframe') + find_all('frame')` concatenation)
-    val aB, linkB, imgB, submitB, iframeB, frameB, redirectB, scriptB = Vector.newBuilder[Tag]
+    val aB, linkB, imgB, iframeB, frameB, redirectB, scriptB = Vector.newBuilder[Tag]
     val titleB = Vector.newBuilder[String]
     for (t <- tags) {
       t.name match {
@@ -203,7 +201,6 @@ object HttpFeatures {
           if (Py.stripUni(t.text).nonEmpty) titleB += t.text
         case _ => ()
       }
-      if (t.getOpt("type").contains("submit")) submitB += t
     }
     State(
       htmlStr = htmlStr,
@@ -211,7 +208,6 @@ object HttpFeatures {
       aTags = aB.result(),
       linkTags = linkB.result(),
       imgTags = imgB.result(),
-      submitTags = submitB.result(),
       frameTags = iframeB.result() ++ frameB.result(),
       redirectTags = redirectB.result(),
       scriptTags = scriptB.result(),
@@ -410,7 +406,9 @@ object HttpFeatures {
       if (isRedirect && !isBase64) 1.0 else 0.0,
       if (isBase64) 1.0 else 0.0,
       if (isForm) 1.0 else 0.0,
-      0.0, // is_input_submit — `Tag.tag` quirk: always False (:281-285)
+      // is_input_submit — `Tag.tag` quirk: always False (:281-285), so
+      // its find_all(type="submit") (:278) is not computed
+      0.0,
       0.0, // is_button_submit — same quirk (:287-291)
       sameExternDomainScriptRate(st, pageDomain),
       if (st.totalRows > 0) st.scriptBlockRows.toDouble / st.totalRows.toDouble else 0.0,

@@ -35,28 +35,6 @@ object UrlFeatures {
   def isHexadecimal(url: String): Boolean = // :67-69
     Canonicalize.extractorDomain(url).indexOf('%') > -1
 
-  /** `get_keywords` (:13-41) — computed but NOT part of the vector;
-    * exposed for the engine's keyword column (SURVEY.md §2.6). */
-  def keywords(url: String): Set[String] = {
-    val shift = if (isIpAddress(url)) Canonicalize.extractorDomain(url).length else 0
-    var parameters = Py.sliceFrom(url, url.indexOf("//") + 2 + shift)
-    val temp = Vector.newBuilder[String]
-    if (parameters.indexOf('?') > -1) {
-      val parts = Py.pySplit(parameters, "?")
-      parameters = parts(0)
-      for (p <- parts.drop(1); if p.indexOf('&') > -1) temp ++= Py.pySplit(p, "&")
-    }
-    if (parameters.indexOf('/') > -1) {
-      for (s <- Py.pySplit(parameters, "/")) {
-        if (s.indexOf('.') > -1) temp ++= Py.pySplit(s, ".")
-        else if (s.indexOf('-') > -1) temp ++= Py.pySplit(s, "-")
-        else temp += s
-      }
-    }
-    temp.result().toSet
-      .filterNot(i => i.startsWith("htm") || i.startsWith("php") || i == "www")
-  }
-
   def extract(url: String): Vector[Double] = Vector(
     if (isHttpConnection(url)) 1.0 else 0.0,
     if (isIpAddress(url)) 1.0 else 0.0,

@@ -1,8 +1,5 @@
 package graft.frontier
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-
 /** Plain blocked Bloom filter over 64-bit url hashes. The seen-set is
   * PARTITIONED (`pmod(url_hash, P)` → one Bloom blob per partition), so
   * each blob stays small enough to broadcast while the union scales to
@@ -41,13 +38,6 @@ final class Bloom(val bits: Array[Long], val numHashes: Int) extends SeenFilter 
     true
   }
 
-  def merge(o: Bloom): Bloom = {
-    require(o.bits.length == bits.length && o.numHashes == numHashes)
-    var i = 0
-    while (i < bits.length) { bits(i) |= o.bits(i); i += 1 }
-    this
-  }
-
   def serialize: Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(2 + 8 + bits.length * 8)
     bb.put(SeenFilter.KindBloom).put(SeenFilter.BlobVersion)
@@ -70,16 +60,4 @@ object Bloom {
     val bits = Array.fill(n)(bb.getLong())
     new Bloom(bits, k)
   }
-
-  /** Spark typed Aggregator: url_hash column → serialized Bloom blob.
-    * Used per seen-set partition: `groupBy(part).agg(bloomAgg)`. */
-  def agg(numBits: Int, numHashes: Int = 5): Aggregator[Long, Bloom, Array[Byte]] =
-    new Aggregator[Long, Bloom, Array[Byte]] {
-      def zero: Bloom = Bloom(numBits, numHashes)
-      def reduce(b: Bloom, a: Long): Bloom = { b.put(a); b }
-      def merge(b1: Bloom, b2: Bloom): Bloom = b1.merge(b2)
-      def finish(r: Bloom): Array[Byte] = r.serialize
-      def bufferEncoder: Encoder[Bloom] = Encoders.javaSerialization[Bloom]
-      def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-    }
 }

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   *
   * Each host h has a crawl delay `delayMs(h)` (a robots.txt
   * `Crawl-delay` stand-in, synthesized deterministically from the host
-  * string — the same formula as `Synth.delayMsSql` so DuckDB oracles
-  * agree). A wave of length `wavePeriodMs` grants
+  * string — the same formula as `SparkEntry`'s `scheduledCte`, so the
+  * DuckDB oracles agree). A wave of length `wavePeriodMs` grants
   * `tokens(h) = max(1, wavePeriodMs / delayMs(h))` fetches to h.
   * Rank URLs per host by (priority, seq); a URL with per-host rank r
   * runs in wave `floor((r-1) / tokens(h))` relative waves after it

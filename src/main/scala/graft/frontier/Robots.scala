@@ -174,8 +174,8 @@ object Robots {
     synthRulesCache.computeIfAbsent(host, h => parse(synthTxt(h)))
 
   /** Deterministic robots.txt for a fixture host (no external data; same
-    * crawl-delay formula as [[Politeness.delayMs]] / `Synth.delayMsSql`
-    * so the DuckDB oracles agree). Hosts with `length % 3 == 0`
+    * crawl-delay formula as [[Politeness.delayMs]] and `SparkEntry`'s
+    * `scheduledCte`, so the DuckDB oracles agree). Hosts with `length % 3 == 0`
     * disallow the `/p/3` path prefix — the SQL-expressible deny rule the
     * engine-vs-oracle queries reproduce independently. */
   def synthTxt(host: String): String = {

@@ -205,9 +205,4 @@ object TagScanner {
 
   /** bs4 `find_all(name)`. */
   def findAll(tags: Vector[Tag], name: String): Vector[Tag] = tags.filter(_.name == name)
-
-  /** bs4 `find_all(type="submit")` — ANY tag whose `type` attr equals
-    * the value (`extractors5/http_feature.py:278`). */
-  def findAllByAttr(tags: Vector[Tag], attr: String, value: String): Vector[Tag] =
-    tags.filter(_.getOpt(attr).contains(value))
 }

@@ -57,14 +57,15 @@ import org.apache.spark.sql.functions._
   * negatives is the sole contract). The confirm itself is scan-only at
   * any suspect cardinality: seen deltas are written part-clustered so
   * the confirm prunes its scan to the suspects' filter partitions, and
-  * the suspect side is broadcast (shuffled fallback beyond
-  * `maxBroadcastSuspects`) — the seen table is never shuffled per wave. Robots rules live in a DISTRIBUTED per-host table
-  * joined at plan time (AQE broadcasts it while small; no driver
-  * collect at any host cardinality). Politeness ranks shuffle by host
-  * (two-phase distributed rank under `scalableRank` — no single-task
-  * hot-host sort); the fetch join carries only the
-  * wave's eligible slice, never the whole frontier, and holds no
-  * O(pages) driver state.
+  * the suspect side is broadcast while it fits Spark's
+  * `autoBroadcastJoinThreshold` (shuffled fallback beyond it) — the
+  * seen table is never shuffled per wave. Robots rules live in a
+  * DISTRIBUTED per-host table joined at plan time (AQE broadcasts it
+  * while small; no driver collect at any host cardinality). Politeness
+  * ranks shuffle by host (two-phase distributed rank under
+  * `scalableRank` — no single-task hot-host sort); the fetch join
+  * carries only the wave's eligible slice, never the whole frontier,
+  * and holds no O(pages) driver state.
   */
 object CrawlWave {
 
@@ -95,13 +96,6 @@ object CrawlWave {
       // host can exceed a task; false for small frontiers, where the
       // extra plan-time jobs cost more than the skew they prevent.
       scalableRank: Boolean = false,
-      // exact-confirm join strategy bound: while a wave's bloom-suspect
-      // count stays under this, the suspect set is BROADCAST and the
-      // seen table is only scanned (part-pruned), never shuffled — the
-      // design-point regime (suspects ≈ slice × FP rate, a handful of
-      // rows). Beyond it (a saturated/under-provisioned filter), fall
-      // back to the shuffled semi-join. 4M hashes ≈ 32 MB broadcast.
-      maxBroadcastSuspects: Long = 4L << 20,
       // per-wave-append-table compaction cadence: each wave appends one
       // delta dir to `seen` (rebalanced by part and sorted by it, so the
       // exact confirm prunes row groups), `frontier_delta` and
@@ -630,15 +624,18 @@ final class CrawlWave(
       else Map("cuckoo_cap" -> cfg.cuckooCapacityPerPartition.toLong))
   }
 
-  /** Refuse to resume a store whose recorded seen-set layout differs
-    * from `cfg` (stores predating the record skip the check). Kind and
-    * sizing mismatches would otherwise surface as an obscure merge
-    * `require` waves later — or not at all (a `seen_parts` change is
-    * byte-compatible and silently mis-routes lookups). */
+  /** Refuse to resume a store whose recorded seen-set layout (the init
+    * manifest v1's metrics) differs from `cfg`. A kind mismatch would
+    * otherwise surface as an obscure blob-header error waves later, and
+    * a sizing or `seen_parts` change not at all (silently mis-routed
+    * lookups). A key v1 lacks is a mismatch too: init records every
+    * key of its kind, so it means the other kind or a foreign store. */
   private def checkLayout(recorded: Map[String, Long]): Unit = {
     val want = layoutMetrics
-    val bad = for ((k, have) <- want.toSeq.sortBy(_._1); rec <- recorded.get(k); if rec != have)
-      yield s"$k: store has $rec, config wants $have"
+    val bad = for ((k, have) <- want.toSeq.sortBy(_._1);
+        rec = recorded.get(k); if !rec.contains(have))
+      yield rec.fold(s"$k: manifest v1 lacks it, config wants $have")(r =>
+        s"$k: store has $r, config wants $have")
     if (bad.nonEmpty)
       throw new IllegalArgumentException(
         s"seen-set layout mismatch on resume [${bad.mkString("; ")}] — the " +
@@ -660,25 +657,25 @@ final class CrawlWave(
     checkLayout(store.metricsOf(1))
     val m = store.metricsOf(v)
     if (m.get("reconciled").contains(1L) && !m.contains("selected")) return false
+    // every commit writes the whole cursor, so the LATEST manifest
+    // fully locates it; the wave metric IS the cursor (init wrote -1)
+    planMaxWave = requiredMetric(m, v, "max_wave").toInt
+    generation = requiredMetric(m, v, "gen").toInt
+    genWave0 = requiredMetric(m, v, "gen_wave0").toInt
+    nextWave = requiredMetric(m, v, "wave").toInt + 1
+    seenKeepDirs = requiredMetric(m, v, "seen_keep_dirs").toInt
     plan = store.read("frontier", v).cache()
-    // every commit carries max_wave + gen forward, so the LATEST
-    // manifest fully locates the cursor (v1 fallback covers stores
-    // written before discovery existed)
-    planMaxWave = m.getOrElse("max_wave",
-      store.metricsOf(1).getOrElse("max_wave", -1L)).toInt
-    generation = m.getOrElse("gen", 0L).toInt
-    // stores written before the bound existed fall back to 0: a
-    // superset prefetch — redundant work, never wrong results
-    genWave0 = m.getOrElse("gen_wave0", 0L).toInt
-    // the latest manifest's wave metric IS the cursor (init wrote -1)
-    nextWave = m.getOrElse("wave", -1L).toInt + 1
-    // compaction cursor: stores predating the metric read keep=0, so
-    // the first squash just compacts the whole accumulated dir list
-    seenKeepDirs = m.getOrElse("seen_keep_dirs", 0L).toInt
     seenTailDirs = math.max(0,
       store.tableDirs(v).getOrElse("seen", Nil).length - seenKeepDirs)
     true
   }
+
+  /** A cursor metric every engine commit writes: missing, the
+    * store was not written by this engine (or is damaged), and guessing
+    * a default could recrawl or skip waves silently. */
+  private def requiredMetric(m: Map[String, Long], v: Int, key: String): Long =
+    m.getOrElse(key, throw new IllegalStateException(
+      s"manifest v$v lacks the required metric '$key' — not a crawl store this engine wrote"))
 
   private def cleanup(): Unit = {
     if (plan != null) { plan.unpersist(); plan = null }
@@ -831,8 +828,10 @@ final class CrawlWave(
     * schedulable wave) ends here. One commit carrying only the cursor
     * metrics; a latest version already marked reconciled (a rerun over
     * a finished store, or a crawl whose final wave reconciled) adds
-    * none. Stores written before the mark existed always ended
-    * reconciled, hence the default. */
+    * none. The init manifest v1 carries no mark by design: its
+    * frontier IS the plan, so there is nothing to reconcile, and
+    * marking it reconciled would end the crawl before wave 0
+    * ([[ensurePlan]]) — hence the default. */
   private def reconcileFrontier(): Unit = {
     val v = flush()
     val m = store.metricsOf(v)
@@ -918,8 +917,10 @@ final class CrawlWave(
     // row groups hold part ranges and the isin prunes at row-group
     // level across every wave's delta), and
     // the tiny suspect side is broadcast so the seen table is only
-    // SCANNED, never shuffled. A degraded filter (suspects beyond
-    // cfg.maxBroadcastSuspects) falls back to the shuffled semi-join.
+    // SCANNED, never shuffled. A degraded filter (8-byte suspect hashes
+    // beyond the session's autoBroadcastJoinThreshold; negative = never
+    // broadcast, as for Spark's own joins) falls back to the shuffled
+    // semi-join.
     val (nExcluded, excluded) =
       if (nSuspects == 0) (0L, null: DataFrame)
       else {
@@ -936,7 +937,7 @@ final class CrawlWave(
         // delta is appended — CrawlSpec pins the invariant) and so is
         // the slice (plan-time dup states)
         val ex =
-          (if (nSuspects <= cfg.maxBroadcastSuspects)
+          (if (nSuspects * 8 <= spark.sessionState.conf.autoBroadcastJoinThreshold)
             seenSide.join(broadcast(suspects), Seq("url_hash"), "left_semi")
           else suspects.join(seenSide, Seq("url_hash"), "left_semi"))
             .cache()

@@ -78,13 +78,6 @@ object Synth {
   // SparkEntry's hostedCte — a second copy here drifted silently and
   // had no call sites, so it was removed.)
 
-  /** Per-host politeness delay in ms — deterministic from the host
-    * string alone so both dialects agree (stands in for a robots.txt
-    * `Crawl-delay`; the robots table itself is synthesized in
-    * [[graft.frontier.Politeness]]). */
-  def delayMsSql(hostCol: String): String =
-    s"(length($hostCol) % 4 + 1) * 100"
-
   /** Convert the shared-dialect SQL to DuckDB: only the cast type name
     * differs (Spark `string` ↔ DuckDB `varchar`). */
   def duck(sql: String): String = sql.replace(" as string)", " as varchar)")

@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   *  - SimHash: row-local 64-bit signature; near-dup candidates via
   *    4×16-bit band blocking (Hamming ≤ 3 ⇒ at least one of 4 bands is
   *    identical — pigeonhole), verified by popcount on the pair;
-  *  - n-gram Jaccard: exact pairwise Jaccard restricted to LSH/band
-  *    candidates (never the full cross product).
+  *  - n-gram Jaccard: the exact pairwise verifier is plain SQL, the
+  *    `dedup_ngram_jaccard` query in [[graft.SparkEntry]].
   *
   * The sketch operators hash with md5 ([[PortableHash]]), so DuckDB
   * recomputes their signatures and each has an exact SQL oracle.
@@ -225,33 +225,6 @@ object Dedup {
       .select(col("p.a_id"), col("p.b_id"), col("p.hamming"))
       .dropDuplicates("a_id", "b_id")
       .where(col("hamming") <= maxHamming)
-  }
-
-  /** Exact pairwise n-gram Jaccard over ALL pairs of the GIVEN frame:
-    * distinct char k-gram sets intersected via an explode + self-join —
-    * the exact verifier behind the sketch-based candidates above.
-    * CALLERS bound the input (a sketch-candidate subset or a small
-    * sample, e.g. the `dedup_ngram_jaccard` query's doc_id % 50 slice):
-    * the gram self-join is quadratic in per-gram frequency, so feeding
-    * a full corpus would blow up on common grams. */
-  def ngramJaccardAllPairs(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      k: Int = 5): DataFrame = {
-    val grams = docs.select(col(idCol).cast("long").as("id"),
-        explode(expr(s"transform(sequence(1, greatest(length($textCol) - ${k - 1}, 1)), i -> substr($textCol, i, $k))")).as("gram"))
-      .distinct()
-    val sizes = grams.groupBy("id").agg(count(lit(1)).as("sz"))
-    val inter = grams.as("a").join(grams.as("b"),
-        col("a.gram") === col("b.gram") && col("a.id") < col("b.id"))
-      .groupBy(col("a.id").as("a_id"), col("b.id").as("b_id"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("id", "a_id").withColumnRenamed("sz", "sa"), "a_id")
-      .join(sizes.withColumnRenamed("id", "b_id").withColumnRenamed("sz", "sb"), "b_id")
-      .select(col("a_id"), col("b_id"),
-        (col("inter").cast("double") / (col("sa") + col("sb") - col("inter"))).as("jaccard"))
   }
 
   // -------------------------------------------- embedding-cosine near-dup

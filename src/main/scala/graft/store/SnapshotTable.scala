@@ -334,8 +334,10 @@ final class SnapshotTable(spark: SparkSession, root: String) {
       o.get("select").elements().asScala.map(_.asText()).toSeq)
     if (vn == null) Map.empty
     else vn.properties().asScala.map { e =>
-      val v = e.getValue
-      e.getKey -> (if (v.isArray) v.elements().asScala.map(one).toSeq else Seq(one(v)))
+      if (!e.getValue.isArray)
+        throw new IllegalStateException(
+          s"manifest v${node.get("version")}: views.${e.getKey} is not a list of view groups")
+      e.getKey -> e.getValue.elements().asScala.map(one).toSeq
     }.toMap
   }
 

@@ -1,14 +1,16 @@
 package graft.tfidf
 
-import breeze.linalg.{pinv, DenseMatrix, DenseVector}
+import breeze.linalg.{DenseMatrix, DenseVector}
 
 /** Extreme Learning Machine, the architecture+formula contract of the
   * reference's `ELMClassifier(activation_func='sigmoid')`
   * (`/root/reference/tfidf-elm.py:117-121`; SURVEY.md §2.9): a random
   * hidden layer `H = σ(X·Wᵀ + b)` with seeded weights, closed-form
-  * output weights `β = pinv(H)·y`. The upstream pickled models are
-  * missing (`.MISSING_LARGE_BLOBS`), so exact weight parity is
-  * impossible; we train our own with a FIXED seed so predictions are
+  * output weights `β = (HᵀH + λI)⁻¹Hᵀy` ([[Elm.trainDistributed]]; λ is
+  * a whisker of ridge for rank-deficient H, and for full-rank H the
+  * solve is the reference's `pinv(H)·y` up to λ). The upstream pickled
+  * models are missing (`.MISSING_LARGE_BLOBS`), so exact weight parity
+  * is impossible; we train our own with a FIXED seed so predictions are
   * deterministic and test-stable.
   *
   * Binary labels {0,1} are mapped to {-1,+1} for the solve (sklearn's
@@ -40,9 +42,8 @@ final case class ElmModel(
 object Elm {
 
   /** RDD.reduce with a clear contract error on an empty training set:
-    * the driver-side train guards with require(x.nonEmpty); the
-    * distributed Gram paths would otherwise surface Spark's cryptic
-    * "empty collection" UnsupportedOperationException. */
+    * the Gram paths would otherwise surface Spark's cryptic "empty
+    * collection" UnsupportedOperationException. */
   private[tfidf] def gramReduce[T](rdd: org.apache.spark.rdd.RDD[T])(f: (T, T) => T): T =
     try rdd.reduce(f)
     catch {
@@ -54,8 +55,8 @@ object Elm {
   def sigmoid(z: Double): Double = 1.0 / (1.0 + math.exp(-z))
 
   /** Seeded random hidden layer (uniform in [-1, 1], the
-    * sklearn_extensions SimpleRandomLayer shape) — shared by the driver
-    * and distributed trainers so both see the identical layer. */
+    * sklearn_extensions SimpleRandomLayer shape) — ELM and every LC-ELM
+    * member draw their layer here. */
   def hiddenLayer(d: Int, nHidden: Int, seed: Long): (Array[Array[Double]], Array[Double]) = {
     val rnd = new java.util.Random(seed)
     val w = Array.fill(nHidden, d)(rnd.nextDouble() * 2 - 1)
@@ -115,25 +116,6 @@ object Elm {
     val beta = G \ DenseVector(gy)
     ElmModel(w, b, beta.toArray)
   }
-
-  /** Train with a seeded java.util.Random hidden layer (uniform in
-    * [-1, 1], the sklearn_extensions SimpleRandomLayer shape). */
-  def train(x: Array[Array[Double]], y01: Array[Double], nHidden: Int = 20,
-      seed: Long = 42L): ElmModel = {
-    require(x.nonEmpty)
-    val d = x(0).length
-    val (w, b) = hiddenLayer(d, nHidden, seed)
-    val n = x.length
-    val h = DenseMatrix.tabulate(n, nHidden) { (i, j) =>
-      var z = b(j)
-      var k = 0
-      while (k < d) { z += w(j)(k) * x(i)(k); k += 1 }
-      sigmoid(z)
-    }
-    val ypm = DenseVector(y01.map(v => if (v > 0.5) 1.0 else -1.0))
-    val beta = pinv(h) * ypm
-    ElmModel(w, b, beta.toArray)
-  }
 }
 
 /** LC-ELM: the reference's 25-member ELM ensemble with a linear
@@ -142,7 +124,8 @@ object Elm {
   *  - members: `n` ELMClassifiers fit on X with ±1-binarized labels
   *    (`lc-elm.py:56-60`); member output F(X)ᵢⱼ ∈ {-1, +1}
   *    (`_f`, `lc-elm.py:65-75`);
-  *  - combiner: `v = pinv(F)·y` where y is the RAW 0/1 class index
+  *  - combiner: `v = (FᵀF + λI)⁻¹Fᵀy` (the reference's `pinv(F)·y`
+  *    as a ridge Gram solve) where y is the RAW 0/1 class index
   *    vector — not the ±1 binarized one (`lc-elm.py:61-63`; preserved
   *    verbatim, including the consequence that `predict` =
   *    `sign(F·v)` thresholds 0/1-regressed values at 0, so rows fitted
@@ -150,11 +133,10 @@ object Elm {
   *  - predict: `binarizer.inverse_transform(sign(F·v))` → {0, 1}
   *    (`lc-elm.py:101-103`); sign(0) → class 0.
   *
-  * Seeding: the reference passes the SAME `random_state` to every
-  * member (`lc-elm.py:41-45`), which with a fixed int seed makes all 25
-  * members identical (rank-1 F). We derive per-member seeds
-  * (`seed + 1000·i`) for a meaningful ensemble and document the
-  * divergence; `identicalMembers = true` reproduces the quirk.
+  * Seeding: member i uses `seed + 1000·i`. The reference passes the
+  * SAME `random_state` to every member (`lc-elm.py:41-45`), which with
+  * a fixed int seed makes all 25 members identical (rank-1 F); that
+  * degenerate ensemble is not reproduced.
   */
 final case class LcElmModel(members: Vector[ElmModel], v: Array[Double]) {
 
@@ -263,41 +245,5 @@ object LcElm {
     val Gf = new DenseMatrix(m, m, ftf)
     var i = 0; while (i < m) { Gf(i, i) += ridge; i += 1 }
     LcElmModel(members, (Gf \ DenseVector(fty)).toArray)
-  }
-
-  def train(x: Array[Array[Double]], y01: Array[Double],
-      nEstimators: Int = 25, nHidden: Int = 20, seed: Long = 42L,
-      identicalMembers: Boolean = false): LcElmModel = {
-    val members = Vector.tabulate(nEstimators) { i =>
-      Elm.train(x, y01, nHidden, if (identicalMembers) seed else seed + 1000L * i)
-    }
-    val n = x.length
-    val f = DenseMatrix.tabulate(n, nEstimators) { (i, j) =>
-      if (members(j).decision(x(i)) >= 0.0) 1.0 else -1.0
-    }
-    val v = pinv(f) * DenseVector(y01) // raw 0/1 targets — lc-elm.py:61-63
-    LcElmModel(members, v.toArray)
-  }
-}
-
-/** Title scorer backed by a vocab + ELM — the engine-side counterpart
-  * of `get_title_feature` (`extractors5/http_feature.py:477-512`):
-  * build the 0/1 membership vector of vocab terms in the title tokens,
-  * score with the ELM. */
-final class ElmTitleScorer(vocab: Array[String], model: ElmModel)
-    extends graft.features.TitleScorer {
-  // lowercase ONCE: score() runs per URL in the extraction hot path,
-  // and per-call toLowerCase would allocate |vocab| strings per page
-  private val vocabLc: Array[String] = vocab.map(graft.py.Py.lowerUni)
-
-  def score(titleTokens: Seq[String]): Double = {
-    val tokenSet = titleTokens.toSet
-    val v = new Array[Double](vocabLc.length)
-    var i = 0
-    while (i < vocabLc.length) {
-      if (tokenSet.contains(vocabLc(i))) v(i) = 1.0
-      i += 1
-    }
-    model.predict(v)
   }
 }

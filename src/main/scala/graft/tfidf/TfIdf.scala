@@ -1,82 +1,10 @@
 package graft.tfidf
 
-/** TF-IDF with the exact reference semantics
-  * (`/root/reference/tfidf-elm.py:43-86`):
-  *
-  *  - binary term frequency over the SET of terms per doc (:45-51);
-  *  - sklearn `TfidfTransformer(smooth_idf=False)`:
-  *    `idf = ln(n/df) + 1`, rows L2-normalized (:53-55). Spark ML's IDF
-  *    uses `ln((n+1)/(df+1))` — deliberately NOT used (SURVEY.md §2.2 A11);
-  *  - term selection at K%: keep term index i if any document's tfidf
-  *    value ≥ K/100. The reference indexes `tfidf_array[:][i]` — row i,
-  *    not column i (:77-79, a bug). [[selectTerms]] implements the
-  *    INTENDED column semantics; [[selectTermsRowBug]] reproduces the
-  *    bug for parity with the shipped `tfidf2 K% term` files.
-  *
-  * Vocabulary order: the reference iterates a CPython2 set (hash
-  * order); our canonical order is first occurrence (documented).
-  */
-object TfIdf {
-
-  final case class Model(
-      vocab: Vector[String],
-      idf: Array[Double],
-      /** doc-major tfidf matrix, L2-normalized rows */
-      tfidf: Array[Array[Double]])
-
-  def fit(docs: Seq[Seq[String]]): Model = {
-    val vocab = {
-      val seen = scala.collection.mutable.LinkedHashSet.empty[String]
-      for (d <- docs; t <- d) seen += t
-      seen.toVector
-    }
-    val index = vocab.zipWithIndex.toMap
-    val n = docs.size
-    val df = new Array[Int](vocab.size)
-    val tf = Array.ofDim[Double](n, vocab.size)
-    for ((d, r) <- docs.zipWithIndex) {
-      val set = d.toSet
-      for (t <- set) { val c = index(t); tf(r)(c) = 1.0; df(c) += 1 }
-    }
-    val idf = df.map(f => if (f == 0) 0.0 else math.log(n.toDouble / f) + 1.0)
-    val tfidf = tf.map { row =>
-      val scaled = row.zip(idf).map { case (v, w) => v * w }
-      val norm = math.sqrt(scaled.map(x => x * x).sum)
-      if (norm == 0.0) scaled else scaled.map(_ / norm)
-    }
-    Model(vocab, idf, tfidf)
-  }
-
-  /** Intended semantics: keep term i if max over docs of tfidf(_, i) ≥ k. */
-  def selectTerms(m: Model, percent: Double): Vector[Int] = {
-    val k = percent
-    (0 until m.vocab.size).filter { i =>
-      m.tfidf.exists(row => row(i) >= k)
-    }.toVector
-  }
-
-  /** The reference's row/column indexing bug (`tfidf-elm.py:77-79`):
-    * `tfidf_array[:][i]` is ROW i; the loop runs over vocab indices, so
-    * indices ≥ n(docs) crash upstream — here they simply select
-    * nothing. */
-  def selectTermsRowBug(m: Model, percent: Double): Vector[Int] = {
-    (0 until m.vocab.size).filter { i =>
-      i < m.tfidf.length && m.tfidf(i).exists(_ >= percent)
-    }.toVector
-  }
-
-  /** ELM train matrix + labels (`tfidf-elm.py:108-116`): binary doc ×
-    * selected-term matrix; label 1 if any selected tfidf ≥ k. */
-  def elmTrainMatrix(m: Model, selected: Seq[Int], percent: Double): (Array[Array[Double]], Array[Double]) = {
-    val x = Array.ofDim[Double](m.tfidf.length, selected.size)
-    val y = new Array[Double](m.tfidf.length)
-    val sel = selected.toArray // zipped once, not re-built per doc row
-    for (r <- m.tfidf.indices; c <- sel.indices) {
-      if (m.tfidf(r)(sel(c)) >= percent) { x(r)(c) = 1.0; y(r) = 1.0 }
-    }
-    (x, y)
-  }
-}
+// This file holds only [[TermFile]]. The TF-IDF itself (binary TF over
+// each doc's term set, unsmoothed `idf = ln(n/df) + 1`, L2-normalized
+// rows, K% term selection) is SQL: `SparkEntry.tfidfCtes` and the
+// `tok_terms`, `term_df`, `tfidf_micro`, `term_select` and `vocab_hits`
+// queries, each with a DuckDB oracle.
 
 /** S11: the `tfidf K% term` file format (`tfidf-elm.py:76-106`):
   * line 1 = Python-repr JSON list of kept column indices

@@ -323,13 +323,21 @@ class CrawlSpec extends AnyFunSuite {
     // a store whose seen table already holds some planned URLs (a
     // recrawl policy / externally merged history): those rows must end
     // skipped_seen with no sample, under BOTH the broadcast confirm
-    // (default) and the shuffled fallback (maxBroadcastSuspects = 0)
+    // (default) and the shuffled fallback (autoBroadcastJoinThreshold
+    // -1: no suspect set fits the broadcast budget)
     val pages = Fixtures.pages(spark, dir).toDF.cache()
     val pre = frontier.where(col("state") === "done")
       .select("url", "url_hash").orderBy("url").limit(5)
       .as[(String, Long)].collect()
     assert(pre.length == 5)
     val preUrls = pre.map(_._1).toSet
+    def noBroadcast[T](body: => T): T = {
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val old = spark.conf.getOption(key)
+      spark.conf.set(key, "-1")
+      try body
+      finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
     def runPreSeeded(c: CrawlWave.Config): SnapshotTable = {
       val root = Files.createTempDirectory("crawl-preseen-").toString
       val st = new SnapshotTable(spark, root)
@@ -349,9 +357,8 @@ class CrawlSpec extends AnyFunSuite {
       new CrawlWave(spark, pages, st, c).runAll(Fixtures.seeds(spark, dir))
       st
     }
-    for (c <- Seq(cfg(4), cfg(4).copy(maxBroadcastSuspects = 0L),
-        cfg(4).copy(compactSeenEvery = 2))) {
-      val st = runPreSeeded(c)
+    for (st <- Seq(runPreSeeded(cfg(4)), noBroadcast(runPreSeeded(cfg(4))),
+        runPreSeeded(cfg(4).copy(compactSeenEvery = 2)))) {
       val skipped = st.readLatest("frontier").get
         .where(col("state") === "skipped_seen").select("url").as[String].collect().toSet
       assert(skipped == preUrls)
@@ -363,6 +370,19 @@ class CrawlSpec extends AnyFunSuite {
       assert(seen.count() == store.readLatest("seen").get.count())
     }
     pages.unpersist()
+  }
+
+  test("resume refuses a latest manifest that lacks a cursor metric") {
+    // the latest manifest alone locates the cursor; a missing metric
+    // must fail naming version and key, not fall back to v1's value
+    SparkTestBase.withTempDir("crawl-nocursor-") { root =>
+      val st = new SnapshotTable(spark, root)
+      val pages = Fixtures.pages(spark, dir).toDF
+      val v1 = new CrawlWave(spark, pages, st, cfg(4)).init(Fixtures.seeds(spark, dir))
+      val v2 = st.commit(metrics = st.metricsOf(v1) - "max_wave", expectedParent = Some(v1))
+      val e = intercept[IllegalStateException](new CrawlWave(spark, pages, st, cfg(4)).step())
+      assert(e.getMessage.contains(s"manifest v$v2 lacks the required metric 'max_wave'"))
+    }
   }
 
   // ------------------------------------------------- two-phase host rank

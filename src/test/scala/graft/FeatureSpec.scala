@@ -22,12 +22,6 @@ class UrlFeatureSpec extends AnyFunSuite {
     assert(UrlFeatures.isIpAddress("http://10.2.3.44\n")) // $ before newline
     assert(UrlFeatures.isHexadecimal("http://h%41x.com/\n"))
   }
-  test("keywords split/drops") {
-    val kw = UrlFeatures.keywords("http://h.com/dir-one/file.php?a=1&b=2")
-    assert(kw.contains("dir"))
-    assert(kw.contains("one"))
-    assert(!kw.exists(_.startsWith("php")))
-  }
 }
 
 class SimpleExtractorSpec extends AnyFunSuite {
@@ -154,10 +148,6 @@ class TagScannerSpec extends AnyFunSuite {
   test("comments and declarations skipped") {
     val tags = TagScanner.scan("<!doctype html><!-- <a href=\"no\"> --><b>")
     assert(tags.map(_.name) == Vector("b"))
-  }
-  test("find_all by attr matches any tag name") {
-    val tags = TagScanner.scan("<input type=\"submit\"><button type=\"submit\"><div type=\"submit\">")
-    assert(TagScanner.findAllByAttr(tags, "type", "submit").size == 3)
   }
   test("self-closing script/title does not swallow following tags") {
     // html.parser dispatches startendtag for <script/> and never enters

@@ -87,16 +87,6 @@ class OpsSpec extends AnyFunSuite {
     assert(Ann.signature(vec, Ann.rademacherPlanes(6, 64, "ann:0")) == 26)
   }
 
-  test("ngram jaccard exact verifier: identity=1, disjoint=0") {
-    import spark.implicits._
-    val d = docs(1L -> base, 2L -> base, 3L -> "zzzz qqqq xxxx vvvv kkkk")
-    val out = Dedup.ngramJaccardAllPairs(d)
-      .select("a_id", "b_id", "jaccard").as[(Long, Long, Double)].collect()
-      .map(t => (t._1, t._2) -> t._3).toMap
-    assert(out((1L, 2L)) == 1.0)
-    assert(!out.contains((1L, 3L)) || out((1L, 3L)) < 0.05)
-  }
-
   test("zero-norm vectors never rank: NULL cosine, not rank-1 NaN") {
     import spark.implicits._
     val rows = Seq(

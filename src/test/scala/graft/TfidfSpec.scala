@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import graft.tfidf._
 
@@ -24,38 +25,64 @@ class TokenizeSpec extends AnyFunSuite {
   }
 }
 
+/** The shipped SQL TF-IDF (`tok_terms` → `term_df` → `tfidf_micro` →
+  * `term_select`) against the reference semantics, recomputed in Scala
+  * on sf0.001: binary TF over each doc's term set, sklearn
+  * `smooth_idf=False` (`idf = ln(n/df) + 1`, not Spark ML's
+  * `ln((n+1)/(df+1))`), L2-normalized rows, K% selection by a term's
+  * max tfidf over all docs. */
 class TfIdfSpec extends AnyFunSuite {
-  val docs = Seq(Seq("apple", "banana"), Seq("banana", "cherry"), Seq("apple"))
-  val m = TfIdf.fit(docs)
+  private lazy val spark = SparkTestBase.spark
+  private val dir = "/root/testdata/sf0.001"
+  private def q(name: String) = SparkEntry.queries(name)(spark, dir)
 
-  test("vocab first-occurrence order") {
-    assert(m.vocab == Vector("apple", "banana", "cherry"))
+  private lazy val tfidfMicro: Map[(Long, String), Long] = {
+    import spark.implicits._
+    q("tfidf_micro").select(col("doc_id").cast("long"), col("term"), col("tfidf_micro"))
+      .as[(Long, String, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
   }
 
   test("idf = ln(n/df) + 1 (no smoothing)") {
-    val e = 1e-12
-    assert(math.abs(m.idf(0) - (math.log(3.0 / 2) + 1)) < e)
-    assert(math.abs(m.idf(1) - (math.log(3.0 / 2) + 1)) < e)
-    assert(math.abs(m.idf(2) - (math.log(3.0) + 1)) < e)
+    import spark.implicits._
+    val n = spark.read.parquet(s"$dir/documents.parquet").count()
+    val idf = q("term_df").select(col("term"), col("df").cast("long")).as[(String, Long)]
+      .collect().map { case (t, df) => t -> (math.log(n.toDouble / df) + 1.0) }.toMap
+    val docTerms = q("tok_terms").select(col("doc_id").cast("long"), col("term"))
+      .as[(Long, String)].collect().groupMap(_._1)(_._2)
+    assert(tfidfMicro.keySet == docTerms.toSeq.flatMap { case (d, ts) => ts.map(d -> _) }.toSet)
+    for ((d, ts) <- docTerms) {
+      val nrm = math.sqrt(ts.map(t => idf(t) * idf(t)).sum)
+      for (t <- ts) {
+        val want = math.round(1e6 * idf(t) / nrm)
+        assert(math.abs(tfidfMicro((d, t)) - want) <= 1, s"doc $d term '$t'")
+      }
+    }
   }
 
   test("rows L2-normalized") {
-    for (row <- m.tfidf) {
-      val n = math.sqrt(row.map(x => x * x).sum)
-      assert(math.abs(n - 1.0) < 1e-12)
+    for ((d, vs) <- tfidfMicro.groupMap(_._1._1)(_._2)) {
+      val sq = vs.iterator.map(v => (v / 1e6) * (v / 1e6)).sum
+      assert(math.abs(sq - 1.0) < 1e-4, s"doc $d: sum of squares $sq")
     }
-    // doc0: equal idf weights → 1/sqrt(2) each
-    assert(math.abs(m.tfidf(0)(0) - 1 / math.sqrt(2)) < 1e-12)
   }
 
-  test("term selection at 90%: only apple (doc2 gives it 1.0)") {
-    assert(TfIdf.selectTerms(m, 0.9) == Vector(0))
+  test("term_select keeps exactly the terms whose max tfidf_micro >= 500000") {
+    import spark.implicits._
+    val maxByTerm = tfidfMicro.groupMapReduce(_._1._2)(_._2)(math.max)
+    val want = maxByTerm.collect { case (t, mx) if mx >= 500000L => t }.toSet
+    assert(want.nonEmpty && want.size < maxByTerm.size) // the cut splits the vocab
+    val got = q("term_select").select("term").as[String].collect()
+    assert(got.length == got.toSet.size)
+    assert(got.toSet == want)
   }
+}
 
-  test("elm train matrix + labels") {
-    val (x, y) = TfIdf.elmTrainMatrix(m, Seq(0), 0.9)
-    assert(x.map(_.toSeq).toSeq == Seq(Seq(0.0), Seq(0.0), Seq(1.0)))
-    assert(y.toSeq == Seq(0.0, 0.0, 1.0))
+/** (features, 0/1 label) training rows as a 2-partition Dataset. */
+private object TrainRows {
+  def apply(x: Seq[Array[Double]], y: Seq[Double]) = {
+    val spark = SparkTestBase.spark
+    import spark.implicits._
+    spark.createDataset(spark.sparkContext.parallelize(x.zip(y), 2))
   }
 }
 
@@ -63,21 +90,24 @@ class ElmSpec extends AnyFunSuite {
   test("deterministic under fixed seed; fits separable data") {
     val x = Array(Array(1.0, 0.0), Array(0.0, 1.0), Array(1.0, 1.0), Array(0.0, 0.0))
     val y = Array(1.0, 0.0, 1.0, 0.0)
-    val m1 = Elm.train(x, y, nHidden = 10, seed = 7)
-    val m2 = Elm.train(x, y, nHidden = 10, seed = 7)
+    val ds = TrainRows(x, y)
+    val m1 = Elm.trainDistributed(ds, nFeatures = 2, nHidden = 10, seed = 7)
+    val m2 = Elm.trainDistributed(ds, nFeatures = 2, nHidden = 10, seed = 7)
     for (r <- x.indices) {
       assert(m1.predict(x(r)) == m2.predict(x(r)))
       assert(m1.predict(x(r)) == y(r))
     }
   }
 
-  test("title scorer builds the vocab membership vector") {
-    val x = Array(Array(1.0, 0.0), Array(0.0, 1.0))
-    val y = Array(1.0, 0.0)
-    val m = Elm.train(x, y, nHidden = 8, seed = 3)
-    val scorer = new ElmTitleScorer(Array("verify", "welcome"), m)
-    assert(scorer.score(Seq("verify", "your", "account")) == m.predict(Array(1.0, 0.0)))
-    assert(scorer.score(Seq("welcome")) == m.predict(Array(0.0, 1.0)))
+  test("ELM and LC-ELM training reject an empty training set") {
+    val empty = TrainRows(Nil, Nil)
+    val trainers = Seq[() => Any](
+      () => Elm.trainDistributed(empty, nFeatures = 2),
+      () => LcElm.trainDistributed(empty, nFeatures = 2))
+    for (train <- trainers) {
+      val e = intercept[IllegalArgumentException](train())
+      assert(e.getMessage.endsWith("empty training set"))
+    }
   }
 }
 
@@ -88,8 +118,9 @@ class LcElmSpec extends AnyFunSuite {
   private val y = Array(1.0, 1.0, 1.0, 1.0, 0.0, 0.0, 0.0, 0.0)
 
   test("deterministic; members vote ±1; combiner fits separable data") {
-    val m1 = LcElm.train(x, y, nEstimators = 7, nHidden = 10, seed = 11)
-    val m2 = LcElm.train(x, y, nEstimators = 7, nHidden = 10, seed = 11)
+    val ds = TrainRows(x, y)
+    val m1 = LcElm.trainDistributed(ds, nFeatures = 2, nEstimators = 7, nHidden = 10, seed = 11)
+    val m2 = LcElm.trainDistributed(ds, nFeatures = 2, nEstimators = 7, nHidden = 10, seed = 11)
     for (r <- x.indices) {
       assert(m1.f(x(r)).forall(v => v == 1.0 || v == -1.0))
       assert(m1.predict(x(r)) == m2.predict(x(r)))
@@ -98,16 +129,6 @@ class LcElmSpec extends AnyFunSuite {
     // the reference quirk (lc-elm.py:61-63,101-103) makes class-0 rows
     // sit at fitted ≈ 0 — assert only the stable half
     for (r <- 0 until 4) assert(m1.predict(x(r)) == 1.0, s"row $r")
-  }
-
-  test("identicalMembers reproduces the reference's same-seed rank-1 ensemble") {
-    val m = LcElm.train(x, y, nEstimators = 5, nHidden = 10, seed = 11,
-      identicalMembers = true)
-    // all member columns identical → F is rank 1
-    for (r <- x.indices) {
-      val fx = m.f(x(r))
-      assert(fx.distinct.length == 1)
-    }
   }
 }
 
