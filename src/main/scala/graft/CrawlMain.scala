@@ -1,5 +1,6 @@
 package graft
 
+import graft.frontier.Cuckoo
 import graft.jobs.CrawlWave
 import graft.store.SnapshotTable
 import org.apache.spark.sql.SparkSession
@@ -202,13 +203,9 @@ object CrawlMain {
           if (p > Int.MaxValue) bad(s"--expected-keys $keys needs $p seen partitions")
           seenPartitions = p.toInt
           cuckooCapacity = ceilDiv(keys, p).toInt
-          // exact per-blob bytes: capacity/0.95/4 buckets, pow2-rounded,
-          // × 4 slots × 2 bytes (mirrors Cuckoo.apply)
-          val buckets = java.lang.Long.highestOneBit(
-            math.max(1L, math.ceil(cuckooCapacity / 0.95 / 4).toLong) * 2 - 1)
-          val totalBits = p * buckets * 4 * 2 * 8
-          if (totalBits > budgetBits)
-            bad(s"cuckoo at $keys keys needs ${totalBits / 8 >> 20} MB > budget " +
+          val totalBytes = p * Cuckoo.tableBytes(cuckooCapacity)
+          if (totalBytes * 8 > budgetBits)
+            bad(s"cuckoo at $keys keys needs ${totalBytes >> 20} MB > budget " +
               s"$seenBudgetMb MB and cannot run under-provisioned (an over-full " +
               "table degrades to an unbounded stash) — raise --seen-budget-mb " +
               "or use --seen-filter bloom, which degrades gracefully under a cap")

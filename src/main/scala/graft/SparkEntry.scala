@@ -169,38 +169,22 @@ object SparkEntry {
 
   // ----------------------------------------------------------- engine memo
 
-  /** One full crawl-engine run per sf dir (snapshot root memoized so the
-    * wave/seen queries share it). */
-  private val engineRoots = scala.collection.concurrent.TrieMap.empty[String, String]
+  /** One full crawl-engine run per (sf dir, discover), its snapshot root
+    * memoized so the queries reading one run share it. The discovery run
+    * (frontier growth on, 3 generations) has its own store — its
+    * generations must not disturb the seed-plan oracles. */
+  private val crawlRoots = scala.collection.concurrent.TrieMap.empty[(String, Boolean), String]
 
-  private def engineStore(s: SparkSession, dir: String): SnapshotTable = {
-    val root = engineRoots.getOrElseUpdate(dir, {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-crawl-").toString
-      val pages = Fixtures.pages(s, dir).toDF.cache()
-      val store = new SnapshotTable(s, tmp)
-      val cw = new CrawlWave(s, pages, store, CrawlWave.Config(
-        wavePeriodMs = WavePeriodMs,
-        partitions = math.max(s.sparkContext.defaultParallelism, 4)))
-      cw.runAll(Fixtures.seeds(s, dir))
-      pages.unpersist()
-      tmp
-    })
-    new SnapshotTable(s, root)
-  }
-
-  /** Like [[engineStore]] but with frontier growth on (its own store —
-    * the discovery generation must not disturb the seed-plan oracles). */
-  private val discoverRoots = scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def discoverStore(s: SparkSession, dir: String): SnapshotTable = {
-    val root = discoverRoots.getOrElseUpdate(dir, {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-crawl-disc-").toString
+  private def crawlStore(s: SparkSession, dir: String, discover: Boolean): SnapshotTable = {
+    val root = crawlRoots.getOrElseUpdate((dir, discover), {
+      val tmp = java.nio.file.Files.createTempDirectory(
+        if (discover) "graft-crawl-disc-" else "graft-crawl-").toString
       val pages = Fixtures.pages(s, dir).toDF.cache()
       val store = new SnapshotTable(s, tmp)
       val cw = new CrawlWave(s, pages, store, CrawlWave.Config(
         wavePeriodMs = WavePeriodMs,
         partitions = math.max(s.sparkContext.defaultParallelism, 4),
-        discover = true, maxGenerations = 3))
+        discover = discover, maxGenerations = 3)) // maxGenerations is read only when discovering
       cw.runAll(Fixtures.seeds(s, dir))
       pages.unpersist()
       tmp
@@ -489,7 +473,7 @@ object SparkEntry {
 
     // ---------------- the LIVE engine vs the static SQL schedule
     "crawl_engine_waves" -> Q(
-      (s, dir) => engineStore(s, dir).readLatest("frontier").get
+      (s, dir) => crawlStore(s, dir, discover = false).readLatest("frontier").get
         .where(col("state").isin("done", "error"))
         .select(col("seq"), col("url"), col("wave").cast("int").as("wave")),
       Some(Synth.duck(withSeeds(
@@ -497,7 +481,7 @@ object SparkEntry {
            |SELECT seq, url, wave FROM scheduled""".stripMargin)))),
 
     "crawl_engine_seen" -> Q(
-      (s, dir) => engineStore(s, dir).readLatest("seen").get
+      (s, dir) => crawlStore(s, dir, discover = false).readLatest("seen").get
         .agg(count(lit(1)).as("seen_count")),
       Some(Synth.duck(withSeeds(
         s"""$fetchableCte, $dedupCte, $hostedCte, $allowedCte
@@ -513,7 +497,7 @@ object SparkEntry {
       (s, dir) => {
         reg(s, dir)
         val maxSeed = Fixtures.seeds(s, dir).agg(max("seq")).head.getLong(0)
-        discoverStore(s, dir).readLatest("frontier").get
+        crawlStore(s, dir, discover = true).readLatest("frontier").get
           .where(col("seq") > maxSeed)
           .select(col("seq"), col("url"), col("state"),
             col("wave").cast("int").as("wave"))
@@ -1519,7 +1503,7 @@ object SparkEntry {
     * sf0.001, returning the extracted samples. */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
-    engineStore(spark, dir).readLatest("samples").get
+    crawlStore(spark, dir, discover = false).readLatest("samples").get
       .select("seq", "url", "wave", "render_match")
   }
 

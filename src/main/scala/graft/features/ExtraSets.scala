@@ -1,16 +1,15 @@
 package graft.features
 
-import graft.html.TagScanner
-import graft.html.TagScanner.Tag
-import graft.parse.Blocks
 import graft.py.Py
 import graft.urls.Canonicalize
 
-/** Extractor sets 1, 2s, 3, 4 and 6 — the non-default pluggable sets of
-  * the reference (`feature_extractor.py --select extractorsN`,
-  * SURVEY.md §2.6). Each is a pure function over the sample's blocks,
-  * with every set-specific quirk cited and mirrored. Set 5 (the
-  * default) lives in [[ExtractorSet5]]/[[HttpFeatures]].
+/** The URL features of extractor sets 1, 2s, 3 and 4 — the URL slices
+  * of the reference's non-default sets (`feature_extractor.py --select
+  * extractorsN`, SURVEY.md §2.6) that the `url_features_sets` query
+  * ships, with every set-specific quirk cited and mirrored. The engine
+  * extracts one full set, set 5 ([[ExtractorSet5]]); the HTTP/NSLOOKUP
+  * parts of the other sets are not implemented (no entry point selects
+  * a set).
   */
 object UrlFeatureSets {
 
@@ -59,14 +58,6 @@ object UrlFeatureSets {
     val isSlashes = Py.sliceFrom(url, p).indexOf('/') > 0 // :10-12
     Vector(b(isIp(url)), dots(url).toDouble, b(isSpecial(url)), b(isSlashes))
   }
-
-  /** Set 6 — `extractors6/url_feature.py:21`: [is_http_connection,
-    * is_ip_address, dots, is_special_words, url_linkin_num,
-    * url_traffic_rank]. The last two query the Alexa AWIS API, long
-    * dead (SURVEY.md §2.6) — the no-response path returns 0 (:34-38). */
-  def set6(url: String): Vector[Double] = Vector(
-    b(Py.sliceTo(url, 5) != "https"), b(isIp(url)), dots(url).toDouble,
-    b(isSpecial(url)), 0.0, 0.0)
 
   // -------------------------------------------------------------- set 3
 
@@ -266,438 +257,4 @@ object UrlFeatureSets {
   ).sortBy(_._1)
 
   def set3(url: String): Vector[Double] = set3Features.map(_._2(url))
-}
-
-object HttpFeatureSets {
-
-  import HttpFeatures.{buildState, calTagBlock, State}
-
-  private def b(v: Boolean): Double = if (v) 1.0 else 0.0
-
-  private def mergedState(blocks: Seq[String]): State =
-    blocks.map(buildState).reduce((prev, cur) => cur.absorb(prev))
-
-  /** Set 1 — `extractors/http_feature.py:45`:
-    * [is_frame, is_redirect (meta refresh present, :174-178), is_form]. */
-  def set1(blocks: Seq[String], rawUrl: String): Vector[Double] = {
-    if (blocks.isEmpty) return Vector.fill(3)(0.0)
-    val st = mergedState(blocks)
-    Vector(
-      b(st.frameTags.nonEmpty),
-      b(st.redirectTags.nonEmpty),
-      b(TagScanner.findAll(st.tags, "form").nonEmpty))
-  }
-
-  /** Set 2s — `extractors2s/http_feature.py:63`:
-    * [is_login_form, rule_based, get_title_feature].
-    *
-    * is_login_form (:359-363): form ∧ (button|input submit) → 0 else 1;
-    * the submit checks carry the always-False `.tag` quirk (bs4 child
-    * lookup returns None), so the value is constantly 1 whenever
-    * extracted — mirrored.
-    *
-    * rule_based (:396-426): over LINK tags (not <a>), sum of
-    * external-domain counts ÷ total; the `m != total` guard zeroes the
-    * rate when ALL links are external (quirk mirrored); ≥0.5 → 0 else 1. */
-  def set2s(blocks: Seq[String], rawUrl: String, cfg: ExtractConfig): Vector[Double] = {
-    if (blocks.isEmpty) return Vector.fill(3)(0.0)
-    val st = mergedState(blocks)
-    val pageDomain = Canonicalize.extractorDomain(Py.rstrip(rawUrl))
-    val loginForm = 1.0 // .tag quirk: submit checks never fire
-    var counts = Map.empty[String, Int]
-    var total = 0
-    for (node <- st.linkTags) {
-      val url = node.getOpt("href")
-      total += 1
-      if (url.exists(u => u.nonEmpty && u != "#")) {
-        val d = Canonicalize.extractorDomain(url.get)
-        counts += (d -> (counts.getOrElse(d, 0) + 1))
-      }
-    }
-    var m = 0
-    for ((d, c) <- counts) if (c > 0 && d != "." && d != pageDomain) m += c
-    val rate = if (total > 0 && m != total) m.toDouble / total else 0.0
-    val title =
-      if (st.titles.isEmpty) 0.0
-      else cfg.titleScorer.score(HttpFeatures.splitTitle(st.titles))
-    Vector(loginForm, if (rate >= 0.5) 0.0 else 1.0, title)
-  }
-
-  /** Set 4 — `extractors4/http_feature.py:40`:
-    * [null_a_tag, external_a (absolute count, :207-228), is_ssl (:42-43)]. */
-  def set4(blocks: Seq[String], rawUrl: String): Vector[Double] = {
-    if (blocks.isEmpty) return Vector.fill(3)(0.0)
-    val st = mergedState(blocks)
-    val pageDomain = Canonicalize.extractorDomain(Py.rstrip(rawUrl))
-    var counts = Map.empty[String, Int]
-    for (node <- st.aTags) {
-      val url = node.getOpt("href")
-      if (url.exists(u => u.nonEmpty && u != "#")) {
-        val d = Canonicalize.extractorDomain(url.get)
-        counts += (d -> (counts.getOrElse(d, 0) + 1))
-      }
-    }
-    var m = 0
-    for ((d, c) <- counts) if (d != "." && d != pageDomain) m += c
-    Vector(
-      // extractors4 returns the absolute null count, not set5's rate
-      HttpFeatures.nullATagCount(st),
-      m.toDouble,
-      b(Py.rstrip(rawUrl).startsWith("https")))
-  }
-
-  /** Set 6 — `extractors6/http_feature.py:59`: the 13-feature variant =
-    * set5's rate block + is_login_form (:61-62: form ∧ ¬is_search).
-    *
-    * is_search (:64-82): the word `search` (non-word-bounded regex) in
-    * any text node (lower-cased) or any attribute value (raw case).
-    * Our flat scanner approximates bs4's `tag.string` text-node walk by
-    * scanning text outside tags with script/style content dropped
-    * (divergence documented — fixture HTML keeps text nodes simple). */
-  def set6(blocks: Seq[String], rawUrl: String, cfg: ExtractConfig): Vector[Double] = {
-    if (blocks.isEmpty) return Vector.fill(13)(0.0)
-    val st = mergedState(blocks)
-    val pageDomain = Canonicalize.extractorDomain(Py.rstrip(rawUrl))
-    val isRedirect = st.redirectTags.nonEmpty
-    val isBase64 = st.redirectTags.exists { t =>
-      t.getOpt("content").exists(c => Py.pyMatchI("^.*base64.*$", Py.lowerUni(c)))
-    }
-    // is_form (:490-493) = get_form() OR _get_form_in_javascript()
-    val isForm = TagScanner.findAll(st.tags, "form").nonEmpty ||
-      HttpFeatures.formInJavascriptWriteDot(st)
-    val searchPattern = "^(.*[^\\w\\d]+|)search(|[^\\w\\d]+.*)$"
-    // _get_all_text/_get_all_attrs (:83-100) both gate on a <body> tag
-    // existing (bs4 html.parser synthesizes none) and walk only tags
-    // whose NAME contains neither "script" nor "style" (the
-    // `^((?!script|style).)*$` find_all regex — also excludes noscript)
-    val hasBody = st.tags.exists(_.name == "body")
-    val searchableTags =
-      if (!hasBody) Vector.empty
-      else st.tags.filter(t => !t.name.contains("script") && !t.name.contains("style"))
-    val texts = if (hasBody) textNodes(st.htmlStr).map(Py.lowerUni) else Vector.empty
-    // bs4 multi-valued attrs (class) are tested token-wise, the rest as
-    // whole strings; valueless attrs read back '' in bs4 html.parser —
-    // '' cannot match the pattern, so dropping None here is equivalent
-    val attrVals = searchableTags.flatMap(_.attrs.flatMap {
-      case ("class", Some(v)) => v.split("\\s+").filter(_.nonEmpty).toVector
-      case (_, Some(v))       => Vector(v)
-      case _                  => Vector.empty
-    })
-    val isSearch = texts.exists(t => Py.pyMatchM(searchPattern, t)) ||
-      attrVals.exists(v => Py.pyMatchM(searchPattern, v))
-    val title =
-      if (st.titles.isEmpty) 0.0
-      else cfg.titleScorer.score(HttpFeatures.splitTitle(st.titles))
-    Vector(
-      st.bytes.toDouble / 1024.0,
-      b(st.frameTags.nonEmpty),
-      b(isRedirect && !isBase64),
-      b(isBase64),
-      HttpFeatures.sameExternDomainScriptRate(st, pageDomain),
-      if (st.totalRows > 0) st.scriptBlockRows.toDouble / st.totalRows else 0.0,
-      if (st.totalRows > 0) st.styleBlockRows.toDouble / st.totalRows else 0.0,
-      HttpFeatures.externalATagSameDomain(st, pageDomain),
-      HttpFeatures.nullATag(st),
-      HttpFeatures.sameExternalDomainLinkRate(st, pageDomain),
-      HttpFeatures.sameExternalDomainImgRate(st, pageDomain),
-      title,
-      b(isForm && !isSearch))
-  }
-
-  /** Rough text-node extraction: drop script/style element content,
-    * then take inter-tag text runs. */
-  private[features] def textNodes(html: String): Vector[String] = {
-    val noScript = html.replaceAll("(?is)<script[^>]*>.*?</script>", " ")
-      .replaceAll("(?is)<style[^>]*>.*?</style>", " ")
-    noScript.split("<[^>]*>").toVector.map(Py.stripUni).filter(_.nonEmpty)
-  }
-
-  // -------------------------------------------------------------- set 3
-
-  /** Per-merged-sample state for set 3 (`extractors3/http_feature.py`).
-    * `__add__` (:383-397) quirks mirrored by [[Set3State.absorb]]:
-    * html concatenates (current first), script rows gain DOUBLE the
-    * previous block's rows (the `+=` appears twice), embed comes from
-    * the PREVIOUS block. */
-  final case class Set3State(
-      htmlStr: String,
-      scriptRows: Vector[String],
-      totalRows: Int,
-      embeds: Vector[Tag]) {
-    def absorb(prev: Set3State): Set3State = Set3State(
-      htmlStr + prev.htmlStr,
-      scriptRows ++ prev.scriptRows ++ prev.scriptRows,
-      totalRows + prev.totalRows,
-      // `self.embed = other.embed` (:396): pairwise the previous side
-      // wins, so folding leaves the FIRST block's standalone embed list
-      prev.embeds)
-  }
-
-  private def set3State(block: String): Set3State = {
-    val rawRows = block.split("\n", -1) // the block's only line split
-    val stripedRows = HttpFeatures.stripedRows(rawRows)
-    // _get_script_block_rows ignores its striped argument and walks the
-    // RAW html_str (:65,72); total_rows counts the striped lines (:26)
-    Set3State(block, calTagBlock(rawRows, "script"), stripedRows.length,
-      TagScanner.findAll(TagScanner.scan(block), "embed"))
-  }
-
-  /** `_get_number_of_object` (:77-84): per line, per `;`-segment,
-    * count segments where `re.match('^.*OBJ.*$', seg, I)` fires. */
-  def numberOfObject(htmlStr: String, objPattern: String): Int = {
-    var n = 0
-    for (row <- htmlStr.split("\n", -1); seg <- Py.pySplit(Py.rstrip(row), ";"))
-      if (Py.pyMatchI("^.*" + objPattern + ".*$", Py.strip(seg))) n += 1
-    n
-  }
-
-  /** The 48 set-3 HTTP features, order = Python `dir()` ASCII sort of
-    * method names (`extractors3/http_feature.py:30`). */
-  def set3(blocks: Seq[String], rawUrl: String): Vector[Double] = {
-    if (blocks.isEmpty) return Vector.fill(set3HttpNames.size)(0.0)
-    val st = blocks.map(set3State).reduce((prev, cur) => cur.absorb(prev))
-    val tags = TagScanner.scan(st.htmlStr)
-    def cnt(name: String) = TagScanner.findAll(tags, name).size
-    def attrCnt(name: String, attr: String) =
-      TagScanner.findAll(tags, name).count(_.getOpt(attr).isDefined)
-    def num(p: String) = numberOfObject(st.htmlStr, p).toDouble
-    // embed features use self.embed (:111,127), which after the merge
-    // fold is the FIRST block's standalone list — NOT the merged tree
-    val embeds = st.embeds
-    // //form/a approximated as <a> inside <form>…</form> spans
-    val formAs = formChildATags(st.htmlStr)
-    // get_outofplace_tags (:146-151) CONCATENATES four xpath node-lists,
-    // so a tag matching several hidden-conditions counts once per
-    // condition it matches
-    val hidden = tags.map { t =>
-      val style = t.getOpt("style")
-      (if (style.exists(s => Py.pySearch("visibility:.*hidden", s).isDefined)) 1 else 0) +
-        (if (t.getOpt("type").contains("hidden")) 1 else 0) +
-        (if (t.attrs.exists(_._1 == "hidden")) 1 else 0) +
-        (if (style.exists(s => Py.pySearch("display:.*none", s).isDefined)) 1 else 0)
-    }.sum
-    val scriptJoined = st.scriptRows
-    val values: Map[String, Double] = Map(
-      "get_ADODBStream" -> num("ADODB\\.Stream"),
-      "get_ExcelApplication" -> num("Excel\\.Application"),
-      "get_FileSystemObject" -> num("Scripting\\.FileSystemObject"),
-      "get_MSXML21" -> num("MSXML2\\.XMLHTTP"),
-      "get_MSXML22" -> num("MSXML2\\.XMLHTTP"),
-      "get_MicrosoftXMLDOM" -> num("Microsoft\\.XMLDOM"),
-      "get_SetInterval" -> num("SetInterval\\("),
-      "get_SetTimeout" -> num("SetTimeout\\("),
-      "get_WScriptShell" -> num("WScript\\.Shell"),
-      "get_WordApplication" -> num("Word\\.Application"),
-      "get_applet_codebase" -> attrCnt("applet", "codebase").toDouble,
-      "get_applet_tags" -> cnt("applet").toDouble,
-      "get_attachEvent" -> num("attachEvent\\("),
-      "get_dispatchEvent" -> num("dispatchEvent\\("),
-      // embed src length: None src would crash Py2 len(None); defined substitute 0
-      "get_embed_src_length" -> embeds.map(_.getOpt("src").map(_.length).getOrElse(0)).sum.toDouble,
-      "get_embed_tags" -> embeds.size.toDouble,
-      "get_escap" -> num("escap\\("),
-      "get_eval" -> num("eval\\("),
-      "get_exec" -> num("exec\\("),
-      "get_form" -> cnt("form").toDouble,
-      "get_form_in_javascript" -> 0.0, // :206-237 computes then `return 0` — constant (quirk)
-      "get_frame" -> cnt("frame").toDouble,
-      "get_frequent_head_title_body" -> (num("<head>") + num("<title>") + num("<body>")),
-      "get_fromChartCode" -> num("fromCharCode\\("),
-      "get_iframe" -> cnt("iframe").toDouble,
-      "get_input" -> cnt("input").toDouble,
-      "get_input_in_javascript" -> 0.0, // :239-261 same dead-return quirk
-      "get_javascript_function_calls" -> scriptJoined.map(r => Py.pyFindAllCount("\\(", Py.rstrip(r))).sum.toDouble,
-      // Py2 len(row) over byte-str rows = UTF-8 byte length
-      "get_javascript_length" -> scriptJoined.map(Py.byteLen).sum.toDouble,
-      "get_javascript_length2" -> scriptJoined.map(r => Py.pyFindAllCount("\\(", Py.rstrip(r))).sum.toDouble,
-      "get_javascript_rows" -> scriptJoined.size.toDouble,
-      "get_link_href" -> attrCnt("link", "href").toDouble,
-      // F30: Py2 `str > int` is always True → any `function name(` match
-      "get_long_javascript_function" -> b(scriptJoined.exists(r =>
-        Py.pySplit(r, ";").exists(seg => Py.pyMatch("^.*function ([^\\(]*)\\(.*$", seg)))),
-      // F29: only the LAST script row's `=` position decides
-      "get_long_javascript_variable" -> b(scriptJoined.nonEmpty && scriptJoined.last.indexOf('=') > 12),
-      "get_meta" -> num("<meta .*index.php?Sp1="),
-      "get_object_codebase" -> attrCnt("object", "codebase").toDouble,
-      "get_onclick" -> num("<div onclick=.window.open\\(\""),
-      "get_onerror1" -> num("onerror\\("),
-      "get_onerror2" -> num("onerror\\("),
-      "get_onload" -> num("onload\\("),
-      "get_onunload" -> num("onunload\\("),
-      "get_out_link_in_form" -> formAs.count(a => a.getOpt("href").exists(h => h.nonEmpty && h != "#")).toDouble,
-      "get_outofplace_tags" -> hidden.toDouble,
-      "get_pop" -> num("pop\\("),
-      "get_replaceNode" -> num("replaceNode\\("),
-      "get_script1" -> num("<script>"),
-      "get_script2" -> num("<script>"),
-      "get_void_link_in_form" -> formAs.count(a => a.getOpt("href").exists(h => h.isEmpty || h == "#")).toDouble
-    )
-    set3HttpNames.map(values)
-  }
-
-  /** ASCII-sorted feature names = the exact Python `dir()` order. */
-  val set3HttpNames: Vector[String] = Vector(
-    "get_ADODBStream", "get_ExcelApplication", "get_FileSystemObject",
-    "get_MSXML21", "get_MSXML22", "get_MicrosoftXMLDOM", "get_SetInterval",
-    "get_SetTimeout", "get_WScriptShell", "get_WordApplication",
-    "get_applet_codebase", "get_applet_tags", "get_attachEvent",
-    "get_dispatchEvent", "get_embed_src_length", "get_embed_tags",
-    "get_escap", "get_eval", "get_exec", "get_form", "get_form_in_javascript",
-    "get_frame", "get_frequent_head_title_body", "get_fromChartCode",
-    "get_iframe", "get_input", "get_input_in_javascript",
-    "get_javascript_function_calls", "get_javascript_length",
-    "get_javascript_length2", "get_javascript_rows", "get_link_href",
-    "get_long_javascript_function", "get_long_javascript_variable",
-    "get_meta", "get_object_codebase", "get_onclick", "get_onerror1",
-    "get_onerror2", "get_onload", "get_onunload", "get_out_link_in_form",
-    "get_outofplace_tags", "get_pop", "get_replaceNode", "get_script1",
-    "get_script2", "get_void_link_in_form").sorted
-
-  /** `<a>` tags inside `<form>…</form>` spans (the `//form/a` xpath
-    * approximation for a flat scanner). */
-  private[graft] def formChildATags(html: String): Vector[Tag] = {
-    val out = Vector.newBuilder[Tag]
-    var i = 0
-    val lower = Py.lowerAscii(html)
-    // boundary after 'form' required: lxml's //form/a matches the exact
-    // element name, so '<formation>' must not open a pseudo form span
-    def atBoundary(idx: Int, tagLen: Int): Boolean = {
-      val b = idx + tagLen
-      b >= lower.length || lower.charAt(b) == '>' || lower.charAt(b) == '/' ||
-        lower.charAt(b) == ' ' || lower.charAt(b) == '\t' ||
-        lower.charAt(b) == '\n' || lower.charAt(b) == '\r' || lower.charAt(b) == '\f'
-    }
-    def findTag(pat: String, from: Int): Int = {
-      var k = lower.indexOf(pat, from)
-      while (k >= 0 && !atBoundary(k, pat.length)) k = lower.indexOf(pat, k + 1)
-      k
-    }
-    while (i < lower.length) {
-      val open = findTag("<form", i)
-      if (open < 0) i = lower.length
-      else {
-        val close = findTag("</form", open)
-        val end = if (close < 0) lower.length else close
-        out ++= TagScanner.findAll(TagScanner.scan(html.substring(open, end)), "a")
-        i = end + 1
-      }
-    }
-    out.result()
-  }
-}
-
-/** NSLOOKUP variants for set 2s
-  * (`extractors2s/nslookup_feature.py:36-72`). */
-object NslookupFeatureSets {
-
-  /** get_dnsrecord (:37-40): 0 iff any line STARTS with `***`. */
-  def dnsRecord(nslookupStr: String): Double =
-    if (nslookupStr.split("\n", -1).exists(_.indexOf("***") == 0)) 0.0 else 1.0
-
-  /** get_year_age (:49-54) over get_day_age (:56-72): YEARS =
-    * floor(trunc((now-date)/86400) / 365); >2 → 1, <1 → -1, else 0.
-    * No future-clamp in this variant; an unparseable serial would
-    * NameError in the reference — defined substitute: day age 0. */
-  def yearAge(nslookupStr: String, asOfEpochSeconds: Long): Double = {
-    val serial = NslookupFeatures.getSerial(nslookupStr)
-    val days: Long = serial match {
-      case None => 0L
-      case Some(s) =>
-        val epoch: Option[Long] =
-          if (Py.pyMatch("^[1-2]\\d{3}(0[1-9]|10|11|12)(0[1-9]|[1-2]\\d|3[0-2])\\d{2}$", s)) {
-            try {
-              val d = java.time.LocalDate.parse(Py.sliceTo(s, s.length - 2),
-                java.time.format.DateTimeFormatter.BASIC_ISO_DATE)
-              Some(d.atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond)
-            } catch { case _: Exception => None }
-          } else if (Py.pyMatch("^\\d+$", s)) s.toDoubleOption.map(_.toLong)
-          else None
-        epoch.map(ep => ((asOfEpochSeconds - ep) / 86400.0).toLong).getOrElse(0L)
-    }
-    val years = java.lang.Math.floorDiv(days, 365L)
-    if (years > 2) 1.0 else if (years < 1) -1.0 else 0.0
-  }
-}
-
-/** The full pluggable-set registry
-  * (`feature_extractor.py --select extractorsN`, SURVEY.md §2.6).
-  * Canonical block order everywhere: url, http, header, host, nslookup,
-  * whois, timer, cycling (§3.2). A set whose extractor for a block has
-  * no features contributes nothing for that block; a missing BLOCK
-  * zero-fills the extractor's width (`feature_extractor.py:93-96`). */
-object ExtractorSets {
-
-  final case class SetDef(
-      name: String,
-      featureNames: Vector[String],
-      extract: (Blocks.BlockData, ExtractConfig) => Array[Double])
-
-  private def urlOf(data: Blocks.BlockData): String = data.url
-
-  private def blocksOf(data: Blocks.BlockData, key: String): Vector[String] =
-    data.blocks.getOrElse(key, Vector.empty)
-
-  private def zeroOr(blocks: Vector[String], n: Int)(f: Vector[String] => Vector[Double]): Vector[Double] =
-    if (blocks.isEmpty) Vector.fill(n)(0.0) else f(blocks)
-
-  val set1: SetDef = SetDef("extractors",
-    Vector("is_long_url", "dots", "is_ip_address", "is_http_connection",
-      "is_at_symbol", "is_hexadecimal",
-      "http_is_frame", "http_is_redirect", "http_is_form", "header_is_redirect"),
-    (d, _) => (UrlFeatureSets.set1(urlOf(d)) ++
-      HttpFeatureSets.set1(blocksOf(d, "http"), urlOf(d)) ++
-      zeroOr(blocksOf(d, "header"), 1)(bs => HeaderFeatures.extract(bs))).toArray)
-
-  val set2s: SetDef = SetDef("extractors2s",
-    Vector("ip_or_hex", "dots3", "is_at_symbol", "url_length3",
-      "is_login_form", "rule_based", "title_feature",
-      "dnsrecord", "year_age"),
-    (d, cfg) => (UrlFeatureSets.set2s(urlOf(d)) ++
-      HttpFeatureSets.set2s(blocksOf(d, "http"), urlOf(d), cfg) ++
-      zeroOr(blocksOf(d, "nslookup"), 2) { bs =>
-        Vector(NslookupFeatureSets.dnsRecord(bs.last),
-          NslookupFeatureSets.yearAge(bs.last, cfg.asOfEpochSeconds))
-      }).toArray)
-
-  val set3: SetDef = SetDef("extractors3",
-    UrlFeatureSets.set3Features.map(_._1) ++ HttpFeatureSets.set3HttpNames,
-    (d, _) => (UrlFeatureSets.set3(urlOf(d)) ++
-      HttpFeatureSets.set3(blocksOf(d, "http"), urlOf(d))).toArray)
-
-  val set4: SetDef = SetDef("extractors4",
-    Vector("is_ip_address", "dots", "is_special_words", "is_slashes",
-      "null_a_tag", "external_a", "is_ssl"),
-    (d, _) => (UrlFeatureSets.set4(urlOf(d)) ++
-      HttpFeatureSets.set4(blocksOf(d, "http"), urlOf(d))).toArray)
-
-  val set5: SetDef = SetDef("extractors5",
-    ExtractorSet5.featureNames,
-    (d, cfg) => ExtractorSet5.extractFromBlocks(d, cfg))
-
-  val set6: SetDef = SetDef("extractors6",
-    Vector("is_http_connection", "is_ip_address", "dots", "is_special_words",
-      "url_linkin_num", "url_traffic_rank") ++
-      Vector("kbytes", "is_frame", "is_meta_redirect", "is_meta_base64_redirect",
-        "script_rate", "script_block_rate", "style_block_rate",
-        "external_a_tag_same_domain", "null_a_tag", "link_rate", "img_rate",
-        "title_feature", "is_login_form") ++
-      Vector("header_is_redirect", "ipv4_numbers", "ipv6_numbers",
-        "is_alias", "is_weird_serial", "day_age", "is_with_whois", "is_cycling"),
-    (d, cfg) => (UrlFeatureSets.set6(urlOf(d)) ++
-      HttpFeatureSets.set6(blocksOf(d, "http"), urlOf(d), cfg) ++
-      zeroOr(blocksOf(d, "header"), 1)(bs => HeaderFeatures.extract(bs)) ++
-      HostFeatures.extract(blocksOf(d, "host")) ++
-      NslookupFeatures.extract(blocksOf(d, "nslookup"), cfg.asOfEpochSeconds) ++
-      WhoisFeatures.extract(blocksOf(d, "whois")) ++
-      CyclingFeatures.extract(blocksOf(d, "cycling"))).toArray)
-
-  val all: Map[String, SetDef] = Map(
-    "extractors" -> set1, "extractors2s" -> set2s, "extractors3" -> set3,
-    "extractors4" -> set4, "extractors5" -> set5, "extractors6" -> set6)
-
-  /** Extract with a selected set over rendered sample text. */
-  def extract(setName: String, sampleText: String, cfg: ExtractConfig): Array[Double] = {
-    val data = Blocks.splitText(sampleText)
-    all(setName).extract(data, cfg)
-  }
 }

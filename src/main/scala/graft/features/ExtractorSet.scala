@@ -58,7 +58,7 @@ object ExtractorSet5 {
     def blocks(k: String): Vector[String] = data.blocks.getOrElse(k, Vector.empty)
     val out = Array.newBuilder[Double]
     out ++= UrlFeatures.extract(url)
-    out ++= HttpFeatures.extract(blocks("http"), url, cfg)
+    out ++= HttpFeatures.extract(blocks("http"), url)
     out ++= HeaderFeatures.extract(blocks("header"))
     out ++= HostFeatures.extract(blocks("host"))
     out ++= NslookupFeatures.extract(blocks("nslookup"), cfg.asOfEpochSeconds)

@@ -5,24 +5,11 @@ import graft.html.TagScanner.Tag
 import graft.py.Py
 import graft.urls.Canonicalize
 
-/** Pluggable title-ELM scorer (`get_title_feature`,
-  * `extractors5/http_feature.py:477-512`). The reference loads a
-  * joblib-pickled ELM whose blobs are missing upstream
-  * (`.MISSING_LARGE_BLOBS`); our engine trains its own seeded ELM
-  * (graft.tfidf.Elm) and injects it here. Default scores 0 (the
-  * reference's no-title value). */
-trait TitleScorer extends Serializable {
-  /** @param titleTokens the `__split_title` tokens of all titles */
-  def score(titleTokens: Seq[String]): Double
-}
-object ZeroTitleScorer extends TitleScorer {
-  def score(titleTokens: Seq[String]): Double = 0.0
-}
-
-final case class ExtractConfig(
-    asOfEpochSeconds: Long, // replaces datetime.now() (nslookup day-age)
-    titleScorer: TitleScorer = ZeroTitleScorer,
-    tfidfPercent: Double = 0.9)
+/** Per-run extraction input: the as-of instant that replaces the
+  * reference's `datetime.now()` (nslookup day-age). There is no
+  * title-scorer input: `get_title_feature` (slot 14) is constant 0 — see
+  * [[HttpFeatures]]. */
+final case class ExtractConfig(asOfEpochSeconds: Long)
 
 /** HTTP-block features — `/root/reference/extractors5/http_feature.py`.
   * Feature order (:59): get_kbytes, is_frame, is_meta_redirect,
@@ -32,17 +19,21 @@ final case class ExtractConfig(
   * same_external_domain_link_rate, same_external_domain_img_rate,
   * get_title_feature, get_form_in_javascript — 16 values.
   *
-  * Multi-block samples merge via `__add__` (:532-549): tag lists,
-  * row/byte counters and titles accumulate; `html_str`-derived state
-  * (script_block, form tags) stays the LAST block's (not merged in the
-  * reference either — `get_form()` re-reads `self.html_tree`).
+  * `get_title_feature` (:477-512) is constant 0.0: the reference scores
+  * the page titles with a joblib-pickled ELM whose blobs are missing
+  * upstream (`.MISSING_LARGE_BLOBS`), and nothing trains one into the
+  * extractor, so titles are not collected.
+  *
+  * Multi-block samples merge via `__add__` (:532-549): tag lists and
+  * row/byte counters accumulate; `html_str`-derived state (script_block,
+  * form tags) stays the LAST block's (not merged in the reference
+  * either — `get_form()` re-reads `self.html_tree`).
   */
 object HttpFeatures {
   val size = 16
 
   /** Parsed per-block state; `merged*` fields follow `__add__`. */
   final case class State(
-      htmlStr: String,
       tags: Vector[Tag], // last block's full tag list (get_form path)
       aTags: Vector[Tag],
       linkTags: Vector[Tag],
@@ -54,7 +45,6 @@ object HttpFeatures {
       scriptBlockRows: Int,
       totalRows: Int,
       bytes: Int,
-      titles: Vector[String],
       scriptBlock: Vector[String]) {
 
     /** `instance += pre` (:88-90): current absorbs previous. */
@@ -68,8 +58,7 @@ object HttpFeatures {
       styleBlockRows = styleBlockRows + prev.styleBlockRows,
       scriptBlockRows = scriptBlockRows + prev.scriptBlockRows,
       totalRows = totalRows + prev.totalRows,
-      bytes = bytes + prev.bytes,
-      titles = titles ++ prev.titles)
+      bytes = bytes + prev.bytes)
   }
 
   /** `__striped_html_str` (:157-167): rstrip the block, drop lines that
@@ -186,7 +175,6 @@ object HttpFeatures {
     // bucket keeps document order (iframe/frame stay segregated to
     // mirror `find_all('iframe') + find_all('frame')` concatenation)
     val aB, linkB, imgB, iframeB, frameB, redirectB, scriptB = Vector.newBuilder[Tag]
-    val titleB = Vector.newBuilder[String]
     for (t <- tags) {
       t.name match {
         case "a" => aB += t
@@ -197,13 +185,10 @@ object HttpFeatures {
         case "script" => scriptB += t
         case "meta" =>
           if (t.getOpt("http-equiv").exists(v => Py.pyMatchI("^refresh$", v))) redirectB += t
-        case "title" =>
-          if (Py.stripUni(t.text).nonEmpty) titleB += t.text
         case _ => ()
       }
     }
     State(
-      htmlStr = htmlStr,
       tags = tags,
       aTags = aB.result(),
       linkTags = linkB.result(),
@@ -215,7 +200,6 @@ object HttpFeatures {
       scriptBlockRows = calTagBlockRows(stripedRows, "script"),
       totalRows = stripedRows.length,
       bytes = stripedBytes,
-      titles = titleB.result(),
       scriptBlock = calTagBlock(rawRows, "script"))
   }
 
@@ -260,20 +244,6 @@ object HttpFeatures {
     if (total > 0) nullUrl.toDouble / total.toDouble else 0.0
   }
 
-  /** extractors4's `null_a_tag` (extractors4/http_feature.py:230-247):
-    * identical null test to [[nullATag]] but returns the ABSOLUTE count
-    * (`return null_url`), not the rate — the two sets deliberately
-    * diverge here. */
-  def nullATagCount(st: State): Double = {
-    var nullUrl = 0
-    for (node <- st.aTags) {
-      val url = node.getOpt("href")
-      val keep = truthy(url) && !url.get.startsWith("#") && !url.get.contains("void(")
-      if (!keep) nullUrl += 1
-    }
-    nullUrl.toDouble
-  }
-
   def sameExternalDomainLinkRate(st: State, pageDomain: String): Double =
     externalRate(st.linkTags, "href", pageDomain, u => truthy(u) && u.get != "#")
 
@@ -296,20 +266,6 @@ object HttpFeatures {
       val first = Py.lowerAscii(if (nl < 0) block else block.substring(0, nl))
       first.contains("write(") &&
         Py.pyMatchM("^.*write\\(.*<form[^>]*>.*$", first)
-    }
-
-  /** extractors6's `_get_form_in_javascript`
-    * (extractors6/http_feature.py:150-155): same anchored first-line-only
-    * shape as [[formInJavascriptWrite]], but the regex is
-    * `^.*\.write(ln|)\(.*<form[^>]*>.*$` — a DOT before `write` and an
-    * optional `ln`, unlike extractors5's bare `write\(`. */
-  def formInJavascriptWriteDot(st: State): Boolean =
-    st.scriptBlockRows != 0 && {
-      val block = st.scriptBlock.mkString("\n")
-      val nl = block.indexOf('\n')
-      val first = Py.lowerAscii(if (nl < 0) block else block.substring(0, nl))
-      first.contains("write") &&
-        Py.pyMatchM("^.*\\.write(ln|)\\(.*<form[^>]*>.*$", first)
     }
 
   /** `get_form_in_javascript` (:92-137). Quirks mirrored: `name`/`id`
@@ -380,15 +336,10 @@ object HttpFeatures {
     number > 0
   }
 
-  /** `__split_title` (:455-463) — 34 delimiters replaced by spaces,
-    * tokens lower-cased. Shared with the TF-IDF tokenizer. */
-  def splitTitle(titles: Seq[String]): Vector[String] =
-    titles.toVector.flatMap(t => graft.tfidf.Tokenize.terms(t))
-
   /** Extract the 16 features from the sample's http blocks.
     * @param rawUrl the sample's first line (pre-rstrip, per
     *               `feature_extractor.py:84` kwarg then :24 rstrip) */
-  def extract(blocks: Seq[String], rawUrl: String, cfg: ExtractConfig): Vector[Double] = {
+  def extract(blocks: Seq[String], rawUrl: String): Vector[Double] = {
     if (blocks.isEmpty) return Vector.fill(size)(0.0)
     val pageDomain = Canonicalize.extractorDomain(Py.rstrip(rawUrl))
     val st = blocks.map(buildState).reduce((prev, cur) => cur.absorb(prev))
@@ -397,9 +348,6 @@ object HttpFeatures {
       t.getOpt("content").exists(c => Py.pyMatchI("^.*base64.*$", Py.lowerUni(c)))
     }
     val isForm = TagScanner.findAll(st.tags, "form").nonEmpty || formInJavascriptWrite(st)
-    val titleFeature =
-      if (st.titles.isEmpty) 0.0
-      else cfg.titleScorer.score(splitTitle(st.titles))
     Vector(
       st.bytes.toDouble / 1024.0,
       if (st.frameTags.nonEmpty) 1.0 else 0.0,
@@ -417,7 +365,7 @@ object HttpFeatures {
       nullATag(st),
       sameExternalDomainLinkRate(st, pageDomain),
       sameExternalDomainImgRate(st, pageDomain),
-      titleFeature,
+      0.0, // get_title_feature — no title model (see the object doc)
       if (formInJavascript(st)) 1.0 else 0.0)
   }
 }

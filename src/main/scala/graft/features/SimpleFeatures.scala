@@ -166,8 +166,6 @@ object NslookupFeatures {
     None
   }
 
-  def isAlias(nslookupStr: String): Boolean = canonicalNames(nslookupStr).nonEmpty
-
   def isWeirdSerial(serial: Option[String]): Boolean = serial.isEmpty // bound-method quirk, see Scaladoc
 
   private val dateRe = "^[1-2]\\d{3}(0[1-9]|10|11|12)(0[1-9]|[1-2]\\d|3[0-2])\\d{2}$"

@@ -159,15 +159,27 @@ object Cuckoo {
     * pattern splitmix64-mixed real hashes hit with p = 2^-48 per entry. */
   val FpSentinelTag: Long = 0x7ff8_dead_0000_0000L
 
-  /** `capacity` keys at ~95% max load; numBuckets rounded to a power of
-    * two; 4-slot buckets, 16-bit fingerprints (fpp ~ 2^-13). */
-  def apply(capacity: Int, bucketSize: Int = 4, maxKicks: Int = 500): Cuckoo = {
+  private val DefaultBucketSize = 4
+
+  /** Buckets for `capacity` keys at ~95% max load, rounded up to a
+    * power of two. */
+  private def numBuckets(capacity: Int, bucketSize: Int): Int = {
     val needed = math.max(1, math.ceil(capacity / 0.95 / bucketSize).toInt)
     var nb = 1
     while (nb < needed) nb <<= 1
-    new Cuckoo(new Array[Short](nb * bucketSize), bucketSize, maxKicks,
-      scala.collection.mutable.ArrayBuffer.empty[Long])
+    nb
   }
+
+  /** `capacity` keys at ~95% max load; numBuckets rounded to a power of
+    * two; 4-slot buckets, 16-bit fingerprints (fpp ~ 2^-13). */
+  def apply(capacity: Int, bucketSize: Int = DefaultBucketSize, maxKicks: Int = 500): Cuckoo =
+    new Cuckoo(new Array[Short](numBuckets(capacity, bucketSize) * bucketSize), bucketSize,
+      maxKicks, scala.collection.mutable.ArrayBuffer.empty[Long])
+
+  /** Bytes of the fingerprint table `Cuckoo(capacity)` allocates (2 per
+    * slot) — the size a seen-set budget must hold per partition. */
+  def tableBytes(capacity: Int): Long =
+    numBuckets(capacity, DefaultBucketSize).toLong * DefaultBucketSize * 2
 
   def deserialize(b: Array[Byte]): Cuckoo = {
     val bb = java.nio.ByteBuffer.wrap(b)

@@ -1,6 +1,7 @@
 package graft.tfidf
 
 import breeze.linalg.{DenseMatrix, DenseVector}
+import org.apache.spark.storage.StorageLevel
 
 /** Extreme Learning Machine, the architecture+formula contract of the
   * reference's `ELMClassifier(activation_func='sigmoid')`
@@ -173,75 +174,80 @@ object LcElm {
     val h = nHidden; val m = nEstimators
     // two passes scan `rows` (member Grams, then combiner Grams over
     // the members' votes) — persist so pass 2 does not re-execute the
-    // caller's full featurization lineage
-    val rowsP = rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // pass 1: every member's (HᵀH, Hᵀy±) in one scan
-    val grams = Elm.gramReduce(rowsP.rdd.mapPartitions { it =>
-      val ls = layersBc.value
-      val g = Array.fill(m)(new Array[Double](h * h))
-      val v = Array.fill(m)(new Array[Double](h))
-      val hx = new Array[Double](h)
-      var any = false
-      it.foreach { case (x, y01) =>
-        any = true
-        val ypm = if (y01 > 0.5) 1.0 else -1.0
-        var mi = 0
-        while (mi < m) {
-          Elm.hRow(ls(mi)._1, ls(mi)._2, x, hx)
-          val gm = g(mi); val vm = v(mi)
+    // caller's full featurization lineage. Only a persist made here is
+    // released (a caller's own cache stays), and it is released even
+    // when a pass throws
+    val ownCache = rows.storageLevel == StorageLevel.NONE
+    if (ownCache) rows.persist(StorageLevel.MEMORY_AND_DISK)
+    val (members, ftf, fty) = try {
+      // pass 1: every member's (HᵀH, Hᵀy±) in one scan
+      val grams = Elm.gramReduce(rows.rdd.mapPartitions { it =>
+        val ls = layersBc.value
+        val g = Array.fill(m)(new Array[Double](h * h))
+        val v = Array.fill(m)(new Array[Double](h))
+        val hx = new Array[Double](h)
+        var any = false
+        it.foreach { case (x, y01) =>
+          any = true
+          val ypm = if (y01 > 0.5) 1.0 else -1.0
+          var mi = 0
+          while (mi < m) {
+            Elm.hRow(ls(mi)._1, ls(mi)._2, x, hx)
+            val gm = g(mi); val vm = v(mi)
+            var a = 0
+            while (a < h) {
+              val ha = hx(a)
+              vm(a) += ha * ypm
+              var c = 0
+              while (c < h) { gm(a * h + c) += ha * hx(c); c += 1 }
+              a += 1
+            }
+            mi += 1
+          }
+        }
+        if (any) Iterator.single((g, v)) else Iterator.empty
+      }) { (l, r) =>
+        for (mi <- 0 until m) {
+          var i = 0; while (i < h * h) { l._1(mi)(i) += r._1(mi)(i); i += 1 }
+          i = 0; while (i < h) { l._2(mi)(i) += r._2(mi)(i); i += 1 }
+        }
+        l
+      }
+      val members = Vector.tabulate(m) { mi =>
+        val G = new DenseMatrix(h, h, grams._1(mi))
+        var i = 0; while (i < h) { G(i, i) += ridge; i += 1 }
+        ElmModel(layers(mi)._1, layers(mi)._2, (G \ DenseVector(grams._2(mi))).toArray)
+      }
+      val membersBc = sc.broadcast(members)
+      // pass 2: combiner Gram over the vote matrix F (raw 0/1 targets —
+      // lc-elm.py:61-63, quirk preserved)
+      val (ftf, fty) = Elm.gramReduce(rows.rdd.mapPartitions { it =>
+        val ms = membersBc.value
+        val g = new Array[Double](m * m)
+        val v = new Array[Double](m)
+        val fx = new Array[Double](m)
+        var any = false
+        it.foreach { case (x, y01) =>
+          any = true
+          var mi = 0
+          while (mi < m) { fx(mi) = if (ms(mi).decision(x) >= 0.0) 1.0 else -1.0; mi += 1 }
           var a = 0
-          while (a < h) {
-            val ha = hx(a)
-            vm(a) += ha * ypm
+          while (a < m) {
+            val fa = fx(a)
+            v(a) += fa * y01
             var c = 0
-            while (c < h) { gm(a * h + c) += ha * hx(c); c += 1 }
+            while (c < m) { g(a * m + c) += fa * fx(c); c += 1 }
             a += 1
           }
-          mi += 1
         }
+        if (any) Iterator.single((g, v)) else Iterator.empty
+      }) { (l, r) =>
+        var i = 0; while (i < m * m) { l._1(i) += r._1(i); i += 1 }
+        i = 0; while (i < m) { l._2(i) += r._2(i); i += 1 }
+        l
       }
-      if (any) Iterator.single((g, v)) else Iterator.empty
-    }) { (l, r) =>
-      for (mi <- 0 until m) {
-        var i = 0; while (i < h * h) { l._1(mi)(i) += r._1(mi)(i); i += 1 }
-        i = 0; while (i < h) { l._2(mi)(i) += r._2(mi)(i); i += 1 }
-      }
-      l
-    }
-    val members = Vector.tabulate(m) { mi =>
-      val G = new DenseMatrix(h, h, grams._1(mi))
-      var i = 0; while (i < h) { G(i, i) += ridge; i += 1 }
-      ElmModel(layers(mi)._1, layers(mi)._2, (G \ DenseVector(grams._2(mi))).toArray)
-    }
-    val membersBc = sc.broadcast(members)
-    // pass 2: combiner Gram over the vote matrix F (raw 0/1 targets —
-    // lc-elm.py:61-63, quirk preserved)
-    val (ftf, fty) = Elm.gramReduce(rowsP.rdd.mapPartitions { it =>
-      val ms = membersBc.value
-      val g = new Array[Double](m * m)
-      val v = new Array[Double](m)
-      val fx = new Array[Double](m)
-      var any = false
-      it.foreach { case (x, y01) =>
-        any = true
-        var mi = 0
-        while (mi < m) { fx(mi) = if (ms(mi).decision(x) >= 0.0) 1.0 else -1.0; mi += 1 }
-        var a = 0
-        while (a < m) {
-          val fa = fx(a)
-          v(a) += fa * y01
-          var c = 0
-          while (c < m) { g(a * m + c) += fa * fx(c); c += 1 }
-          a += 1
-        }
-      }
-      if (any) Iterator.single((g, v)) else Iterator.empty
-    }) { (l, r) =>
-      var i = 0; while (i < m * m) { l._1(i) += r._1(i); i += 1 }
-      i = 0; while (i < m) { l._2(i) += r._2(i); i += 1 }
-      l
-    }
-    rowsP.unpersist(blocking = false)
+      (members, ftf, fty)
+    } finally if (ownCache) rows.unpersist(blocking = false)
     val Gf = new DenseMatrix(m, m, ftf)
     var i = 0; while (i < m) { Gf(i, i) += ridge; i += 1 }
     LcElmModel(members, (Gf \ DenseVector(fty)).toArray)

@@ -126,4 +126,11 @@ class CuckooSpec extends AnyFunSuite {
       assert(xs.forall(f.mightContain), s"trial=$trial n=$n")
     }
   }
+
+  test("tableBytes is the table size Cuckoo(capacity) allocates") {
+    // an empty filter's blob = 2 header bytes + 3 ints + the table +
+    // an empty stash's length int
+    for (c <- Seq(1, 4, 1000, 100000))
+      assert(Cuckoo.tableBytes(c) == Cuckoo(c).serialize.length - 18, s"capacity=$c")
+  }
 }

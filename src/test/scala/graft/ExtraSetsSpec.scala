@@ -1,22 +1,11 @@
 package graft
 
 import graft.features._
-import graft.parse.Blocks
-import graft.py.Py
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Extractor sets 1/2s/3/4/6 — hand-computed expectations against the
-  * cited reference semantics (SURVEY.md §2.6). */
+/** URL features of extractor sets 1/2s/3/4 — hand-computed expectations
+  * against the cited reference semantics (SURVEY.md §2.6). */
 class ExtraSetsSpec extends AnyFunSuite {
-
-  private val asOf = java.time.Instant.parse("2024-03-01T00:00:00Z").getEpochSecond
-  private val cfg = ExtractConfig(asOf)
-
-  private def sample(url: String, http: String, extra: String = ""): Blocks.BlockData = {
-    val text = url + "\n" +
-      "\n<=HTTP BEGIN=>\n" + http + "\n<=HTTP END=>\n" + extra
-    Blocks.split(Py.readLines(text))
-  }
 
   test("set1 url: long-url threshold, at-symbol, feature order") {
     val long = "http://e.com/" + "a" * 120
@@ -76,151 +65,5 @@ class ExtraSetsSpec extends AnyFunSuite {
     assert(doubleLetter("ab").head == "bab")
     assert(reverseLetter("abc") == Seq("bac", "acb"))
     assert(wrongVowel("go").contains("ga"))
-  }
-
-  test("set1 http: frame/redirect/form booleans") {
-    val html = """<html><iframe src="x"></iframe>
-      |<meta http-equiv="refresh" content="0; url=http://n/">
-      |<form action="/l"></form></html>""".stripMargin
-    assert(HttpFeatureSets.set1(Seq(html), "http://e.com/") == Vector(1.0, 1.0, 1.0))
-    assert(HttpFeatureSets.set1(Seq("<html><p>x</p></html>"), "http://e.com/") == Vector(0.0, 0.0, 0.0))
-    assert(HttpFeatureSets.set1(Nil, "u") == Vector(0.0, 0.0, 0.0))
-  }
-
-  test("set2s http: rule_based over LINK tags incl. the m!=total quirk") {
-    def page(links: String) = s"<html><head>$links</head><body></body></html>"
-    val mixed = page(
-      """<link href="http://ext1.com/a.css"><link href="http://ext2.com/b.css">
-        |<link href="http://e.com/c.css"><link href="http://e.com/d.css">""".stripMargin)
-    // 2 of 4 external → rate 0.5 → rule_based 0
-    assert(HttpFeatureSets.set2s(Seq(mixed), "http://e.com/\n", cfg)(1) == 0.0)
-    val allExt = page("""<link href="http://x.com/a.css"><link href="http://y.com/b.css">""")
-    // ALL external → m == total → rate forced 0 → rule_based 1 (quirk)
-    assert(HttpFeatureSets.set2s(Seq(allExt), "http://e.com/\n", cfg)(1) == 1.0)
-    // is_login_form constantly 1 (.tag quirk)
-    assert(HttpFeatureSets.set2s(Seq(mixed), "http://e.com/\n", cfg)(0) == 1.0)
-  }
-
-  test("set4 http: external_a absolute count and is_ssl") {
-    val html =
-      """<html><a href="http://x.com/1">a</a><a href="http://x.com/2">b</a>
-        |<a href="http://e.com/own">c</a><a href="#">d</a></html>""".stripMargin
-    val v = HttpFeatureSets.set4(Seq(html), "https://e.com/\n")
-    assert(v(1) == 2.0) // two external hrefs (x.com twice)
-    assert(v(2) == 1.0) // is_ssl
-    assert(v(0) == 1.0) // ABSOLUTE null count (extractors4 `return null_url`)
-  }
-
-  test("set6 http: is_login_form = form and not search-word") {
-    val formNoSearch = "<html><body><form action=\"/l\"><input type=\"text\"></form><p>welcome</p></body></html>"
-    val formSearch = "<html><body><form action=\"/l\"><input name=\"search\"></form></body></html>"
-    assert(HttpFeatureSets.set6(Seq(formNoSearch), "http://e.com/\n", cfg).last == 1.0)
-    assert(HttpFeatureSets.set6(Seq(formSearch), "http://e.com/\n", cfg).last == 0.0)
-    assert(HttpFeatureSets.set6(Seq("<html><body><p>plain</p></body></html>"), "http://e.com/\n", cfg).last == 0.0)
-  }
-
-  test("set6 http: search walk gated on <body>; script attrs excluded; js-write form counts") {
-    // same search-bearing form but NO <body>: _get_all_text/_get_all_attrs
-    // return [] (html.parser synthesizes no body) → is_login_form = 1
-    val noBody = "<html><form action=\"/l\"><input name=\"search\"></form></html>"
-    assert(HttpFeatureSets.set6(Seq(noBody), "http://e.com/\n", cfg).last == 1.0)
-    // 'search' only inside a script tag's attr: excluded from the walk
-    val scriptAttr =
-      "<html><body><form action=\"/l\"></form><script src=\"http://cdn/search.js\"></script></body></html>"
-    assert(HttpFeatureSets.set6(Seq(scriptAttr), "http://e.com/\n", cfg).last == 1.0)
-    // no <form> tag, but document.write('<form ...>') on the first
-    // script line → extractors6 is_form via _get_form_in_javascript
-    val jsForm =
-      "<html><body>\n<script>document.write('<form name=\"x\">');\nvar a=1;\n</script>\n<p>hi</p>\n</body></html>"
-    assert(HttpFeatureSets.set6(Seq(jsForm), "http://e.com/\n", cfg).last == 1.0)
-    // extractors6 requires the DOT: a bare write( must NOT count
-    val bareWrite =
-      "<html><body>\n<script>write('<form name=\"x\">');\nvar a=1;\n</script>\n<p>hi</p>\n</body></html>"
-    assert(HttpFeatureSets.set6(Seq(bareWrite), "http://e.com/\n", cfg).last == 0.0)
-  }
-
-  test("set3 http: object counts, dead-return quirks, js metrics") {
-    val names = HttpFeatureSets.set3HttpNames
-    // NOTE the reference's __cal_tag_block_rows emits a closed block as
-    // the slice rows[begin : i-begin+1] — for blocks past the document
-    // midpoint that slice is EMPTY, so the script block sits near the
-    // top here (begin=1, close=3 → rows 1..2 captured).
-    val html =
-      """<html>
-        |<script> function averyverylongname(a) { return eval(a); }
-        |var x = new ActiveXObject("Scripting.FileSystemObject"); eval(code);
-        |</script>
-        |<head><title>t</title></head><body>
-        |<embed src="abcd"><applet codebase="cb"></applet>
-        |<input type="hidden"><div style="display: none">x</div>
-        |</body></html>""".stripMargin
-    val v = HttpFeatureSets.set3(Seq(html), "http://e.com/\n")
-    def f(n: String) = v(names.indexOf(n))
-    assert(f("get_FileSystemObject") == 1.0) // numberOfObject scans the FULL html
-    assert(f("get_eval") == 2.0)             // two `;`-segments contain eval(
-    assert(f("get_embed_tags") == 1.0)
-    assert(f("get_embed_src_length") == 4.0)
-    assert(f("get_applet_codebase") == 1.0)
-    assert(f("get_outofplace_tags") == 2.0) // type=hidden + display:none
-    assert(f("get_form_in_javascript") == 0.0) // dead-return quirk
-    assert(f("get_input_in_javascript") == 0.0)
-    assert(f("get_javascript_rows") == 2.0) // rows 1..2 of the close slice
-    assert(f("get_long_javascript_function") == 1.0) // str>int quirk: any `function x(`
-    // a block past the midpoint yields an EMPTY close slice (quirk)
-    val v2 = HttpFeatureSets.set3(Seq(
-      "<html>\n<p>a</p>\n<p>b</p>\n<p>c</p>\n<script>\nfunction f(a) { return a; }\n</script>\n</html>"),
-      "http://e.com/\n")
-    assert(v2(names.indexOf("get_javascript_rows")) == 0.0)
-  }
-
-  test("set3 http: outofplace multi-counts, embed from FIRST block, js byte length") {
-    val names = HttpFeatureSets.set3HttpNames
-    def f(v: Vector[Double], n: String) = v(names.indexOf(n))
-    // one tag matching three hidden-conditions counts 3 (the reference
-    // concatenates four xpath node-lists)
-    val multi = "<html>\n<input type=\"hidden\" hidden style=\"display: none\">\n</html>"
-    assert(f(HttpFeatureSets.set3(Seq(multi), "http://e.com/\n"), "get_outofplace_tags") == 3.0)
-    // merged blocks: `self.embed = other.embed` pairwise → the fold
-    // leaves the FIRST block's standalone embed list
-    val b1 = "<html>\n<p>x</p>\n</html>"
-    val b2 = "<html>\n<embed src=\"abcd\">\n</html>"
-    val v12 = HttpFeatureSets.set3(Seq(b1, b2), "http://e.com/\n")
-    assert(f(v12, "get_embed_tags") == 0.0)
-    assert(f(v12, "get_embed_src_length") == 0.0)
-    val v21 = HttpFeatureSets.set3(Seq(b2, b1), "http://e.com/\n")
-    assert(f(v21, "get_embed_tags") == 1.0)
-    assert(f(v21, "get_embed_src_length") == 4.0)
-    // js length counts UTF-8 bytes (Py2 len over byte-str rows)
-    val row = "<script>var s = \"中文\";"
-    val js = "<html>\n" + row + "\n</script>\n<p></p>\n</html>"
-    val vj = HttpFeatureSets.set3(Seq(js), "http://e.com/\n")
-    assert(f(vj, "get_javascript_length") == Py.byteLen(row).toDouble)
-    assert(Py.byteLen(row) == row.length + 4) // 2 CJK chars, 3 bytes each
-  }
-
-  test("set2s nslookup: dnsrecord error lines and year-age buckets") {
-    assert(NslookupFeatureSets.dnsRecord("*** can't find host\n") == 0.0)
-    assert(NslookupFeatureSets.dnsRecord("Name: e.com\n") == 1.0)
-    val old = "\tserial = 2020010101\n" // 4+ years before asOf → years>2 → 1
-    val recent = "\tserial = 2023120101\n" // ~0.25y → <1 → -1
-    val midAge = "\tserial = 2022090101\n" // ~1.5y → 0
-    assert(NslookupFeatureSets.yearAge(old, asOf) == 1.0)
-    assert(NslookupFeatureSets.yearAge(recent, asOf) == -1.0)
-    assert(NslookupFeatureSets.yearAge(midAge, asOf) == 0.0)
-  }
-
-  test("registry: widths and zero-fill composition per set") {
-    val d = sample("http://user@pay-pal9.example.com/p/1",
-      "<html><head><title>Welcome</title></head><body><a href=\"http://x.com/\">x</a></body></html>")
-    for ((name, s) <- ExtractorSets.all) {
-      val v = s.extract(d, cfg)
-      assert(v.length == s.featureNames.length, s"$name width")
-    }
-    assert(ExtractorSets.set1.featureNames.size == 10)
-    assert(ExtractorSets.set2s.featureNames.size == 9)
-    assert(ExtractorSets.set3.featureNames.size == 58)
-    assert(ExtractorSets.set4.featureNames.size == 7)
-    assert(ExtractorSets.set5.featureNames.size == 30)
-    assert(ExtractorSets.set6.featureNames.size == 27)
   }
 }

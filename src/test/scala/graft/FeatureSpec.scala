@@ -70,7 +70,6 @@ class SimpleExtractorSpec extends AnyFunSuite {
 
   test("nslookup: alias, serial, day age against fixed asOf") {
     val ns = "Server:\t8.8.8.8\n\nwww.e.com\tcanonical name = e.com.\n\torigin = ns1.e.com\n\tserial = 2024010101\n"
-    assert(NslookupFeatures.isAlias(ns))
     assert(NslookupFeatures.canonicalNames(ns) == Set("e.com"))
     val serial = NslookupFeatures.getSerial(ns)
     assert(serial.contains("2024010101"))
@@ -78,6 +77,7 @@ class SimpleExtractorSpec extends AnyFunSuite {
     assert(NslookupFeatures.isWeirdSerial(None))
     // asOf = 2024-03-01T00:00:00Z; serial date = 2024-01-01 → 60 days
     val asOf = java.time.Instant.parse("2024-03-01T00:00:00Z").getEpochSecond
+    assert(NslookupFeatures.extract(Seq(ns), asOf)(0) == 1.0) // is_alias
     assert(NslookupFeatures.dayAge(serial, asOf) == 60)
     // epoch-seconds serial
     assert(NslookupFeatures.dayAge(Some((asOf - 86400 * 10).toString), asOf) == 10)
@@ -175,9 +175,6 @@ class TagScannerSpec extends AnyFunSuite {
 }
 
 class HttpFeatureSpec extends AnyFunSuite {
-  val cfg = ExtractConfig(asOfEpochSeconds = 1700000000L,
-    titleScorer = new TitleScorer { def score(t: Seq[String]): Double = t.size.toDouble })
-
   val htmlLines = Vector(
     "<html>",
     "<head><title> My Title </title>",
@@ -222,7 +219,7 @@ class HttpFeatureSpec extends AnyFunSuite {
   }
 
   test("full 16-feature http vector") {
-    val v = HttpFeatures.extract(Seq(block), "http://e.com/\n", cfg)
+    val v = HttpFeatures.extract(Seq(block), "http://e.com/\n")
     val striped = HttpFeatures.stripedHtmlStr(block)
     val expected = Vector(
       Py.byteLen(striped) / 1024.0, // get_kbytes
@@ -239,7 +236,7 @@ class HttpFeatureSpec extends AnyFunSuite {
       0.4, // null a: '#' + void( → 2 of 5
       0.5, // link: cdn.ext.com 1 of 2
       1.0, // img: img.ext.com 1 of 1
-      2.0, // title feature: tokens [my, title] → stub scorer counts
+      0.0, // get_title_feature: constant (no title model)
       0.0) // form_in_javascript: getElementById row lost to slice quirk
     assert(v.size == 16)
     for (i <- v.indices) assert(math.abs(v(i) - expected(i)) < 1e-12, s"feature $i: ${v(i)} != ${expected(i)}")
@@ -247,21 +244,8 @@ class HttpFeatureSpec extends AnyFunSuite {
 
   test("base64 meta redirect flips features 2/3") {
     val b = "<meta http-equiv=\"refresh\" content=\"0; url=data:text/html;base64,AAAA\">\n"
-    val v = HttpFeatures.extract(Seq(b), "http://e.com/\n", cfg)
+    val v = HttpFeatures.extract(Seq(b), "http://e.com/\n")
     assert(v(2) == 0.0 && v(3) == 1.0)
-  }
-
-  test("formChildATags: '<formation>' does not open a form span") {
-    import graft.features.HttpFeatureSets
-    val none = HttpFeatureSets.formChildATags(
-      "<formation><a href=\"http://x/\">l</a></formation>")
-    assert(none.isEmpty)
-    val one = HttpFeatureSets.formChildATags(
-      "<form><a href=\"http://x/\">l</a></form>")
-    assert(one.size == 1)
-    val ws = HttpFeatureSets.formChildATags(
-      "<form id=a><a href=\"u\">l</a></form\n>")
-    assert(ws.size == 1)
   }
 
   test("form_in_javascript cross-type equality: non-ASCII id never matches") {
@@ -293,7 +277,7 @@ class HttpFeatureSpec extends AnyFunSuite {
       "var a=document.getElementsByTagName(\"form\");",
       " </script>").mkString("\n") + "\n"
     assert(HttpFeatures.formInJavascript(HttpFeatures.buildState(b)))
-    val v = HttpFeatures.extract(Seq(b), "http://e.com/\n", cfg)
+    val v = HttpFeatures.extract(Seq(b), "http://e.com/\n")
     assert(v(15) == 1.0)
   }
 
@@ -301,13 +285,13 @@ class HttpFeatureSpec extends AnyFunSuite {
     val b = "<x>\n<script>document.write(\"<form name=q>\")</script>\n"
     val st = HttpFeatures.buildState(b)
     assert(HttpFeatures.formInJavascriptWrite(st))
-    val v = HttpFeatures.extract(Seq(b), "http://e.com/\n", cfg)
+    val v = HttpFeatures.extract(Seq(b), "http://e.com/\n")
     assert(v(4) == 1.0) // is_form via script write
   }
 
   test("multi-block merge accumulates lists and counters") {
     val b2 = "<a href=\"http://ext1.com/3\">3</a>\n"
-    val v = HttpFeatures.extract(Seq(block, b2), "http://e.com/\n", cfg)
+    val v = HttpFeatures.extract(Seq(block, b2), "http://e.com/\n")
     // a tags: 6 total, ext1.com now 3 → 0.5
     assert(math.abs(v(10) - 0.5) < 1e-12)
     // bytes merged
@@ -317,7 +301,7 @@ class HttpFeatureSpec extends AnyFunSuite {
   }
 
   test("empty blocks zero-fill") {
-    assert(HttpFeatures.extract(Nil, "http://e.com/\n", cfg) == Vector.fill(16)(0.0))
+    assert(HttpFeatures.extract(Nil, "http://e.com/\n") == Vector.fill(16)(0.0))
   }
 }
 
@@ -344,5 +328,19 @@ class EndToEndFeatureSpec extends AnyFunSuite {
     assert(v(27) == 1.0) // whois ok
     assert(v(28) == 0.5) // timer
     assert(v(29) == 0.0) // no cycling block
+  }
+
+  test("missing blocks zero-fill their slots of the 30-value vector") {
+    val text = "http://user@pay-pal9.example.com/p/1\n" +
+      "\n<=HTTP BEGIN=>\n" +
+      "<html><head><title>Welcome</title></head><body><a href=\"http://x.com/\">x</a></body></html>" +
+      "\n<=HTTP END=>\n"
+    val v = ExtractorSet5.extractFromBlocks(Blocks.splitText(text), ExtractConfig(0L))
+    assert(v.length == ExtractorSet5.size && v.length == 30)
+    // header, host, nslookup, whois, timer and cycling blocks are absent
+    for (i <- 21 until 30) assert(v(i) == 0.0, s"${ExtractorSet5.featureNames(i)} ($i)")
+    // the url and http blocks are present and feed their slots
+    assert(v(0) == 1.0) // is_http_connection
+    assert(v(5) > 0.0) // get_kbytes
   }
 }

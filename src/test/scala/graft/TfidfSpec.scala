@@ -84,6 +84,12 @@ private object TrainRows {
     import spark.implicits._
     spark.createDataset(spark.sparkContext.parallelize(x.zip(y), 2))
   }
+
+  /** Whether the session's cache manager holds an entry for `ds`. */
+  def cached(ds: org.apache.spark.sql.Dataset[_]): Boolean = {
+    val cds = ds.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    cds.sparkSession.sharedState.cacheManager.lookupCachedData(cds).nonEmpty
+  }
 }
 
 class ElmSpec extends AnyFunSuite {
@@ -107,6 +113,8 @@ class ElmSpec extends AnyFunSuite {
     for (train <- trainers) {
       val e = intercept[IllegalArgumentException](train())
       assert(e.getMessage.endsWith("empty training set"))
+      // a throwing pass leaves no cache entry behind
+      assert(!TrainRows.cached(empty))
     }
   }
 }
@@ -129,6 +137,17 @@ class LcElmSpec extends AnyFunSuite {
     // the reference quirk (lc-elm.py:61-63,101-103) makes class-0 rows
     // sit at fitted ≈ 0 — assert only the stable half
     for (r <- 0 until 4) assert(m1.predict(x(r)) == 1.0, s"row $r")
+  }
+
+  test("training releases only its own cache: a caller-cached Dataset stays cached") {
+    val own = TrainRows(x, y).persist()
+    try {
+      LcElm.trainDistributed(own, nFeatures = 2, nEstimators = 3, nHidden = 4)
+      assert(TrainRows.cached(own))
+    } finally own.unpersist()
+    val fresh = TrainRows(x, y)
+    LcElm.trainDistributed(fresh, nFeatures = 2, nEstimators = 3, nHidden = 4)
+    assert(!TrainRows.cached(fresh))
   }
 }
 
