@@ -28,10 +28,10 @@ object PlanAudit {
     "url_features", "url_features_sets",
     "tok_terms", "term_df", "tfidf_micro",
     "dedup_exact", "dedup_minhash_lsh", "dedup_simhash",
-    "dedup_ngram_jaccard", "dedup_embedding_exact", "dedup_embedding_lsh",
-    "ann_brute_topk", "ann_lsh_topk", "ann_ivf_topk",
+    "dedup_ngram_jaccard",
+    "ann_brute_topk", "ann_lsh_topk",
     "lang_id", "quality", "token_counts", "fingerprints",
-    "multimodal_decode", "events_hourly", "events_sessionize_sql",
+    "multimodal_decode",
     "elm_title_score", "lcelm_score", "byte_identity", "s8_ftp_fetch",
     "extract_features_full", "net_features", "html_features")
 
@@ -70,6 +70,8 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "PLANS.md"
+    val unknown = audited.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"audited queries not registered: ${unknown.mkString(", ")}")
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", 4)
@@ -96,16 +98,14 @@ object PlanAudit {
               |""".stripMargin
 
     audited.foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        try {
-          val df = fn(spark, sfDir)
-          val formatted = df.queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          sb ++= s"\n## $name\n\n```\n" + render(formatted) + "```\n"
-        } catch {
-          case e: Throwable =>
-            sb ++= s"\n## $name\n\n(plan unavailable: ${e.getMessage})\n"
-        }
+      try {
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        val formatted = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        sb ++= s"\n## $name\n\n```\n" + render(formatted) + "```\n"
+      } catch {
+        case e: Throwable =>
+          sb ++= s"\n## $name\n\n(plan unavailable: ${e.getMessage})\n"
       }
     }
     Files.writeString(Paths.get(out), sb.result())

@@ -45,7 +45,7 @@ object SparkEntry {
   private val NetAsOfEpoch = 1756684800L
 
   private def reg(s: SparkSession, dir: String): Unit =
-    Synth.views(s, dir, Seq("orders", "documents", "embeddings", "events"))
+    Synth.views(s, dir, Seq("orders", "documents", "embeddings"))
 
   // ----------------------------------------------------------- shared CTEs
 
@@ -167,6 +167,22 @@ object SparkEntry {
     })
   }
 
+  // ------------------------------------------------------------ temp roots
+
+  /** The temp dirs the memos below create. Their queries read them
+    * lazily for the life of the JVM, so they are deleted only at exit,
+    * by one shutdown hook installed with the first root. */
+  private val tempRoots = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+  private lazy val deleteTempRootsAtExit: Unit = sys.addShutdownHook(
+    tempRoots.forEach(p => scala.util.Try(SnapshotTable.deleteRecursively(p))))
+
+  private def tempRoot(prefix: String): java.nio.file.Path = {
+    deleteTempRootsAtExit
+    val p = java.nio.file.Files.createTempDirectory(prefix)
+    tempRoots.add(p)
+    p
+  }
+
   // ----------------------------------------------------------- engine memo
 
   /** One full crawl-engine run per (sf dir, discover), its snapshot root
@@ -177,8 +193,7 @@ object SparkEntry {
 
   private def crawlStore(s: SparkSession, dir: String, discover: Boolean): SnapshotTable = {
     val root = crawlRoots.getOrElseUpdate((dir, discover), {
-      val tmp = java.nio.file.Files.createTempDirectory(
-        if (discover) "graft-crawl-disc-" else "graft-crawl-").toString
+      val tmp = tempRoot(if (discover) "graft-crawl-disc-" else "graft-crawl-").toString
       val pages = Fixtures.pages(s, dir).toDF.cache()
       val store = new SnapshotTable(s, tmp)
       val cw = new CrawlWave(s, pages, store, CrawlWave.Config(
@@ -209,7 +224,7 @@ object SparkEntry {
     val root = sourceFileRoots.getOrElseUpdate(dir, {
       import s.implicits._
       reg(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory("graft-sources-")
+      val tmp = tempRoot("graft-sources-")
       val docs = s.table("documents")
         .select(col("doc_id").cast("long"), col("n_chars").cast("long"), col("text"))
         .as[(Long, Long, String)].collect().sortBy(_._1)
@@ -583,18 +598,18 @@ object SparkEntry {
     "url_features_sets" -> Q(
       (s, dir) => {
         reg(s, dir)
-        // feature indices are constants — resolve once, not per row
-        val n3 = graft.features.UrlFeatureSets.set3Features.map(_._1)
-        val iPathDomLen = n3.indexOf("get_path_domain_length")
-        val iBrand = n3.indexOf("get_brandname")
-        val iLongUrl = n3.indexOf("get_long_url")
+        // the three set-3 features read here, resolved once, not per row;
+        // the rest of set 3 (the brand-typo scan, the TLD count) is not run
+        val f3 = graft.features.UrlFeatureSets.set3Features.toMap
+        val pathDomLen = f3("get_path_domain_length")
+        val brand = f3("get_brandname")
+        val longUrl = f3("get_long_url")
         val uf = udf((url: String) => {
           val s1 = graft.features.UrlFeatureSets.set1(url)
           val s2 = graft.features.UrlFeatureSets.set2s(url)
           val s4 = graft.features.UrlFeatureSets.set4(url)
-          val s3 = graft.features.UrlFeatureSets.set3(url)
           (s1(0).toInt, s2(1).toInt, s2(3).toInt, s4(3).toInt,
-            s3(iPathDomLen).toInt, s3(iBrand).toInt, s3(iLongUrl).toInt)
+            pathDomLen(url).toInt, brand(url).toInt, longUrl(url).toInt)
         })
         s.sql(withSeeds(s"$fetchableCte SELECT seq, url FROM fetchable"))
           .withColumn("t", uf(col("url")))
@@ -979,49 +994,6 @@ object SparkEntry {
         |  cast(round(inter * 1000000.0 / (sa.sz + sb.sz - inter), 0) as bigint) AS jaccard_micro
         |FROM inter JOIN sz sa ON sa.doc_id = a_id JOIN sz sb ON sb.doc_id = b_id""".stripMargin),
 
-    // Connected components over verified near-dup pairs — the
-    // clustering step that completes the dedup pipeline (pairs →
-    // components → keeper = min doc id; drop rule is doc_id !=
-    // cluster_id). Spark side runs the distributed min-label
-    // fixpoint with pointer jumping (Dedup.connectedComponents);
-    // the oracle re-derives the same labels via a recursive-CTE
-    // transitive closure in DuckDB — exact equality, not a bound.
-    // Both sides build the pair graph from the same exact-Jaccard
-    // SQL (integer counts, one double divide ⇒ bitwise-identical
-    // threshold test in both engines).
-    "dedup_components" -> Q(
-      (s, dir) => {
-        reg(s, dir)
-        Dedup.connectedComponents(s.sql(
-          """WITH sub AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
-            |g AS (SELECT DISTINCT doc_id, substr(text, i, 5) AS gram
-            |      FROM sub LATERAL VIEW explode(sequence(1, greatest(length(text) - 4, 1))) sq AS i),
-            |sz AS (SELECT doc_id, count(*) AS sz FROM g GROUP BY doc_id),
-            |inter AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS inter
-            |          FROM g a JOIN g b ON a.gram = b.gram AND a.doc_id < b.doc_id GROUP BY 1, 2)
-            |SELECT a_id, b_id
-            |FROM inter JOIN sz sa ON sa.doc_id = a_id JOIN sz sb ON sb.doc_id = b_id
-            |WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= 0.24""".stripMargin))
-      },
-      Some(
-        """WITH RECURSIVE
-          |sub AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
-          |x AS (SELECT doc_id, text, unnest(generate_series(1, greatest(length(text) - 4, 1))) AS i FROM sub),
-          |g AS (SELECT DISTINCT doc_id, substr(text, i, 5) AS gram FROM x),
-          |sz AS (SELECT doc_id, count(*) AS sz FROM g GROUP BY doc_id),
-          |inter AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS inter
-          |          FROM g a JOIN g b ON a.gram = b.gram AND a.doc_id < b.doc_id GROUP BY 1, 2),
-          |pairs AS (SELECT a_id, b_id
-          |          FROM inter JOIN sz sa ON sa.doc_id = a_id JOIN sz sb ON sb.doc_id = b_id
-          |          WHERE inter * 1.0 / (sa.sz + sb.sz - inter) >= 0.24),
-          |e AS (SELECT a_id AS id, b_id AS nb FROM pairs
-          |      UNION SELECT b_id AS id, a_id AS nb FROM pairs),
-          |reach(id, nb) AS (
-          |  SELECT DISTINCT id AS id, id AS nb FROM e
-          |  UNION
-          |  SELECT r.id, e2.nb FROM reach r JOIN e e2 ON r.nb = e2.id)
-          |SELECT id AS doc_id, min(nb) AS cluster_id FROM reach GROUP BY id""".stripMargin)),
-
     // MinHash+LSH with the md5 signature (16 hashes = 4×4 bands): the
     // oracle recomputes the same signatures, the same
     // shared-full-band candidate rule and the same slot-agreement
@@ -1099,51 +1071,6 @@ object SparkEntry {
           |  FROM fp a JOIN fp b ON a.doc_id < b.doc_id)
           |WHERE hamming <= 3""".stripMargin)),
 
-    // embedding-cosine near-dup: exact (oracled) + LSH scale path
-    "dedup_embedding_exact" -> Q(
-      (s, dir) => {
-        reg(s, dir)
-        Dedup.embeddingNearDupExact(s.table("embeddings"), threshold = 0.4)
-      },
-      Some(
-        """WITH e AS (SELECT vec_id, list_transform(embedding, x -> cast(x as double)) AS v FROM embeddings)
-          |SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-          |  cast(round(list_cosine_similarity(a.v, b.v) * 1000000, 0) as bigint) AS cosine_micro
-          |FROM e a JOIN e b ON a.vec_id < b.vec_id
-          |WHERE list_cosine_similarity(a.v, b.v) >= 0.4""".stripMargin)),
-
-    // sign-LSH near-dup with Rademacher planes (md5-derived ±1
-    // components, integer-micro dot products — Ann.rademacherPlanes /
-    // Ann.signature): DuckDB recomputes the very signatures, so the
-    // oracle is the exact bucketed-candidate + cosine-threshold rule,
-    // not a recall bound.
-    "dedup_embedding_lsh" -> Q(
-      (s, dir) => {
-        reg(s, dir)
-        Dedup.embeddingNearDupLsh(s.table("embeddings"), threshold = 0.3,
-          nBits = 4, tables = 8)
-      },
-      Some(
-        s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> cast(x as double)) AS v FROM embeddings),
-           |em AS (SELECT vec_id, list_transform(v, x -> cast(floor(x * 1000000) as bigint)) AS vi FROM e),
-           |tt AS (SELECT unnest(generate_series(0, 7)) AS t),
-           |bb AS (SELECT unnest(generate_series(0, 3)) AS b),
-           |dd AS (SELECT unnest(generate_series(0, 63)) AS d),
-           |pl AS (SELECT t, b, d,
-           |  CASE WHEN (instr('0123456789abcdef', substr(md5('emb:' || t || ':' || b || ':' || d), 1, 1)) - 1) % 2 = 1
-           |       THEN 1 ELSE -1 END AS w
-           |  FROM tt, bb, dd),
-           |dots AS (SELECT em.vec_id, pl.t, pl.b, sum(pl.w * em.vi[pl.d + 1]) AS dot
-           |         FROM em, pl GROUP BY 1, 2, 3),
-           |sigs AS (SELECT vec_id, t, sum(CASE WHEN dot >= 0 THEN (1 << b) ELSE 0 END) AS sig
-           |         FROM dots GROUP BY 1, 2),
-           |cand AS (SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
-           |         FROM sigs a JOIN sigs b ON a.t = b.t AND a.sig = b.sig AND a.vec_id < b.vec_id)
-           |SELECT c.a_id, c.b_id,
-           |  cast(round(list_cosine_similarity(ea.v, eb.v) * 1000000, 0) as bigint) AS cosine_micro
-           |FROM cand c JOIN e ea ON ea.vec_id = c.a_id JOIN e eb ON eb.vec_id = c.b_id
-           |WHERE list_cosine_similarity(ea.v, eb.v) >= 0.3""".stripMargin)),
-
     // ---------------- ANN family
     "ann_brute_topk" -> Q(
       (s, dir) => {
@@ -1201,40 +1128,6 @@ object SparkEntry {
            |      FROM sim)
            |SELECT query_id, cand_id, rank, cast(round(cosine * 1000000, 0) as bigint) AS cosine_micro
            |FROM r WHERE rank <= 10""".stripMargin)),
-
-    // IVF-flat ANN (third tier): centroids = the deterministic
-    // vec_id%25 corpus sample, every vector assigned to its nearest
-    // centroid by a row-local fold, queries search their 3 nearest
-    // cells exactly. Oracle re-derives cells, probing and the exact
-    // per-cell top-k — same cosine fold order, exact equality.
-    "ann_ivf_topk" -> Q(
-      (s, dir) => {
-        reg(s, dir)
-        val e = s.table("embeddings")
-        Ann.ivfTopK(e, e.where(col("vec_id") % 100 === 0), k = 10,
-          centroidMod = 25, nProbe = 3)
-      },
-      Some(
-        """WITH e AS (SELECT vec_id, list_transform(embedding, x -> cast(x as double)) AS v FROM embeddings),
-          |cent AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id % 25 = 0),
-          |asg AS (SELECT e.vec_id, e.v, cent.cid,
-          |          row_number() OVER (PARTITION BY e.vec_id
-          |            ORDER BY list_cosine_similarity(e.v, cent.cv) DESC, cent.cid) AS rn
-          |        FROM e, cent),
-          |cells AS (SELECT vec_id AS cand_id, v AS cv2, cid AS cell FROM asg WHERE rn = 1),
-          |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 100 = 0),
-          |probe AS (SELECT q.query_id, q.qv, cent.cid,
-          |            row_number() OVER (PARTITION BY q.query_id
-          |              ORDER BY list_cosine_similarity(q.qv, cent.cv) DESC, cent.cid) AS rn
-          |          FROM q, cent),
-          |pr AS (SELECT query_id, qv, cid AS cell FROM probe WHERE rn <= 3),
-          |sim AS (SELECT query_id, cand_id, list_cosine_similarity(qv, cv2) AS cosine
-          |        FROM pr JOIN cells USING (cell) WHERE query_id <> cand_id),
-          |r AS (SELECT query_id, cand_id, cosine,
-          |        cast(row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) as int) AS rank
-          |      FROM sim)
-          |SELECT query_id, cand_id, rank, cast(round(cosine * 1000000, 0) as bigint) AS cosine_micro
-          |FROM r WHERE rank <= 10""".stripMargin)),
 
     // ---------------- text analysis family
     "lang_id" -> Q(
@@ -1337,33 +1230,6 @@ object SparkEntry {
            |            THEN 1 + ${int12Sql("hx", 6)} % 64 ELSE 1 END as bigint) AS n_frames
            |FROM a""".stripMargin
       }),
-
-    // ---------------- event streams (graft.streaming, batch-checked)
-    "events_hourly" -> Q(
-      (s, dir) => { reg(s, dir); graft.streaming.EventStream.hourlyCounts(s.table("events")) },
-      Some(
-        """SELECT cast(floor(epoch(date_trunc('hour', ts))) as bigint) AS hour_epoch,
-          |  event_type, count(*) AS n,
-          |  cast(round(sum(value) * 1000000, 0) as bigint) AS value_micro
-          |FROM events GROUP BY 1, 2""".stripMargin)),
-
-    "events_sessionize_sql" -> Q(
-      (s, dir) => { reg(s, dir); s.sql(graft.streaming.EventStream.sessionizeSqlSpark(1800)) },
-      Some(graft.streaming.EventStream.sessionizeSqlDuck(1800))),
-
-    "events_sessionize_stateful" -> Q(
-      (s, dir) => {
-        import s.implicits._
-        reg(s, dir)
-        graft.streaming.EventStream.sessionize(
-          s.table("events").select("event_id", "ts", "user_id", "value")
-            .as[graft.streaming.EventStream.Ev],
-          gapSec = 1800, emitOpen = true).toDF()
-      },
-      // the stateful path must agree with the pure window-SQL oracle
-      // (session_id dropped via the builder's parameter — a textual
-      // replace() here went silently stale on any cosmetic SQL edit)
-      Some(graft.streaming.EventStream.sessionizeSqlDuck(1800, includeSessionId = false))),
 
     // ---------------- ELM title scoring (§2.9, deterministic seed)
     //

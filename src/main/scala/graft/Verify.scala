@@ -9,6 +9,8 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter (dev loop)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
+    val unknown = only.fold(Set.empty[String])(_ -- SparkEntry.queries.keySet)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -156,112 +156,4 @@ object Ann {
       .select(col("query_id"), col("cand_id"), col("rank"),
         (round(col("cosine") * 1e6, 0)).cast("long").as("cosine_micro"))
   }
-
-  // ----------------------------------------------------------------- IVF
-
-  /** IVF-flat top-k — the third ANN tier: the corpus is partitioned
-    * into C cells around coarse centroids, and each query searches
-    * exactly only its `nProbe` nearest cells. The recall/cost dial is
-    * (C, nProbe): nProbe = C degrades to exact brute force (tested),
-    * nProbe « C scans ~nProbe/C of the corpus per query.
-    *
-    * Centroids are a deterministic corpus sample (`idCol %
-    * centroidMod == 0`) — IVF's coarse quantizer seeded from data,
-    * reproducible with no stored model and SQL-replicable for the
-    * oracle; a production run may refine them with k-means, which
-    * changes cell quality but nothing about this operator's shape.
-    * Contract: some corpus id must satisfy `id % centroidMod == 0`
-    * (ids are assumed non-negative, as everywhere in this module) —
-    * an empty centroid sample means no cells, hence an EMPTY result,
-    * not an error; pick centroidMod ≤ max id (and at scale, pick it
-    * so C = |corpus|/centroidMod stays ~10^4–10^5: broadcast bytes
-    * and the per-row assignment fold are both O(C)).
-    *
-    * Scale shape (the reason this beats brute at 100 TB):
-    *  - the centroid set is packed into ONE row (array of structs,
-    *    sorted by centroid id) and broadcast — C·dim·8B, a few MB at
-    *    production C;
-    *  - cell assignment is a ROW-LOCAL argmax fold over that array
-    *    (nested higher-order functions, codegen'd — no UDF): the
-    *    corpus is scanned once with zero shuffle, exactly like a
-    *    projection;
-    *  - queries probe their nProbe cells via a tiny windowed join
-    *    (query side is small by contract, as in [[bruteForceTopK]]);
-    *  - the probed-cell search is a broadcast join on cell id against
-    *    the assigned corpus — still no corpus shuffle; the only
-    *    exchange is the final per-query top-k window, pre-limited
-    *    per-partition by Spark's WindowGroupLimit.
-    *
-    * Ties everywhere break to the smaller id (strict `>` over a
-    * cid-sorted array for assignment; explicit orderBy for ranks) —
-    * fully deterministic. Output shape matches [[bruteForceTopK]]. */
-  def ivfTopK(
-      corpus: DataFrame,
-      queries: DataFrame,
-      k: Int,
-      centroidMod: Long = 25,
-      nProbe: Int = 3,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-    val normExpr = (v: String) =>
-      s"sqrt(aggregate($v, cast(0.0 as double), (acc, x) -> acc + cast(x as double) * cast(x as double)))"
-    // tiny centroid frame (cid, cv, cnorm), reused by both sides
-    val cent = corpus.where(col(idCol) % centroidMod === 0)
-      .select(col(idCol).cast("long").as("cid"),
-        expr(s"transform($vecCol, x -> cast(x as double))").as("cv"),
-        expr(normExpr(vecCol)).as("cnorm"))
-    // ... packed into one broadcastable row, sorted by cid so the
-    // strict-`>` fold below keeps the smallest cid on exact ties
-    val packed = broadcast(
-      cent.agg(array_sort(collect_list(struct(col("cid"), col("cv"), col("cnorm")))).as("cents")))
-    // row-local argmax: cos(v, c) = dot/(|v|·|c|), left-to-right fold
-    // order identical to cosineExpr so the oracle's doubles match.
-    // transform-then-argmax, NOT a CASE that repeats the dot product:
-    // common-subexpression elimination does not reach inside
-    // higher-order-function lambdas, so the CASE form computed each
-    // O(dim) dot TWICE per (row, centroid) — the documented dominant
-    // cost of this operator. Strict `>` keeps the earlier (smallest,
-    // cents are cid-sorted) centroid on exact ties, as before; a
-    // zero-norm row's NULL cosines never beat the seed, so it gets
-    // cell -1 and is simply never probed.
-    val assignExpr = expr(
-      s"""aggregate(
-         |  transform(cents, c -> named_struct(
-         |    'bc', aggregate(zip_with(cv0, c.cv, (x, y) -> x * y), cast(0.0 as double), (a, x) -> a + x)
-         |      / nullif(vnorm * c.cnorm, 0.0d),
-         |    'bid', c.cid)),
-         |  named_struct('bc', cast(-2.0 as double), 'bid', cast(-1 as bigint)),
-         |  (acc, s) -> CASE WHEN s.bc > acc.bc THEN s ELSE acc END,
-         |  acc -> acc.bid)""".stripMargin)
-    val assigned = corpus
-      .select(col(idCol).cast("long").as("cand_id"),
-        expr(s"transform($vecCol, x -> cast(x as double))").as("cv0"),
-        expr(normExpr(vecCol)).as("vnorm"))
-      .crossJoin(packed) // broadcast 1-row join: attaches `cents`
-      .withColumn("cell", assignExpr)
-      .select(col("cand_id"), col("cv0").as("cv"), col("cell"))
-    // query side: nProbe nearest cells via a windowed join (tiny)
-    val probed = queries
-      .select(col(idCol).cast("long").as("query_id"), col(vecCol).as("qv"))
-      .crossJoin(broadcast(cent))
-      .withColumn("ccos", expr(cosineExpr("qv", "cv")).cast("double"))
-      .withColumn("crank", row_number().over(
-        w.partitionBy("query_id").orderBy(col("ccos").desc, col("cid").asc)))
-      .where(col("crank") <= nProbe)
-      .select(col("query_id"), col("qv"), col("cid").as("cell"))
-    // exact search restricted to the probed cells
-    broadcast(probed).join(assigned, Seq("cell"))
-      .where(col("query_id") =!= col("cand_id"))
-      .withColumn("cosine", expr(cosineExpr("qv", "cv")))
-      // zero-norm side -> NULL cosine (see cosineExpr): undefined
-      // similarity is not a neighbour; unfiltered, row_number would
-      // still hand NULL-cosine rows ranks
-      .where(col("cosine").isNotNull)
-      .withColumn("rank", row_number().over(
-        w.partitionBy("query_id").orderBy(col("cosine").desc, col("cand_id").asc)))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("cand_id"), col("rank"),
-        (round(col("cosine") * 1e6, 0)).cast("long").as("cosine_micro"))
-  }
 }

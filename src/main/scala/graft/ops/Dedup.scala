@@ -51,8 +51,8 @@ object Dedup {
     * `struct(id, …)`: members[i] × members[j > i] → one `p` =
     * struct(a_id, b_id, <payload>) row per pair, with least/greatest
     * ids and `payload` fields projected from the `x`/`y` sides. ONE
-    * copy of the slice arithmetic every bucketed operator shares
-    * (minhash, simhash, embedding LSH).
+    * copy of the slice arithmetic both bucketed operators share
+    * (minhash, simhash).
     *
     * TWO chained generators, not one flattened array: a single
     * flatten(transform(...)) materializes all C(n,2) pair structs —
@@ -225,148 +225,5 @@ object Dedup {
       .select(col("p.a_id"), col("p.b_id"), col("p.hamming"))
       .dropDuplicates("a_id", "b_id")
       .where(col("hamming") <= maxHamming)
-  }
-
-  // -------------------------------------------- embedding-cosine near-dup
-
-  /** Exact embedding-cosine near-duplicate pairs over a (small) slice:
-    * every a<b pair with cosine ≥ `threshold`. O(n²) — the verification
-    * baseline; the scale path is [[embeddingNearDupLsh]]. Cosine uses
-    * the shared codegen'd HOF expression ([[Ann.cosineExpr]]). */
-  def embeddingNearDupExact(
-      emb: DataFrame,
-      threshold: Double,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val a = emb.select(col(idCol).cast("long").as("a_id"), col(vecCol).as("av"))
-    val b = emb.select(col(idCol).cast("long").as("b_id"), col(vecCol).as("bv"))
-    a.join(b, col("a_id") < col("b_id"))
-      .withColumn("cosine", expr(Ann.cosineExpr("av", "bv")))
-      .where(col("cosine") >= threshold)
-      .select(col("a_id"), col("b_id"),
-        round(col("cosine") * 1e6, 0).cast("long").as("cosine_micro"))
-  }
-
-  /** Embedding-cosine near-dup at scale: sign-LSH bucketing (L tables ×
-    * nBits hyperplane signs, [[Ann.rademacherPlanes]] tagged `emb:t`,
-    * [[Ann.signature]]) proposes candidate
-    * pairs — only same-bucket vectors ever meet — then the EXACT cosine
-    * filters at `threshold`, so precision is 1.0 and only recall depends
-    * on the sketch (property-tested vs [[embeddingNearDupExact]] in
-    * OpsSpec). Shuffles: one groupBy bucket with near-uniform keys, one
-    * distinct on pairs; no cross product. */
-  def embeddingNearDupLsh(
-      emb: DataFrame,
-      threshold: Double,
-      nBits: Int = 8,
-      tables: Int = 6,
-      dim: Int = 64,
-      maxBucket: Int = 2000,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val planes = spark.sparkContext.broadcast(
-      Array.tabulate(tables)(t => Ann.rademacherPlanes(nBits, dim, s"emb:$t")))
-    val sigs = emb.select(col(idCol).cast("long"), col(vecCol)).as[(Long, Array[Float])]
-      .flatMap { case (i, v) =>
-        (0 until tables).map(t => (i, v, t, Ann.signature(v, planes.value(t))))
-      }.toDF("id", "v", "tbl", "sig")
-    val buckets = sigs.groupBy("tbl", "sig")
-      .agg(collect_list(struct(col("id"), col("v"))).as("members"))
-      .where(size(col("members")).between(2, maxBucket))
-    val cand = pairExpand(buckets, "x.v as av, y.v as bv")
-      .select(col("p.a_id"), col("p.b_id"), col("p.av"), col("p.bv"))
-      .dropDuplicates("a_id", "b_id")
-    cand
-      .withColumn("cosine", expr(Ann.cosineExpr("av", "bv")))
-      .where(col("cosine") >= threshold)
-      .select(col("a_id"), col("b_id"),
-        round(col("cosine") * 1e6, 0).cast("long").as("cosine_micro"))
-  }
-
-  // ------------------------------------------------- connected components
-
-  /** Connected components over an undirected near-dup pair graph — the
-    * clustering step that completes every dedup pipeline (LSH pairs →
-    * components → one canonical doc per component). Output: one row per
-    * node that appears in `pairs`, `(doc_id, cluster_id)` with
-    * `cluster_id` = the smallest doc id reachable from it (so the
-    * canonical keeper of each cluster is its own cluster_id, and the
-    * keep/drop decision is `doc_id == cluster_id`). Deterministic under
-    * any parallelism.
-    *
-    * Algorithm: min-label propagation with POINTER JUMPING to a fixed
-    * point. Each round (a) takes the min over each node's neighbors'
-    * labels (one shuffle keyed by node id, map-side partial agg) and
-    * (b) shortcuts label(v) ← label(label(v)) (one self-join — labels
-    * are min-monotone, so the jump only improves). Propagation alone
-    * needs O(diameter) rounds; the jump compresses chains
-    * exponentially, giving O(log n) rounds on any graph — near-dup
-    * components are clique-ish and shallow, so 2–4 rounds in practice.
-    * Nothing is collected to the driver except the per-round
-    * convergence count.
-    *
-    * Each round ends in an eager `localCheckpoint`: an iterative
-    * fixpoint otherwise grows the logical plan every round (persist
-    * caches data, not the plan), and analysis cost compounds. The
-    * checkpoint is also what keeps the pointer-jump self-join
-    * unambiguous — both sides read a materialized RDD with fresh
-    * attributes. On a cluster with flaky executors, swap for a
-    * reliable `checkpoint()` against the job's checkpoint dir; the
-    * algorithm is unchanged. */
-  def connectedComponents(pairs: DataFrame, aCol: String = "a_id",
-      bCol: String = "b_id", maxIter: Int = 25): DataFrame = {
-    val storage = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val edges = pairs
-      .select(col(aCol).cast("long").as("id"), col(bCol).cast("long").as("nb"))
-      .union(pairs.select(col(bCol).cast("long").as("id"), col(aCol).cast("long").as("nb")))
-      .distinct()
-      .persist(storage)
-    var labels = edges.select(col("id")).distinct()
-      .withColumn("cluster_id", col("id"))
-      .localCheckpoint() // eager — materializes and truncates lineage
-    // free a superseded eager localCheckpoint's materialized RDD — the
-    // context cleaner would reclaim it only after a driver GC, pinning
-    // up to 2×rounds dead copies of the label table until then
-    def freeCheckpoint(df: DataFrame): Unit =
-      df.queryExecution.analyzed.foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-        case _ => ()
-      }
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIter) {
-      val prev = labels
-      // (a) propagate: m(v) = min(label(v), min over neighbors' labels)
-      val m = edges
-        .join(labels.select(col("id").as("nb"), col("cluster_id").as("nb_label")), Seq("nb"))
-        .groupBy("id").agg(min(col("nb_label")).as("nb_min"))
-        .join(labels, Seq("id"), "right")
-        .select(col("id"),
-          least(col("cluster_id"), coalesce(col("nb_min"), col("cluster_id"))).as("m"))
-        .localCheckpoint()
-      // (b) pointer-jump: label'(v) = min(m(v), m(m(v))) — m(v) is
-      // itself a node id (labels start as ids and move by min), and
-      // m is min-monotone, so the jump can only lower the label
-      val next = m
-        .join(m.select(col("id").as("m0"), col("m").as("mm")), col("m") === col("m0"), "left")
-        .select(col("id"), least(col("m"), coalesce(col("mm"), col("m"))).as("new_label"))
-        .join(labels, Seq("id"))
-        .select(col("id"), col("new_label").as("cluster_id"),
-          (col("new_label") < col("cluster_id")).as("changed"))
-        .localCheckpoint()
-      val changed = next.where(col("changed")).count()
-      labels = next.drop("changed")
-      freeCheckpoint(m)    // dead once `next` is materialized
-      freeCheckpoint(prev) // superseded label round
-      converged = changed == 0
-      it += 1
-    }
-    edges.unpersist(false)
-    if (!converged) // wrong labels are worse than no labels
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds")
-    labels.select(col("id").as("doc_id"), col("cluster_id"))
   }
 }

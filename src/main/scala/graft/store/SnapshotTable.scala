@@ -39,10 +39,20 @@ object SnapshotTable {
     * per-wave rewrite of every sample byte from the crawl hot path. */
   final case class ViewRef(base: String, dirs: Seq[String],
       where: String, select: Seq[String])
+
+  private[graft] def deleteRecursively(p: Path): Unit = {
+    if (!Files.exists(p)) return
+    if (Files.isDirectory(p)) {
+      val stream = Files.list(p)
+      try stream.iterator().asScala.toSeq.foreach(deleteRecursively)
+      finally stream.close()
+    }
+    Files.deleteIfExists(p)
+  }
 }
 
 final class SnapshotTable(spark: SparkSession, root: String) {
-  import SnapshotTable.ViewRef
+  import SnapshotTable.{ViewRef, deleteRecursively}
 
   private val mapper = new ObjectMapper()
 
@@ -172,16 +182,6 @@ final class SnapshotTable(spark: SparkSession, root: String) {
     }
     doomed.foreach(deleteRecursively)
     doomed.size
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (!Files.exists(p)) return
-    if (Files.isDirectory(p)) {
-      val stream = Files.list(p)
-      try stream.iterator().asScala.toSeq.foreach(deleteRecursively)
-      finally stream.close()
-    }
-    Files.deleteIfExists(p)
   }
 
   /** Commit a new version. `replace` tables are rewritten in full;

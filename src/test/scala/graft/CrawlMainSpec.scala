@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The spark-submit entrypoint ([[CrawlMain.run]]): fresh crawl over
   * parquet pages/seeds, then a rerun over the same store resumes from
-  * the final snapshot without recrawling. */
+  * the final snapshot without recrawling. The other two mains,
+  * [[Verify]] and [[PlanAudit]], refuse query names that are not
+  * registered. */
 class CrawlMainSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
@@ -104,6 +106,21 @@ class CrawlMainSpec extends AnyFunSuite {
         graft.jobs.CrawlWave.Config(seenFilter = "Bloom")))
       assert(e.getMessage.contains("unknown seen filter: Bloom"))
       assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$tmp/store")))
+    }
+  }
+
+  test("Verify and PlanAudit name only registered queries") {
+    assert(PlanAudit.audited.toSet.subsetOf(SparkEntry.queries.keySet))
+    val sc = spark.sparkContext
+    withTempDir("graft-verify-") { tmp =>
+      val out = s"$tmp/out"
+      val e = intercept[IllegalArgumentException](
+        Verify.main(Array(dir, out, "s1_seed_scan,no_such_query")))
+      assert(e.getMessage.endsWith("unknown queries: no_such_query"))
+      // thrown before Verify's getOrCreate (which would hand back the
+      // shared session and stop it at the end) and before any output
+      assert(!sc.isStopped)
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(out)))
     }
   }
 

@@ -117,77 +117,6 @@ class OpsSpec extends AnyFunSuite {
     assert(lsh.subsetOf(pairs(Ann.bruteForceTopK(e, q, k = e.count().toInt))))
   }
 
-  test("IVF ANN: probe-all degrades to exact brute force; nProbe<C keeps recall") {
-    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val q = e.where(col("vec_id") % 50 === 0)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3))).toSet
-    val brute = rows(Ann.bruteForceTopK(e, q, k = 5))
-    // centroidMod=10 → C = |corpus|/10 cells; probing every cell must
-    // reproduce brute force EXACTLY (ranks and micro-cosines included)
-    val nCells = e.where(col("vec_id") % 10 === 0).count().toInt
-    assert(rows(Ann.ivfTopK(e, q, k = 5, centroidMod = 10, nProbe = nCells)) == brute)
-    // the approximate setting: hits must be a subset of the full exact
-    // ranking, with usable recall of the true top-5
-    def pairs(s: Set[(Long, Long, Int, Long)]) = s.map(t => (t._1, t._2))
-    val ivf = pairs(rows(Ann.ivfTopK(e, q, k = 5, centroidMod = 10, nProbe = 3)))
-    val recall = (pairs(brute) intersect ivf).size.toDouble / brute.size
-    assert(recall >= 0.25, s"recall=$recall")
-    assert(ivf.subsetOf(pairs(rows(Ann.bruteForceTopK(e, q, k = e.count().toInt)))))
-  }
-
-  test("embedding near-dup: LSH path has precision 1.0 and high recall on injected dups") {
-    import spark.implicits._
-    // real embeddings + deterministic near-duplicates (tiny perturbation
-    // of one component) → true near-dup pairs at cosine >= 0.95
-    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-    val injected = e.flatMap { case (id, v) =>
-      val dup = v.clone(); dup(0) = dup(0) + 0.01f
-      if (id % 10 == 0) Seq((id, v), (id + 100000L, dup)) else Seq((id, v))
-    }.toDF("vec_id", "embedding")
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.select("a_id", "b_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = pairs(Dedup.embeddingNearDupExact(injected, 0.95))
-    assert(exact.size >= 40, s"expected ~50 injected pairs, got ${exact.size}")
-    val lsh = pairs(Dedup.embeddingNearDupLsh(injected, 0.95))
-    assert(lsh.subsetOf(exact), "LSH emitted a pair exact cosine rejects (precision < 1)")
-    val recall = (exact intersect lsh).size.toDouble / exact.size
-    assert(recall >= 0.9, s"recall=$recall")
-  }
-
-  test("connected components: min-id labels match brute-force union-find") {
-    import spark.implicits._
-    // deterministic pseudo-random graph + a long chain (exercises the
-    // multi-round propagation path) + isolated pair
-    val rnd = new scala.util.Random(42)
-    val randomPairs = Seq.fill(120)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
-      .filter { case (a, b) => a != b }
-      .map { case (a, b) => (math.min(a, b), math.max(a, b)) }
-    val chain = (100L until 140L).map(i => (i, i + 1))
-    val pairs = (randomPairs ++ chain :+ ((500L, 501L))).distinct
-    val got = Dedup.connectedComponents(pairs.toDF("a_id", "b_id"))
-      .as[(Long, Long)].collect().toMap
-    // brute-force union-find
-    val parent = scala.collection.mutable.Map[Long, Long]()
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
-    }
-    pairs.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    // canonicalize union-find roots to the min member of each set
-    val nodes = pairs.flatMap { case (a, b) => Seq(a, b) }.distinct
-    val minOfRoot = nodes.groupBy(find).map { case (r, ms) => r -> ms.min }
-    val want = nodes.map(n => n -> minOfRoot(find(n))).toMap
-    assert(got == want)
-    // every cluster keeper is its own cluster id
-    assert(got.filter { case (id, c) => id == c }.keySet == got.values.toSet)
-  }
-
   test("winnowing fingerprints are stable under distant edits") {
     val a = TextAnalysis.winnow(base * 10).toSet
     val b = TextAnalysis.winnow(base * 10 + " changed ending here").toSet

@@ -75,6 +75,72 @@ class TfIdfSpec extends AnyFunSuite {
     assert(got.length == got.toSet.size)
     assert(got.toSet == want)
   }
+
+  /** Deterministic Zipf (s = 1) documents over the terms `w1`…`w<vocab>`
+    * (`w1` the most frequent), 8 to 23 tokens each, drawn from a 64-bit
+    * LCG. sf0.001's 31-term vocabulary puts no term between 0.45 and 0.5;
+    * this one spreads the max tfidf across every cut tested below. */
+  private def zipfDocs(n: Int = 250, vocab: Int = 250): Seq[String] = {
+    var x = 1L
+    def u(): Double = {
+      x = x * 6364136223846793005L + 1442695040888963407L
+      (x >>> 11).toDouble / (1L << 53)
+    }
+    val cum = (1 to vocab).scanLeft(0.0)(_ + 1.0 / _).tail.toArray
+    Seq.fill(n) {
+      val k = 8 + (u() * 16).toInt
+      Seq.fill(k) {
+        val i = java.util.Arrays.binarySearch(cum, u() * cum.last)
+        "w" + ((if (i >= 0) i else -i - 1) + 1)
+      }.mkString(" ")
+    }
+  }
+
+  test("term_select and the S11 term file split a Zipf vocabulary at their cuts") {
+    import spark.implicits._
+    SparkTestBase.withTempDir("graft-zipf-") { zdir =>
+      val src = java.nio.file.Paths.get(dir)
+      val others = java.nio.file.Files.list(src)
+      try others.iterator().forEachRemaining { p =>
+        if (p.getFileName.toString != "documents.parquet")
+          java.nio.file.Files.copy(p, java.nio.file.Paths.get(zdir).resolve(p.getFileName))
+      } finally others.close()
+      val docs = zipfDocs()
+      docs.zipWithIndex.map { case (t, i) => (i.toLong, t, "en", "zipf", t.length.toLong) }
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .coalesce(1).write.parquet(s"$zdir/documents.parquet")
+
+      // the reference rule in Scala: binary tf, idf = ln(n/df) + 1 (or
+      // the smoothed ln((n+1)/(df+1)) + 1 it must differ from), L2 rows,
+      // a term's score its max tfidf over all docs, in micro-units
+      val sets = docs.map(_.split(' ').toSet)
+      val df = sets.flatten.groupMapReduce(identity)(_ => 1L)(_ + _)
+      val n = docs.size.toDouble
+      def maxMicro(idf: Long => Double): Map[String, Long] =
+        sets.flatMap { ts =>
+          val nrm = math.sqrt(ts.iterator.map(t => idf(df(t)) * idf(df(t))).sum)
+          ts.map(t => t -> math.round(idf(df(t)) / nrm * 1e6))
+        }.groupMapReduce(_._1)(_._2)(math.max)
+      val mx = maxMicro(d => math.log(n / d) + 1.0)
+      def atLeast(cut: Long) = mx.collect { case (t, m) if m >= cut => t }.toSet
+      // every cut splits the vocabulary, a 0.45 cut keeps more than 0.5,
+      // and the smoothed idf selects a different set at 0.5
+      for ((lo, hi) <- Seq((0L, 300000L), (300000L, 450000L), (450000L, 500000L), (500000L, Long.MaxValue)))
+        assert(mx.values.exists(m => m >= lo && m < hi), s"no term scores in [$lo, $hi)")
+      val smoothed = maxMicro(d => math.log((n + 1) / (d + 1)) + 1.0)
+      assert(smoothed.collect { case (t, m) if m >= 500000L => t }.toSet != atLeast(500000L))
+
+      val sel = SparkEntry.queries("term_select")(spark, zdir)
+        .select(col("term"), col("df").cast("long")).as[(String, Long)].collect()
+      assert(sel.toMap == atLeast(500000L).map(t => t -> df(t)).toMap)
+      assert(sel.length == sel.toMap.size)
+
+      val want = atLeast(300000L).toSeq.sorted // ASCII terms: byte order
+      val row = SparkEntry.queries("s11_term_file")(spark, zdir)
+        .as[(Long, Long, Long, String)].collect().toSeq
+      assert(row == Seq((want.size.toLong, want.size - 1L, want.size.toLong, want.mkString(" "))))
+    }
+  }
 }
 
 /** (features, 0/1 label) training rows as a 2-partition Dataset. */
