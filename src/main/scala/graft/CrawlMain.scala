@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions.{col, count, when}
   *     [--cuckoo-capacity-per-partition N] \
   *     [--expected-keys N [--seen-budget-mb MB]] \
   *     [--compact-seen-every K] [--expire-keep N] \
-  *     [--sweep-orphans-hours H] [--scalable-rank] [--fetch-ftp]
+  *     [--sweep-orphans-hours H] [--fetch-ftp]
   *
   * The session's master/executors come from spark-submit (no
   * `.master()` here; local runs pass `-Dspark.master=local[N]`).
@@ -61,8 +61,7 @@ object CrawlMain {
       "[--bloom-bits-per-partition N] [--bloom-hashes K] " +
       "[--cuckoo-capacity-per-partition N] " +
       "[--expected-keys N [--seen-budget-mb MB]] [--compact-seen-every K] " +
-      "[--expire-keep N] [--sweep-orphans-hours H] " +
-      "[--scalable-rank] [--fetch-ftp]"
+      "[--expire-keep N] [--sweep-orphans-hours H] [--fetch-ftp]"
 
   /** Argument errors THROW (so [[run]] stays embeddable in tests and
     * other drivers); only [[main]] turns them into usage + exit 2. */
@@ -79,7 +78,7 @@ object CrawlMain {
     var pages, seeds, store: Option[String] = None
     var partitions: Option[Int] = None
     var wavePeriodMs = 1000L
-    var discover, scalableRank, fetchFtp = false
+    var discover, fetchFtp = false
     var robots = true
     var agent = "graftbot"
     var seenFilter = "bloom"
@@ -101,6 +100,11 @@ object CrawlMain {
     // validate at the usage boundary: zero/negative or an int-
     // overflowing count otherwise surfaces as an obscure Spark
     // internal error long after argument parsing
+    def posLongValue(flag: String): Long = {
+      val n = numValue(flag)
+      if (n < 1) bad(s"$flag must be positive, got $n")
+      n
+    }
     def posIntValue(flag: String): Int = {
       val n = numValue(flag)
       if (n < 1 || n > Int.MaxValue) bad(s"$flag must be in [1, ${Int.MaxValue}], got $n")
@@ -112,7 +116,7 @@ object CrawlMain {
         case "--seeds" => seeds = Some(value("--seeds")); i += 2
         case "--store" => store = Some(value("--store")); i += 2
         case "--partitions" => partitions = Some(posIntValue("--partitions")); i += 2
-        case "--wave-period-ms" => wavePeriodMs = numValue("--wave-period-ms"); i += 2
+        case "--wave-period-ms" => wavePeriodMs = posLongValue("--wave-period-ms"); i += 2
         case "--agent" => agent = value("--agent"); i += 2
         case "--seen-filter" =>
           seenFilter = value("--seen-filter")
@@ -127,10 +131,7 @@ object CrawlMain {
         case "--bloom-hashes" => bloomHashesOpt = Some(posIntValue("--bloom-hashes")); i += 2
         case "--cuckoo-capacity-per-partition" =>
           cuckooCapacityOpt = Some(posIntValue("--cuckoo-capacity-per-partition")); i += 2
-        case "--expected-keys" =>
-          val n = numValue("--expected-keys")
-          if (n < 1) bad(s"--expected-keys must be positive, got $n")
-          expectedKeys = Some(n); i += 2
+        case "--expected-keys" => expectedKeys = Some(posLongValue("--expected-keys")); i += 2
         case "--seen-budget-mb" => seenBudgetMb = posIntValue("--seen-budget-mb"); i += 2
         case "--max-generations" => maxGenerations = posIntValue("--max-generations"); i += 2
         case "--compact-seen-every" =>
@@ -153,7 +154,6 @@ object CrawlMain {
           sweepOrphansHours = n; i += 2
         case "--discover" => discover = true; i += 1
         case "--no-robots" => robots = false; i += 1
-        case "--scalable-rank" => scalableRank = true; i += 1
         case "--fetch-ftp" => fetchFtp = true; i += 1
         case other => bad(s"unknown argument: $other")
       }
@@ -244,7 +244,6 @@ object CrawlMain {
       compactSeenEvery = compactSeenEvery,
       expireKeep = expireKeep,
       discover = discover,
-      scalableRank = scalableRank,
       fetchFtp = fetchFtp))
 
     val resumedFrom = snap.latestVersion

@@ -24,7 +24,7 @@ object PlanAudit {
   val audited: Seq[String] = Seq(
     "s1_seed_scan", "s2_s3_fetchable", "s7_error_channel",
     "w_politeness_schedule", "w_crawl_order", "j_dedup_first_seen",
-    "robots_filter", "skew_salt_plan",
+    "robots_filter",
     "url_features", "url_features_sets",
     "tok_terms", "term_df", "tfidf_micro",
     "dedup_exact", "dedup_minhash_lsh", "dedup_simhash",
@@ -93,7 +93,7 @@ object PlanAudit {
               |Engine-snapshot readers (`crawl_engine_*`, `crawl_discovery`) and
               |temp-file sources (`s9`/`s10`/`s11`) are not audited here — their
               |inputs are produced by the query itself; the engine's own plan
-              |properties (broadcast wave slices, O(delta) commits, two-phase
+              |properties (broadcast wave slices, O(delta) commits, the per-host
               |rank) are asserted in CrawlSpec and documented in BASELINE.md.
               |""".stripMargin
 

@@ -548,21 +548,6 @@ object SparkEntry {
            |       + floor((host_rank - 1.0) / tokens) as int) AS wave
            |FROM dsch""".stripMargin)))),
 
-    // ---------------- skew plan (A: salting)
-    "skew_salt_plan" -> Q(
-      (s, dir) => {
-        val hv = hostedView(s, dir)
-        s.sql(
-          s"""SELECT host, count(*) AS cnt,
-             |  greatest(cast(1 as bigint), cast(ceil(count(*) / 1000.0) as bigint)) AS salts
-             |FROM $hv GROUP BY host""".stripMargin)
-      },
-      Some(Synth.duck(withSeeds(
-        s"""$fetchableCte, $dedupCte, $hostedCte
-           |SELECT host, count(*) AS cnt,
-           |  greatest(cast(1 as bigint), cast(ceil(count(*) / 1000.0) as bigint)) AS salts
-           |FROM hosted GROUP BY host""".stripMargin)))),
-
     // ---------------- URL features (§2.6), Scala vs independent SQL
     "url_features" -> Q(
       (s, dir) => {

@@ -61,9 +61,11 @@ import org.apache.spark.sql.functions._
   * `autoBroadcastJoinThreshold` (shuffled fallback beyond it) — the
   * seen table is never shuffled per wave. Robots rules live in a
   * DISTRIBUTED per-host table joined at plan time (AQE broadcasts it
-  * while small; no driver collect at any host cardinality). Politeness
-  * ranks shuffle by host (two-phase distributed rank under
-  * `scalableRank` — no single-task hot-host sort); the fetch join
+  * while small; no driver collect at any host cardinality). Fetch and
+  * extract are hash-partitioned by `url`, so a hot host spreads across
+  * every partition; the one host-keyed stage is the plan-time
+  * politeness rank, a window whose hot-host sort is bounded by the
+  * waves that host needs ([[graft.frontier.Politeness]]). The fetch join
   * carries only the wave's eligible slice, never the whole frontier,
   * and holds no O(pages) driver state.
   */
@@ -88,14 +90,6 @@ object CrawlWave {
       // generation cap (seed plan = generation 0) — the crawl also stops
       // on its own when a generation discovers nothing new
       maxGenerations: Int = 8,
-      // plan-time per-host rank: the window form (one shuffle, but a hot
-      // host is ONE task's sort) vs the two-phase distributed form
-      // (Politeness.withTwoPhaseHostRank — range + join-back shuffles,
-      // every task bounded). Identical output (CrawlSpec rank property).
-      // True at the 10^10 design point, where a single Common-Crawl
-      // host can exceed a task; false for small frontiers, where the
-      // extra plan-time jobs cost more than the skew they prevent.
-      scalableRank: Boolean = false,
       // per-wave-append-table compaction cadence: each wave appends one
       // delta dir to `seen` (rebalanced by part and sorted by it, so the
       // exact confirm prunes row groups), `frontier_delta` and
@@ -471,16 +465,14 @@ final class CrawlWave(
               lit("denied_robots")).otherwise(col("state")))
           .drop("robots_txt")
       }
-    // `denied` feeds THREE consumers — the two-phase rank's seq-bounds
-    // action, the scheduled (ready) union leg, and the non-ready leg.
-    // Uncached, each re-evaluates the whole upstream (seed scan → dup
-    // window → robots join) — measured 3× the planning work at rep=4.
+    // `denied` feeds TWO consumers — the scheduled (ready) union leg and
+    // the non-ready leg. Uncached, each re-evaluates the whole upstream
+    // (seed scan → dup window → robots join).
     // Persist once; released by the caller after the plan materializes.
     val denied = denied0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     planScratch ::= denied
     val scheduled = Politeness
-      .schedule(denied.where(col("state") === "ready"), cfg.wavePeriodMs,
-        twoPhaseRank = cfg.scalableRank)
+      .schedule(denied.where(col("state") === "ready"), cfg.wavePeriodMs)
       .withColumn("wave", (col("rel_wave") + lit(waveOffset)).cast("int"))
       .drop("host_rank", "tokens", "rel_wave")
     denied.where(col("state") =!= "ready")

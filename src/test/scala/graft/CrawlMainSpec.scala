@@ -84,6 +84,11 @@ class CrawlMainSpec extends AnyFunSuite {
     assert(msg("--pages", "/p", "--seeds", "/s", "--store").contains("needs a value"))
     assert(msg("--pages", "/p", "--partitions", "many").contains("needs a number"))
     assert(msg("--frobnicate").contains("unknown argument"))
+    // the removed two-phase rank flag fails loudly, not silently ignored
+    assert(msg("--scalable-rank").contains("unknown argument"))
+    // a wave shorter than 1 ms would be clamped to 1 token per wave
+    for (p <- Seq("0", "-5"))
+      assert(msg("--wave-period-ms", p).contains("--wave-period-ms must be positive"))
     assert(msg("--seen-partitions", "0").contains("--seen-partitions must be in"))
     assert(msg("--bloom-bits-per-partition", "-8").contains("must be in"))
     assert(msg("--max-generations", "4294967296").contains("must be in"))

@@ -385,72 +385,7 @@ class CrawlSpec extends AnyFunSuite {
     }
   }
 
-  // ------------------------------------------------- two-phase host rank
-
-  test("two-phase host rank equals the window rank on a skewed frontier, any parallelism") {
-    import spark.implicits._
-    // one hot host (70% of rows) + a long tail, shuffled seq/priority
-    val rows = (1L to 4000L).map { seq =>
-      val host =
-        if (seq % 10 < 7) "hot.example.com"
-        else s"tail${(seq * 2654435761L) % 97}.example.com"
-      (seq, host, (seq * 48271 % 5).toInt)
-    }
-    val df = spark.createDataset(rows).toDF("seq", "host", "priority")
-      .withColumn("delay_ms", lit(100L))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("host").orderBy(col("priority").asc, col("seq").asc)
-    val expected = df.withColumn("host_rank", row_number().over(w))
-      .select("seq", "host_rank").as[(Long, Int)].collect().toMap
-    for (parts <- Seq(1, 3, 32)) {
-      val got = Politeness.withTwoPhaseHostRank(df.repartition(parts))
-        .select("seq", "host_rank").as[(Long, Int)].collect().toMap
-      assert(got == expected, s"two-phase rank diverged at $parts partitions")
-    }
-    // null priorities must rank exactly like the window form (nulls
-    // first under asc) — the join-back is null-safe, not row-dropping
-    val dfN = df.withColumn("priority",
-      when(col("priority") === 2, lit(null).cast("int")).otherwise(col("priority")))
-    val expectedN = dfN.withColumn("host_rank", row_number().over(w))
-      .select("seq", "host_rank").as[(Long, Int)].collect().toMap
-    val gotN = Politeness.withTwoPhaseHostRank(dfN.repartition(3))
-      .select("seq", "host_rank").as[(Long, Int)].collect().toMap
-    assert(gotN == expectedN, "two-phase rank dropped/misranked null priorities")
-    // null HOSTS likewise: the window form ranks them in one null
-    // partition; the join-back must be null-safe on host too, or the
-    // rows vanish entirely (inner equi-join never matches null to null)
-    val dfH = df.withColumn("host",
-      when(col("seq") % 13 === 0, lit(null).cast("string")).otherwise(col("host")))
-    val expectedH = dfH.withColumn("host_rank", row_number().over(w))
-      .select("seq", "host_rank").as[(Long, Int)].collect().toMap
-    val gotH = Politeness.withTwoPhaseHostRank(dfH.repartition(3))
-      .select("seq", "host_rank").as[(Long, Int)].collect().toMap
-    assert(gotH == expectedH, "two-phase rank dropped/misranked null hosts")
-    // null SEQs, one per (host, priority) so tie order is determined:
-    // asc sorts nulls first, so the null-seq row must rank FIRST in its
-    // group — chunk-0 placement with a nulls-first local sort
-    val dfS = spark.createDataset(Seq(
-      (Option.empty[Long], "h1", 0), (Some(10L), "h1", 0), (Some(20L), "h1", 0),
-      (Some(5L), "h1", 1), (Option.empty[Long], "h1", 1),
-      (Option.empty[Long], "h2", 0), (Some(7L), "h2", 0)))
-      .toDF("seq", "host", "priority")
-    val expectedS = dfS.withColumn("host_rank", row_number().over(w))
-      .select("host", "priority", "seq", "host_rank")
-      .as[(String, Int, Option[Long], Int)].collect().toSet
-    val gotS = Politeness.withTwoPhaseHostRank(dfS.repartition(3))
-      .select("host", "priority", "seq", "host_rank")
-      .as[(String, Int, Option[Long], Int)].collect().toSet
-    assert(gotS == expectedS, "two-phase rank dropped/misranked null seqs")
-    // ALL-null seq: per host the ranks must be a permutation of 1..n
-    // (the old empty-bounds special case assigned constant rank 1)
-    val dfA = df.withColumn("seq", lit(null).cast("long"))
-    val gotA = Politeness.withTwoPhaseHostRank(dfA.repartition(3))
-      .groupBy("host").agg(collect_list("host_rank").as("rs"))
-      .as[(String, Seq[Int])].collect()
-    assert(gotA.nonEmpty)
-    for ((h, rs) <- gotA)
-      assert(rs.sorted == (1 to rs.length).toList, s"host=$h ranks=$rs")
-  }
+  // ------------------------------------------------- politeness rank
 
   test("politeness schedule on a host-skewed frontier: token, rank and wave invariants") {
     import spark.implicits._
@@ -466,33 +401,31 @@ class CrawlSpec extends AnyFunSuite {
     }
     val hotN = rows.count(_._2 == hot).toLong
     val ready = rows.toDF("seq", "host", "priority")
-    for (twoPhase <- Seq(false, true)) {
-      val sched = Politeness.schedule(ready, 3000L, twoPhaseRank = twoPhase).cache()
-      assert(sched.count() == rows.size)
-      // rel_wave is the token-bucket fill, so no (host, rel_wave) group
-      // exceeds the host's token budget
-      val overfull = sched.groupBy("host", "tokens", "rel_wave").count()
-        .where(col("count") > col("tokens")).count()
-      assert(overfull == 0L, s"twoPhase=$twoPhase")
-      // per host, host_rank is a permutation of 1..k
-      val badRank = sched.groupBy("host")
-        .agg(count("*").as("k"), max("host_rank").as("mx"),
-          min("host_rank").as("mn"), countDistinct("host_rank").as("d"))
-        .where(col("mx") =!= col("k") || col("mn") =!= 1 || col("d") =!= col("k"))
-        .count()
-      assert(badRank == 0L, s"twoPhase=$twoPhase")
-      // the hot host spans exactly ceil(n / tokens) waves: throttled,
-      // not emitted in one wave, and with no empty wave in between
-      val h = sched.where(col("host") === hot)
-        .agg(countDistinct("rel_wave"), max("rel_wave").cast("long"), max("tokens"))
-        .head()
-      val tokens = h.getLong(2)
-      assert(tokens == 7L)
-      val waves = (hotN + tokens - 1) / tokens
-      assert(h.getLong(0) == waves && h.getLong(1) == waves - 1,
-        s"twoPhase=$twoPhase hot waves=${h.getLong(0)} max=${h.getLong(1)} want $waves")
-      sched.unpersist()
-    }
+    val sched = Politeness.schedule(ready, 3000L).cache()
+    assert(sched.count() == rows.size)
+    // rel_wave is the token-bucket fill, so no (host, rel_wave) group
+    // exceeds the host's token budget
+    val overfull = sched.groupBy("host", "tokens", "rel_wave").count()
+      .where(col("count") > col("tokens")).count()
+    assert(overfull == 0L)
+    // per host, host_rank is a permutation of 1..k
+    val badRank = sched.groupBy("host")
+      .agg(count("*").as("k"), max("host_rank").as("mx"),
+        min("host_rank").as("mn"), countDistinct("host_rank").as("d"))
+      .where(col("mx") =!= col("k") || col("mn") =!= 1 || col("d") =!= col("k"))
+      .count()
+    assert(badRank == 0L)
+    // the hot host spans exactly ceil(n / tokens) waves: throttled,
+    // not emitted in one wave, and with no empty wave in between
+    val h = sched.where(col("host") === hot)
+      .agg(countDistinct("rel_wave"), max("rel_wave").cast("long"), max("tokens"))
+      .head()
+    val tokens = h.getLong(2)
+    assert(tokens == 7L)
+    val waves = (hotN + tokens - 1) / tokens
+    assert(h.getLong(0) == waves && h.getLong(1) == waves - 1,
+      s"hot waves=${h.getLong(0)} max=${h.getLong(1)} want $waves")
+    sched.unpersist()
   }
 
   test("politeness: crawl-delay 0 grants the full wave of tokens, no div-by-zero") {
@@ -505,20 +438,6 @@ class CrawlSpec extends AnyFunSuite {
       .select("seq", "tokens", "rel_wave").as[(Long, Long, Int)].collect()
     assert(sched.forall(_._2 == 1000L), s"tokens=${sched.map(_._2).toSeq}")
     assert(sched.forall(_._3 == 0)) // all three fit the first wave
-  }
-
-  test("scalableRank crawl produces the identical frontier") {
-    import spark.implicits._
-    val root = Files.createTempDirectory("crawl-2p-").toString
-    val st = new SnapshotTable(spark, root)
-    val pages = Fixtures.pages(spark, dir).toDF.cache()
-    new CrawlWave(spark, pages, st, cfg(4).copy(scalableRank = true))
-      .runAll(Fixtures.seeds(spark, dir))
-    pages.unpersist()
-    def key(s: SnapshotTable) = s.readLatest("frontier").get
-      .select("seq", "url", "state", "wave")
-      .as[(Long, String, String, Int)].collect().toSet
-    assert(key(st) == key(store))
   }
 
   // ------------------------------------------------- frontier growth
@@ -706,17 +625,16 @@ class CrawlSpec extends AnyFunSuite {
 
   test("kitchen sink: every scale feature at once equals the plain discovery run") {
     import spark.implicits._
-    // discovery + compaction + expiration + cuckoo seen-filter +
-    // two-phase rank TOGETHER: the interactions (expire at each
-    // generation's reconcile, squash under pipelining, cuckoo blob
-    // rebuilds across async commits) are where independent features
-    // would break each other
+    // discovery + compaction + expiration + cuckoo seen-filter TOGETHER:
+    // the interactions (expire at each generation's reconcile, squash
+    // under pipelining, cuckoo blob rebuilds across async commits) are
+    // where independent features would break each other
     val root = Files.createTempDirectory("crawl-sink-").toString
     val st = new SnapshotTable(spark, root)
     val pages = Fixtures.pages(spark, dir).toDF.cache()
     val c = cfg(4).copy(discover = true, maxGenerations = 3,
       compactSeenEvery = 2, expireKeep = 2,
-      seenFilter = "cuckoo", scalableRank = true)
+      seenFilter = "cuckoo")
     val v = new CrawlWave(spark, pages, st, c).runAll(Fixtures.seeds(spark, dir))
     def key(s: SnapshotTable) = s.readLatest("frontier").get
       .select("seq", "url", "state", "wave")
@@ -958,8 +876,8 @@ class CrawlSpec extends AnyFunSuite {
     }
 
     // trial 3 runs the scale-feature config (cuckoo seen-filter,
-    // two-phase host rank, compaction) — none of
-    // which may change semantics, so the same model must still agree;
+    // compaction) — neither may change semantics, so the same model
+    // must still agree;
     // trial 4 turns the S8 FTP branch on (ftp rows schedule and fetch,
     // the image-ext skip stays http-only)
     def genRows(n: Int): Seq[(Long, String, Int)] = (1 to n).map { i =>
@@ -987,8 +905,7 @@ class CrawlSpec extends AnyFunSuite {
     }
 
     val configs = Seq(cfg(4), cfg(4),
-      cfg(4).copy(seenFilter = "cuckoo", scalableRank = true,
-        compactSeenEvery = 2),
+      cfg(4).copy(seenFilter = "cuckoo", compactSeenEvery = 2),
       cfg(4).copy(fetchFtp = true))
     for ((trialCfg, trial0) <- configs.zipWithIndex) {
       val trial = trial0 + 1

@@ -122,18 +122,6 @@ class RefCorpusSpec extends AnyFunSuite {
     sched.unpersist(); ready.unpersist()
   }
 
-  test("two-phase distributed host rank equals the window rank on the real corpus") {
-    val ready = CrawlWave.initFrontier(seedsDf)
-      .where(col("state") === "ready")
-      .withColumn("priority", lit(0)).cache()
-    val plain = Politeness.schedule(ready, 3000L)
-      .select("url", "host_rank", "rel_wave")
-    val twoPhase = Politeness.schedule(ready, 3000L, twoPhaseRank = true)
-      .select("url", "host_rank", "rel_wave")
-    assert(plain.except(twoPhase).isEmpty && twoPhase.except(plain).isEmpty)
-    ready.unpersist()
-  }
-
   test("all ten shipped `tfidf2 K% term` files parse: golden sizes, aligned, strictly increasing") {
     // column counts of tfidf-elm.py:76-79's any(tfidf >= K/100) filter,
     // per shipped file — monotone nonincreasing in K by construction
